@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark harness. One warm-up pass absorbs session/codegen startup,
   * then EVERY query runs `SPARK_GRAFT_REPS` times (default 3) and reports
@@ -16,13 +17,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
 
     // Host-speed calibration: a fixed, data-independent, CPU-bound
     // codegen workload (xxhash64 fold over a generated range — no input,

@@ -33,16 +33,14 @@ private[api] object GetVectorsStream {
 
   private def encodeRecord(row: org.apache.spark.sql.Row): Array[Byte] =
     VectorProto.encodeVectorListItem(
-      VectorBinary.toBinary(VectorHttpServer.rowToRecord(row)))
+      VectorBinary.toBinary(NeighborlySpark.rowToRecord(row)))
 
   /** Pass 1: exact encoded byte total, one record in driver memory at a
     * time. */
   def declaredLength(pass: () => DataFrame): Long = {
     val it = pass().toLocalIterator()
     var total = 0L
-    while (it.hasNext)
-      total += VectorProto.encodedVectorListItemSize(
-        VectorBinary.toBinary(VectorHttpServer.rowToRecord(it.next())))
+    while (it.hasNext) total += encodeRecord(it.next()).length
     total
   }
 

@@ -170,11 +170,19 @@ class GrpcHttp2Server(val db: NeighborlySpark, port: Int = 0,
       h
     }
 
-    private def trailers(status: Int, message: String = ""): DefaultHttp2Headers = {
-      val t = new DefaultHttp2Headers()
+    /** `grpc-status`/`grpc-message` added to `t`: on their own they are
+      * the trailing HEADERS; on top of [[grpcHeaders]] they make the
+      * trailers-only response form. */
+    private def trailers(status: Int, message: String = "",
+        t: DefaultHttp2Headers = new DefaultHttp2Headers()): DefaultHttp2Headers = {
       t.setInt("grpc-status", status)
       if (message.nonEmpty) t.set("grpc-message", GrpcWeb.encodeGrpcMessage(message))
       t
+    }
+
+    private def failure(e: Throwable, base: DefaultHttp2Headers): DefaultHttp2HeadersFrame = {
+      val (code, msg) = GrpcWeb.statusOf(e)
+      new DefaultHttp2HeadersFrame(trailers(code, msg, base), true)
     }
 
     private def lengthPrefix(len: Int): ByteBuf = {
@@ -196,18 +204,8 @@ class GrpcHttp2Server(val db: NeighborlySpark, port: Int = 0,
         ctx.writeAndFlush(new DefaultHttp2HeadersFrame(trailers(0), true))
       } catch {
         // nothing written yet → the gRPC trailers-only response form
-        case GrpcWeb.StatusException(code, msg) => trailersOnly(ctx, code, msg)
-        case e: IllegalArgumentException =>
-          trailersOnly(ctx, 2, String.valueOf(e.getMessage))
-        case scala.util.control.NonFatal(e) => trailersOnly(ctx, 2, e.toString)
+        case scala.util.control.NonFatal(e) => ctx.writeAndFlush(failure(e, grpcHeaders()))
       }
-    }
-
-    private def trailersOnly(ctx: ChannelHandlerContext, code: Int, msg: String): Unit = {
-      val h = grpcHeaders()
-      h.setInt("grpc-status", code)
-      if (msg.nonEmpty) h.set("grpc-message", GrpcWeb.encodeGrpcMessage(msg))
-      ctx.writeAndFlush(new DefaultHttp2HeadersFrame(h, true))
     }
 
     /** Two-pass streaming (core shared with the HTTP/1.1 transports via
@@ -252,13 +250,8 @@ class GrpcHttp2Server(val db: NeighborlySpark, port: Int = 0,
         ctx.writeAndFlush(new DefaultHttp2HeadersFrame(trailers(0), true))
         streamFlushes.incrementAndGet()
       } catch {
-        case GrpcWeb.StatusException(code, msg) =>
-          ctx.writeAndFlush(new DefaultHttp2HeadersFrame(trailers(code, msg), true))
-        case e: IllegalArgumentException =>
-          ctx.writeAndFlush(new DefaultHttp2HeadersFrame(
-            trailers(2, String.valueOf(e.getMessage)), true))
         case scala.util.control.NonFatal(e) =>
-          ctx.writeAndFlush(new DefaultHttp2HeadersFrame(trailers(2, e.toString), true))
+          ctx.writeAndFlush(failure(e, new DefaultHttp2Headers()))
       }
     }
   }

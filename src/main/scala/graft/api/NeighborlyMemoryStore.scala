@@ -82,7 +82,7 @@ class NeighborlyMemoryStore(val db: NeighborlySpark,
     * below past that. */
   def getVectors: Seq[MemoryRecord] = {
     requireListable()
-    db.vectors.collect().map(r => toRecord(rowToRecord(r))).toSeq
+    db.vectors.collect().map(r => toRecord(NeighborlySpark.rowToRecord(r))).toSeq
   }
 
   /** Paged record listing (id-ordered, so pages are stable) — the shape a
@@ -91,15 +91,8 @@ class NeighborlyMemoryStore(val db: NeighborlySpark,
     require(offset >= 0 && limit >= 0, "offset/limit must be non-negative")
     db.vectors.orderBy(org.apache.spark.sql.functions.col("id"))
       .offset(offset).limit(limit)
-      .collect().map(r => toRecord(rowToRecord(r))).toSeq
+      .collect().map(r => toRecord(NeighborlySpark.rowToRecord(r))).toSeq
   }
-
-  private def rowToRecord(r: org.apache.spark.sql.Row): VectorRecord = VectorRecord(
-    r.getAs[String]("id"),
-    r.getAs[scala.collection.Seq[Float]]("values").toArray,
-    r.getAs[scala.collection.Seq[Short]]("tags").toArray,
-    r.getAs[String]("original_text"),
-    r.getAs[Byte]("priority"), r.getAs[Long]("user_id"), r.getAs[Long]("org_id"))
 
   // ---------------------------------------------------------- collections
 
@@ -147,7 +140,7 @@ class NeighborlyMemoryStore(val db: NeighborlySpark,
     if (keys.isEmpty) Seq.empty
     else db.vectors
       .filter(org.apache.spark.sql.functions.col("id").isin(keys: _*))
-      .collect().map(r => toRecord(rowToRecord(r))).toSeq
+      .collect().map(r => toRecord(NeighborlySpark.rowToRecord(r))).toSeq
 
   def removeFromCollection(collectionName: String, key: String): Unit =
     { db.removeVector(key); () }

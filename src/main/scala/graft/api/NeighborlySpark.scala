@@ -88,8 +88,10 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
 
   val tags: TagDictionary = TagDictionary.empty
 
-  @volatile private var df: DataFrame =
+  private def emptyTable: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], VectorSchema.schema)
+
+  @volatile private var df: DataFrame = emptyTable
   @volatile private var pqModel: Option[PqModel] = None
   @volatile private var bqThreshold: Option[Double] = None
 
@@ -113,7 +115,9 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * no exchange, no AQE staging in the request path (each of which cost
     * more than the whole probe at serving size). Costs one extra
     * deserialized copy of the table while indexes are warm — the
-    * explicit serving-tier trade, released on invalidation. */
+    * explicit serving-tier trade, released on invalidation. No request
+    * reads `mapping`: it is kept because it holds the checkpoint the
+    * lazily built `ann`/`hnsw` RDDs read, and because `save` writes it. */
   private case class LocalIdx(mapping: DataFrame,
       ann: org.apache.spark.rdd.RDD[graft.index.LocalNormIndex],
       hnsw: org.apache.spark.rdd.RDD[graft.index.HnswGraph],
@@ -187,7 +191,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
       if (mutationEpoch.get() == e0) { install(cached, fitted); true }
       else { // a mutation overtook this fit: its own timer owns the rebuild
         cached.unpersist(false)
-        discard(fitted)
+        fitted.local.foreach(release)
         false
       }
     }
@@ -207,28 +211,18 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   }
 
   private def invalidateLocalIndexes(): Unit = {
-    localIdx.foreach { li =>
-      li.ann.unpersist(blocking = false)
-      li.hnsw.unpersist(blocking = false)
-      li.records.unpersist(blocking = false)
-      org.apache.spark.sql.graft.bridge.freeCheckpoint(li.mapping)
-    }
+    localIdx.foreach(release)
     localIdx = None
   }
 
-  /** Translate a local-index hit frame (_sid, dist) back to string ids:
-    * the k-row hit set broadcasts into the mapping join — one action.
-    * Takes the LocalIdx the caller matched on (never re-reads the
-    * volatile `localIdx`, which the background installer may swap). */
-  private def mapHits(li: LocalIdx, hits: DataFrame): DataFrame =
-    // k-row result: a global orderBy would range-partition (an extra
-    // sampling job + exchange per serve request); coalesce(1) + local
-    // sort is the same total order with none of that — the dominant
-    // serve-path latency before the r6 trim (p50 ~170 → ~70 ms)
-    li.mapping.join(broadcast(hits), "_sid")
-      .select(col("id"), col("dist"))
-      .coalesce(1)
-      .sortWithinPartitions(col("dist"), col("id"))
+  /** Free every block a local-index build holds — the installed one on
+    * invalidation, or a fit that lost its install race. */
+  private def release(li: LocalIdx): Unit = {
+    li.ann.unpersist(blocking = false)
+    li.hnsw.unpersist(blocking = false)
+    li.records.unpersist(blocking = false)
+    org.apache.spark.sql.graft.bridge.freeCheckpoint(li.mapping)
+  }
 
   def vectors: DataFrame = df
   def count: Long = df.count()
@@ -260,32 +254,28 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * can never observe the new epoch without the new table or the new
     * table without the epoch bump — a torn pair would let an epoch-clean
     * install overwrite `df` and silently revert the write (r6 review). */
-  private def mutate(newDf: => DataFrame): Unit = {
+  private def mutate(newDf: => DataFrame, emptied: Boolean = false): Unit = {
     synchronized {
       df = newDf
-      mutations += 1
+      // every mutator routes here; clear() restarts the plan-growth
+      // counter, since an empty table has no plan to truncate
+      mutations = if (emptied) 0 else mutations + 1
       mutationEpoch.incrementAndGet()
       unsaved = true
       invalidateLocalIndexes()
-      if (checkpointEvery > 0 && mutations % checkpointEvery == 0)
+      if (checkpointEvery > 0 && mutations > 0 && mutations % checkpointEvery == 0)
         df = df.localCheckpoint(true)
     }
     scheduleRebuild()
   }
 
-  private def toRow(r: VectorRecord): DataFrame =
-    spark.createDataFrame(java.util.List.of(Row(
-      r.id, r.values.toSeq, r.tags.toSeq, r.original_text, r.priority, r.user_id, r.org_id)),
+  private def frameOf(rs: Seq[VectorRecord]): DataFrame =
+    spark.createDataFrame(java.util.List.of(rs.map(r => Row(
+      r.id, r.values.toSeq, r.tags.toSeq, r.original_text, r.priority, r.user_id, r.org_id)): _*),
       VectorSchema.schema)
 
   /** Add one vector; generates a UUID id when blank (Vector.cs:25,56). */
-  def addVector(r: VectorRecord): String = {
-    val id = if (r.id == null || r.id.isEmpty) java.util.UUID.randomUUID().toString else r.id
-    require(r.values.length == dimension,
-      s"dimension ${r.values.length} != table dimension $dimension (enforced at ingest, SURVEY §1.4)")
-    mutate(df.unionByName(toRow(r.copy(id = id))))
-    id
-  }
+  def addVector(r: VectorRecord): String = addVectorRecords(Seq(r)).head
 
   /** Bulk ingest (the scale path). */
   def addVectors(rows: DataFrame): Unit = {
@@ -294,14 +284,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   }
 
   def getVector(id: String): Option[VectorRecord] =
-    df.filter(col("id") === id).collect().headOption.map(rowToRecord)
-
-  private def rowToRecord(r: Row): VectorRecord = VectorRecord(
-    r.getAs[String]("id"),
-    r.getAs[scala.collection.Seq[Float]]("values").toArray,
-    r.getAs[scala.collection.Seq[Short]]("tags").toArray,
-    r.getAs[String]("original_text"),
-    r.getAs[Byte]("priority"), r.getAs[Long]("user_id"), r.getAs[Long]("org_id"))
+    df.filter(col("id") === id).collect().headOption.map(NeighborlySpark.rowToRecord)
 
   /** Update preserves the id but DROPS tags and attributes — the reference
     * builds the replacement from (values, text) only (VectorList.cs:184-187). */
@@ -309,7 +292,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     if (getVector(id).isEmpty) false
     else {
       mutate(df.filter(col("id") =!= id)
-        .unionByName(toRow(VectorRecord(id, values, original_text = originalText))))
+        .unionByName(frameOf(Seq(VectorRecord(id, values, original_text = originalText)))))
       true
     }
   }
@@ -330,10 +313,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
         s"dimension ${r.values.length} != table dimension $dimension (enforced at ingest, SURVEY §1.4)")
       if (r.id == null || r.id.isEmpty) r.copy(id = java.util.UUID.randomUUID().toString) else r
     }
-    val rows: java.util.List[Row] = new java.util.ArrayList[Row](withIds.size)
-    withIds.foreach(r => rows.add(Row(
-      r.id, r.values.toSeq, r.tags.toSeq, r.original_text, r.priority, r.user_id, r.org_id)))
-    mutate(df.unionByName(spark.createDataFrame(rows, VectorSchema.schema)))
+    mutate(df.unionByName(frameOf(withIds)))
     withIds.map(_.id)
   }
 
@@ -381,115 +361,105 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   /** Vectors.Clear parity (VectorService.cs:100-110): drops every row;
     * fitted index artifacts stay until the next buildAllIndexes, like the
     * reference's stale indexes after a clear. */
-  def clear(): Unit = {
-    // the one mutator NOT routed through mutate(): it also RESETS the
-    // plan-growth counter (an empty table has no plan to truncate), so
-    // it keeps its own copy of the swap+epoch+invalidate block — keep
-    // the two in lockstep when touching mutation bookkeeping
-    synchronized {
-      df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], VectorSchema.schema)
-      mutations = 0
-      mutationEpoch.incrementAndGet()
-      unsaved = true
-      invalidateLocalIndexes()
+  def clear(): Unit = mutate(emptyTable, emptied = true)
+
+  /** Hits of the one algorithm dispatch: a warm local index answers with
+    * full records, driver-side and already in (dist, id) order; every
+    * other case is a lazy (id, dist) plan over the live table. */
+  private type Hits = Either[Seq[(VectorRecord, Double)], DataFrame]
+
+  /** The ONE rule for which structure answers an algorithm name, warm or
+    * cold (SearchService.cs:132-190) — `searchRecords`, `search(vector)`
+    * and `search(text)` all route here, and `k` is checked here, before
+    * the warm/cold split. KDTree/BallTree/Linear serve the exact result:
+    * from the warm per-partition norm index once built (LocalAnn is
+    * lossless), else the scan. HNSW is the true Malkov-Yashunin graph
+    * when warm, recall-tuned LSH before (the declared substitution).
+    * `Range` is not a kNN algorithm: the reference's switch default
+    * returns []. A threshold (incl. the high-dim bypass,
+    * SearchService.cs:171-189) applies with the SAME semantics on both
+    * sides (ThresholdFilter.applyLocal, property-pinned equal in
+    * ThresholdFilterLocalSpec); `None` leaves it to the caller. Reads
+    * the volatile `localIdx` once, so a background install cannot swap
+    * the index between the probe and the record fetch. */
+  private def dispatch(query: Array[Float], k: Int, algorithm: SearchAlgorithm.Value,
+      threshold: Option[Double]): Hits = {
+    require(k > 0, "Number of neighbors must be greater than 0")
+    import SearchAlgorithm._
+    // the enum is closed: every name has an arm, as in the reference switch
+    val hits: Hits = ((algorithm, localIdx): @unchecked) match {
+      case (KDTree | BallTree | Linear, Some(li)) =>
+        Left(fetch(li, graft.index.LocalAnn.searchTop(li.ann, query, k)))
+      case (HNSW, Some(li)) =>
+        Left(fetch(li, graft.index.LocalHnsw.searchTop(li.hnsw, query, k)))
+      case (KDTree | BallTree | Linear, None) =>
+        Right(Knn.single(df, "id", "values", typedLit(query), k))
+      case (LSH, _) =>
+        Right(Lsh.search(df, "id", "values", query, k, LshParams.adaptive(dimension)))
+      case (HNSW, None) =>
+        Right(Lsh.search(df, "id", "values", query, k, LshParams.serving(dimension)))
+      case (SearchAlgorithm.BinaryQuantization, _) =>
+        Right(BqIndex.search(df, "id", "values", query, k, threshold = bqThreshold)
+          .select(col("id"), col("dist")))
+      case (SearchAlgorithm.ProductQuantization, _) =>
+        val m = pqModel.getOrElse { val f = PqIndex.fit(df, "values"); pqModel = Some(f); f }
+        Right(PqIndex.search(m, df, "id", "values", query, k, scannedRows = count))
+      case (Range, _) =>
+        Right(df.limit(0).select(col("id"), lit(0.0).as("dist")))
     }
-    scheduleRebuild()
+    threshold.fold(hits)(t => hits
+      .left.map(ThresholdFilter.applyLocal(_, t, dimension))
+      .map(ThresholdFilter(_, "dist", t, dimension)))
   }
+
+  /** Warm record fetch: one raw RDD filter-collect over the persisted
+    * record store for the k (dist, surrogate) probe hits — no Catalyst
+    * planning, exchange, or AQE staging in the request path. */
+  private def fetch(li: LocalIdx, top: Array[(Double, Long)]): Seq[(VectorRecord, Double)] =
+    if (top.isEmpty) Seq.empty
+    else {
+      val bySid = top.map { case (d, sid) => sid -> d }.toMap
+      byDistId(li.records.filter(r => bySid.contains(r._1)).collect()
+        .map { case (sid, rec) => (rec, bySid(sid)) })
+    }
+
+  private def byDistId(hits: Array[(VectorRecord, Double)]): Seq[(VectorRecord, Double)] =
+    hits.sortBy { case (rec, d) => (d, rec.id) }.toSeq
+
+  /** The (id, dist) frame of a dispatch's hits, in (dist, id) order. */
+  private def hitFrame(hits: Hits): DataFrame = hits.fold(
+    recs => spark.createDataFrame(
+      java.util.List.of(recs.map { case (r, d) => Row(r.id, d) }: _*), NeighborlySpark.HitSchema),
+    identity)
 
   /** kNN by raw vector (SearchService.cs:132-190 dispatch + threshold).
     * Returns (id, dist) ordered by (dist, id). */
   def search(query: Array[Float], k: Int,
       algorithm: SearchAlgorithm.Value = SearchAlgorithm.KDTree,
-      similarityThreshold: Double = 0.5): DataFrame = {
-    require(k > 0, "Number of neighbors must be greater than 0")
-    import SearchAlgorithm._
-    val raw = algorithm match {
-      case KDTree | BallTree | Linear => localIdx match {
-        // built index: exact warm kNN from the persisted per-partition
-        // norm indexes — same rows as the scan (LocalAnn is lossless)
-        case Some(li) => mapHits(li, graft.index.LocalAnn.search(
-          li.ann, spark, query, k, "_sid"))
-        case None => Knn.single(df, "id", "values", typedLit(query), k)
-      }
-      case LSH =>
-        Lsh.search(df, "id", "values", query, k, LshParams.adaptive(dimension))
-      case HNSW => localIdx match {
-        // built index: the TRUE Malkov-Yashunin graph serves the name
-        case Some(li) => mapHits(li, graft.index.LocalHnsw.search(
-          li.hnsw, spark, query, k, "_sid"))
-        // no index yet: recall-tuned LSH (declared substitution)
-        case None => Lsh.search(df, "id", "values", query, k, LshParams.serving(dimension))
-      }
-      case SearchAlgorithm.BinaryQuantization =>
-        BqIndex.search(df, "id", "values", query, k, threshold = bqThreshold)
-          .select(col("id"), col("dist"))
-      case SearchAlgorithm.ProductQuantization =>
-        val m = pqModel.getOrElse { val f = PqIndex.fit(df, "values"); pqModel = Some(f); f }
-        PqIndex.search(m, df, "id", "values", query, k, scannedRows = count)
-      case Range => // not a kNN algorithm: the reference's switch default returns []
-        df.limit(0).select(col("id"), lit(0.0).as("dist"))
-    }
-    ThresholdFilter(raw, "dist", similarityThreshold, dimension)
-  }
+      similarityThreshold: Double = 0.5): DataFrame =
+    hitFrame(dispatch(query, k, algorithm, Some(similarityThreshold)))
 
-  /** kNN returning FULL records with their distances in ONE Spark action
-    * (VERDICT r3 item 3 — the serving path must not run k+1 driver jobs):
-    * the k-row hit set broadcast-joins back to the table, mirroring the
-    * reference's direct result mapping (VectorService.cs:74-84). Rows are
-    * re-ordered driver-side by (dist, id) — k rows, trivial. Jobs run
-    * under the `graft.serve` group so `metrics.serveJobs` can pin the
-    * no-N+1 contract. */
+  /** kNN returning FULL records with their distances — the serving path
+    * must not run k+1 driver jobs — mirroring the reference's direct
+    * result mapping (VectorService.cs:74-84). Warm names come back from
+    * the dispatch with their records; the cold
+    * (id, dist) hits take one bounded k-row fetch from the table instead
+    * of one action nesting the distributed hit subplan inside a broadcast
+    * exchange — still O(1) jobs in k, never the k+1 pattern. Jobs run
+    * under the `graft.serve` group (the WHOLE serving path, including the
+    * warm probe's eager jobs) so `metrics.serveJobs` can pin the no-N+1
+    * contract. */
   def searchRecords(query: Array[Float], k: Int,
       algorithm: SearchAlgorithm.Value = SearchAlgorithm.KDTree,
       similarityThreshold: Double = 0.5): Seq[(VectorRecord, Double)] = metrics.timed {
-    // the job group wraps the WHOLE serving path: warm local-index
-    // dispatches run their Spark jobs eagerly inside search(), and those
-    // are exactly the jobs the no-N+1 counter must see
     spark.sparkContext.setJobGroup(metrics.serveGroup, s"searchRecords(k=$k, $algorithm)")
-    try {
-      import SearchAlgorithm._
-      val warmLocal = localIdx.filter(_ =>
-        algorithm == KDTree || algorithm == BallTree || algorithm == Linear ||
-        algorithm == HNSW)
-      warmLocal match {
-        // warm fast path: one RDD probe for the k (surrogate, dist) hits,
-        // then one raw RDD filter-collect over the persisted record store
-        // — no Catalyst planning, exchange, or AQE staging per request;
-        // the threshold applies driver-side with the SAME semantics as
-        // the plan-side filter (ThresholdFilter.applyLocal, property-
-        // pinned equal in ThresholdFilterLocalSpec)
-        case Some(li) =>
-          val top = algorithm match {
-            case HNSW => graft.index.LocalHnsw.searchTop(li.hnsw, query, k)
-            case _ => graft.index.LocalAnn.searchTop(li.ann, query, k)
-          }
-          if (top.isEmpty) Seq.empty
-          else {
-            val bySid = top.map { case (d, sid) => sid -> d }.toMap
-            val recs = li.records.filter(r => bySid.contains(r._1)).collect()
-              .map { case (sid, rec) => (rec, bySid(sid)) }
-              .sortBy { case (rec, d) => (d, rec.id) }
-              .toSeq
-            ThresholdFilter.applyLocal(recs, similarityThreshold, dimension)
-          }
-        // cold / non-local algorithms: two bounded k-row round-trips
-        // instead of one action nesting the distributed hit subplan
-        // inside a broadcast exchange (exchange build job + join job +
-        // fused-plan analysis per request). Still O(1) jobs in k —
-        // never the k+1 pattern.
-        case None =>
-          val hits = search(query, k, algorithm, similarityThreshold)
-            .select(col("id"), col("dist")).collect()
-          if (hits.isEmpty) Seq.empty
-          else {
-            val dist = hits.map(r => r.getString(0) -> r.getDouble(1)).toMap
-            df.filter(col("id").isin(dist.keySet.toSeq: _*))
-              .collect()
-              .map(r => (rowToRecord(r), dist(r.getAs[String]("id"))))
-              .sortBy { case (rec, d) => (d, rec.id) }
-              .toSeq
-          }
-      }
+    try dispatch(query, k, algorithm, Some(similarityThreshold)) match {
+      case Left(recs) => recs
+      case Right(frame) =>
+        val dist = frame.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+        if (dist.isEmpty) Seq.empty
+        else byDistId(df.filter(col("id").isin(dist.keySet.toSeq: _*)).collect()
+          .map(r => (NeighborlySpark.rowToRecord(r), dist(r.getAs[String]("id")))))
     } finally spark.sparkContext.clearJobGroup()
   }
 
@@ -500,31 +470,10 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * `Range` contributes an empty kNN stage (the switch default), so a
     * short text still gets its prefix matches and a long text none. */
   def search(text: String, k: Int, algorithm: SearchAlgorithm.Value,
-      similarityThreshold: Option[Double]): DataFrame = {
-    require(text != null && text.trim.nonEmpty, "Text cannot be null or empty")
-    import SearchAlgorithm._
-    // exact names use TextSearch's inline linear path; the rest dispatch
-    val knnFn: Option[(Array[Float], Int) => DataFrame] = algorithm match {
-      case KDTree | BallTree | Linear => None
-      case LSH => Some((q, kk) =>
-        Lsh.search(df, "id", "values", q, kk, LshParams.adaptive(dimension))
-          .select(col("id"), col("dist")))
-      case HNSW => Some((q, kk) => (localIdx match {
-        case Some(li) => mapHits(li, graft.index.LocalHnsw.search(li.hnsw, spark, q, kk, "_sid"))
-        case None => Lsh.search(df, "id", "values", q, kk, LshParams.serving(dimension))
-      }).select(col("id"), col("dist")))
-      case SearchAlgorithm.BinaryQuantization => Some((q, kk) =>
-        BqIndex.search(df, "id", "values", q, kk, threshold = bqThreshold)
-          .select(col("id"), col("dist")))
-      case SearchAlgorithm.ProductQuantization => Some((q, kk) => {
-        val m = pqModel.getOrElse { val f = PqIndex.fit(df, "values"); pqModel = Some(f); f }
-        PqIndex.search(m, df, "id", "values", q, kk, scannedRows = count)
-      })
-      case Range => Some((_, _) => df.limit(0).select(col("id"), lit(0.0).as("dist")))
-    }
+      similarityThreshold: Option[Double]): DataFrame =
     TextSearch.search(df, "id", "values", "original_text", text, k,
-      embeddingProvider, similarityThreshold, knnFn = knnFn)
-  }
+      embeddingProvider, similarityThreshold,
+      knnFn = Some((q, kk) => hitFrame(dispatch(q, kk, algorithm, None))))
 
   /** Radius search, gated exactly like the reference: only Linear, Range
     * and KDTree names support it (SearchService.cs:246-247). */
@@ -649,14 +598,6 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     localIdx = f.local
   }
 
-  /** Release a fitted build that lost its install race. */
-  private def discard(f: FittedIndexes): Unit = f.local.foreach { li =>
-    li.ann.unpersist(blocking = false)
-    li.hnsw.unpersist(blocking = false)
-    li.records.unpersist(blocking = false)
-    org.apache.spark.sql.graft.bridge.freeCheckpoint(li.mapping)
-  }
-
   /** Snapshot: parquet vector table + tag dictionary
     * (VectorDatabase.cs:642-711's SaveAsync analog). */
   def save(path: String): Unit = {
@@ -744,6 +685,21 @@ object NeighborlySpark {
     wide.select(col("_sid"), col("id"), col("values"), col("tags"),
         col("original_text"), col("priority"), col("user_id"), col("org_id"))
       .rdd
-      .map(r => (r.getAs[Long]("_sid"), VectorHttpServer.rowToRecord(r)))
+      .map(r => (r.getAs[Long]("_sid"), rowToRecord(r)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** A vector-table row as a record — the one decoder every reader of the
+    * table (facade, REST listing, GetVectors streams, memory store) uses. */
+  private[api] def rowToRecord(r: Row): VectorRecord = VectorRecord(
+    r.getAs[String]("id"),
+    r.getAs[scala.collection.Seq[Float]]("values").toArray,
+    r.getAs[scala.collection.Seq[Short]]("tags").toArray,
+    r.getAs[String]("original_text"),
+    r.getAs[Byte]("priority"), r.getAs[Long]("user_id"), r.getAs[Long]("org_id"))
+
+  /** Schema of the warm path's (id, dist) hit frame. */
+  private val HitSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("dist", org.apache.spark.sql.types.DoubleType,
+      nullable = false)))
 }

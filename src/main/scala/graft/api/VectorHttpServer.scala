@@ -126,33 +126,35 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
     * (12) — Grpc.Core's own mappings). Supports both
     * `application/grpc-web+proto` and the base64 `grpc-web-text` form. */
   private def grpcWeb(ex: HttpExchange, method: String): Unit = {
-    val reqCt = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-    val isText = reqCt.startsWith("application/grpc-web-text")
+    val isText = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
+      .startsWith("application/grpc-web-text")
+    ex.getResponseHeaders.set("Content-Type",
+      if (isText) "application/grpc-web-text" else "application/grpc-web+proto")
     val rawBody = ex.getRequestBody.readAllBytes()
+    // decoded inside each path's status catch: a bad body is a grpc-status
+    def request(): Array[Byte] = GrpcWeb.firstMessage(
+      if (isText) java.util.Base64.getDecoder.decode(
+        new String(rawBody, StandardCharsets.US_ASCII).trim)
+      else rawBody)
     // GetVectors streams on BOTH content types — the reply is unbounded
     // (the whole table) and must never materialize in one driver buffer
-    if (method == "GetVectors") return streamGetVectors(ex, rawBody, isText)
+    if (method == "GetVectors") return streamGetVectors(ex, request _, isText)
     val frames: Array[Byte] =
       try {
-        val body = if (isText) java.util.Base64.getDecoder.decode(
-          new String(rawBody, StandardCharsets.US_ASCII).trim) else rawBody
-        val req = GrpcWeb.firstMessage(body)
-        val reply = VectorHttpServer.dispatchRpc(db, method, req)
+        val reply = VectorHttpServer.dispatchRpc(db, method, request())
         GrpcWeb.messageFrame(reply) ++ GrpcWeb.trailersFrame(0)
-      } catch {
-        case GrpcWeb.StatusException(code, msg) => GrpcWeb.trailersFrame(code, msg)
-        case e: IllegalArgumentException =>
-          GrpcWeb.trailersFrame(2, String.valueOf(e.getMessage))
-        case scala.util.control.NonFatal(e) => GrpcWeb.trailersFrame(2, e.toString)
-      }
+      } catch { case scala.util.control.NonFatal(e) => errorTrailers(e) }
     val payload =
       if (isText) java.util.Base64.getEncoder.encode(frames)
       else frames
-    ex.getResponseHeaders.set("Content-Type",
-      if (isText) "application/grpc-web-text" else "application/grpc-web+proto")
     ex.sendResponseHeaders(200, payload.length.toLong)
     val os = ex.getResponseBody
     try os.write(payload) finally os.close()
+  }
+
+  private def errorTrailers(e: Throwable): Array[Byte] = {
+    val (code, msg) = GrpcWeb.statusOf(e)
+    GrpcWeb.trailersFrame(code, msg)
   }
 
   /** Test-visible ground truth that GetVectors streamed: RECORDS written
@@ -177,10 +179,8 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
     * chunkable at 3-byte boundaries, so the JDK's encoding wrapper
     * (3-byte carry, padding emitted on close) turns the record stream
     * into a base64 stream without ever holding the table. */
-  private def streamGetVectors(ex: HttpExchange, rawBody: Array[Byte],
+  private def streamGetVectors(ex: HttpExchange, request: () => Array[Byte],
       isText: Boolean): Unit = {
-    ex.getResponseHeaders.set("Content-Type",
-      if (isText) "application/grpc-web-text" else "application/grpc-web+proto")
     ex.sendResponseHeaders(200, 0) // length 0 = chunked transfer
     val os: java.io.OutputStream =
       if (isText) java.util.Base64.getEncoder.wrap(ex.getResponseBody)
@@ -188,19 +188,12 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
     try {
       val total =
         try {
-          val body = if (isText) java.util.Base64.getDecoder.decode(
-            new String(rawBody, StandardCharsets.US_ASCII).trim) else rawBody
-          GrpcWeb.firstMessage(body) // validates request framing
+          request() // validates request framing
           val sum = GetVectorsStream.declaredLength(() => vectorsPass())
           require(sum <= Int.MaxValue, s"GetVectors response exceeds 2 GiB ($sum B)")
           Some(sum.toInt)
         } catch {
-          case GrpcWeb.StatusException(code, msg) =>
-            os.write(GrpcWeb.trailersFrame(code, msg)); None
-          case e: IllegalArgumentException =>
-            os.write(GrpcWeb.trailersFrame(2, String.valueOf(e.getMessage))); None
-          case scala.util.control.NonFatal(e) =>
-            os.write(GrpcWeb.trailersFrame(2, e.toString)); None
+          case scala.util.control.NonFatal(e) => os.write(errorTrailers(e)); None
         }
       total.foreach { len =>
         val header = java.nio.ByteBuffer.allocate(5)
@@ -268,7 +261,7 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
         if (!first) os.write(',')
         first = false
         os.write(mapper.writeValueAsBytes(
-          recordNode(VectorHttpServer.rowToRecord(it.next()), None)))
+          recordNode(NeighborlySpark.rowToRecord(it.next()), None)))
         streamedRestListRecords.incrementAndGet()
       }
       os.write(']')
@@ -466,11 +459,4 @@ object VectorHttpServer {
       else bare
     java.util.UUID.fromString(canonical).toString
   }
-
-  private[api] def rowToRecord(r: org.apache.spark.sql.Row): VectorRecord = VectorRecord(
-    r.getAs[String]("id"),
-    r.getAs[scala.collection.Seq[Float]]("values").toArray,
-    r.getAs[scala.collection.Seq[Short]]("tags").toArray,
-    r.getAs[String]("original_text"),
-    r.getAs[Byte]("priority"), r.getAs[Long]("user_id"), r.getAs[Long]("org_id"))
 }

@@ -82,17 +82,28 @@ object VectorBinary {
     buf.array()
   }
 
+  /** Every wire length is checked against the bytes actually present
+    * BEFORE anything is allocated or read: a forged count must fail as an
+    * `IllegalArgumentException` (a gRPC status on every transport), never
+    * size an array — 2^31-1 values is an `OutOfMemoryError`, which no
+    * status mapping catches — nor underflow the buffer. */
   def fromBinary(b: Array[Byte]): VectorRecord = {
     require(b.length >= 24, s"vector binary too short (${b.length} bytes; header is 24)")
     val id = bytesToGuid(b, 0)
     val buf = ByteBuffer.wrap(b, 16, b.length - 16).order(ByteOrder.LITTLE_ENDIAN)
+    def need(bytes: Long, what: String): Unit = require(bytes <= buf.remaining,
+      s"vector binary truncated: $what needs $bytes bytes, ${buf.remaining} left")
     val nValues = buf.getInt
     val nText = buf.getInt
     require(nValues >= 0 && nText >= 0, s"negative lengths in vector binary ($nValues, $nText)")
+    need(nText, "originalText")
     val text = new Array[Byte](nText); buf.get(text)
+    need(4L * nValues, s"$nValues values")
     val values = Array.fill(nValues)(buf.getFloat)
+    need(2, "tag count")
     val nTags = buf.getShort.toInt
     require(nTags >= 0, s"negative tag count $nTags")
+    need(2L * nTags + 1 + 4 + 4, s"$nTags tags and the attributes")
     val tags = Array.fill(nTags)(buf.getShort)
     val priority = buf.get()
     val userId = Integer.toUnsignedLong(buf.getInt)
@@ -188,9 +199,6 @@ object VectorProto {
   def encodeVectorListItem(payload: Array[Byte]): Array[Byte] =
     new Writer().messageField(1, encodeVectorMessage(payload)).toBytes
 
-  def encodedVectorListItemSize(payload: Array[Byte]): Long =
-    encodeVectorListItem(payload).length.toLong
-
   def decodeVectorList(bytes: Array[Byte]): Seq[Array[Byte]] = {
     val out = Seq.newBuilder[Array[Byte]]
     eachField(bytes) {
@@ -250,6 +258,17 @@ object GrpcWeb {
 
   final case class StatusException(code: Int, message: String)
     extends RuntimeException(message)
+
+  /** The one failure → (grpc-status, grpc-message) mapping every rpc path
+    * on both transports uses: a [[StatusException]] keeps its own code,
+    * anything else is UNKNOWN (2) — Grpc.Core's mapping of an unhandled
+    * server exception — with a validation failure's bare message or
+    * any other exception's `toString`. */
+  private[api] def statusOf(e: Throwable): (Int, String) = e match {
+    case StatusException(code, msg) => (code, msg)
+    case e: IllegalArgumentException => (2, String.valueOf(e.getMessage))
+    case e => (2, e.toString)
+  }
 
   def frame(flags: Int, payload: Array[Byte]): Array[Byte] = {
     val b = ByteBuffer.allocate(5 + payload.length)

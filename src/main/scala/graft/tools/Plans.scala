@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Plan-capture utility for the optimization rounds: writes
   * `.explain("formatted")` of each declared query to
@@ -17,13 +17,7 @@ object Plans {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(',').map(_.trim).toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dev tool: print the executed plan of one or more `SparkEntry.queries`
   * keys (physical-plan review — broadcast vs shuffle joins, pushed
@@ -12,10 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val keys = if (args.nonEmpty) args.toSeq else Seq("q1_agg")
     keys.foreach { k =>

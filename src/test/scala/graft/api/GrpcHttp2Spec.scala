@@ -60,6 +60,29 @@ class GrpcHttp2Spec extends SparkSpec {
       // update drops tags (VectorList.cs:184-187 parity), carried natively
       assert(hits.head.tags.isEmpty && hits.head.original_text === "v2")
 
+      // k omitted decodes as k = 0: UNKNOWN with the facade's k-check
+      // message through the trailers-only form, cold and warm alike
+      def searchNoK() = c.call("SearchNearest", VectorProto.encodeSearchNearestRequest(
+        VectorBinary.toBinary(VectorRecord(idA, Array(9f, 9f, 9f))), 0))
+      for (warm <- Seq(false, true)) {
+        if (warm) { // PQ's k-means needs more than one row to fit
+          (1 to 3).foreach(i => srv.db.addVector(VectorRecord(
+            f"00000000-0000-0000-0000-$i%012d", Array(i.toFloat, 0f, 0f))))
+          assert(srv.db.buildAllIndexes())
+        }
+        val (km, kt, kdf) = searchNoK()
+        assert(km.isEmpty && kdf === 0 && kt("grpc-status") === "2", s"warm=$warm: $kt")
+        assert(kt("grpc-message") === "requirement failed: Number of neighbors must be greater than 0")
+      }
+
+      // an AddVector payload declaring 2^31-1 values is a status, not an
+      // OutOfMemoryError, and the server answers the next request
+      val (fm, ft, _) = c.call("AddVector", VectorProto.encodeAddVectorRequest(
+        GrpcWebSpec.forgedVector(Int.MaxValue, 0)))
+      assert(fm.isEmpty && ft("grpc-status") === "2", s"got $ft")
+      assert(c.call("GetVectorById", VectorProto.encodeGetVectorByIdRequest(idA))._2(
+        "grpc-status") === "0")
+
       val (_, ct, _) = c.call("ClearVectors", Array.emptyByteArray)
       assert(ct("grpc-status") === "0")
       val (lm, lt, _) = c.call("GetVectors", Array.emptyByteArray)

@@ -92,6 +92,29 @@ class GrpcWebSpec extends SparkSpec {
     intercept[IllegalArgumentException](VectorBinary.toBinary(r.copy(user_id = 1L << 33)))
   }
 
+  test("VectorBinary.fromBinary: truncated, oversized or garbage payloads decode or throw IllegalArgumentException") {
+    import org.scalacheck.{Arbitrary, Gen, Prop, Test => Check}
+    val record = for {
+      values <- Gen.choose(0, 20).flatMap(Gen.listOfN(_, Arbitrary.arbitrary[Float]))
+      tags <- Gen.listOf(Arbitrary.arbitrary[Short].map(s => (s & 0x7FFF).toShort))
+      text <- Arbitrary.arbitrary[String]
+      uid <- Gen.choose(0L, 0xFFFFFFFFL)
+    } yield VectorBinary.toBinary(VectorRecord(GrpcWebSpec.ForgedId, values.toArray,
+      tags.take(8).toArray, text, user_id = uid))
+    val truncated = record.flatMap(b => Gen.choose(0, b.length).map(b.take))
+    // a valid payload whose values/text counts are rewritten, up to 2^31-1
+    val count = Gen.oneOf(Gen.choose(0, Int.MaxValue), Gen.const(Int.MaxValue), Gen.choose(-8, 64))
+    val oversized = for { b <- record; nv <- count; nt <- count } yield
+      GrpcWebSpec.forgedVector(nv, nt) ++ b.drop(24)
+    val garbage = Gen.listOf(Arbitrary.arbitrary[Byte]).map(_.toArray)
+    val prop = Prop.forAll(Gen.oneOf(truncated, oversized, garbage)) { b =>
+      try { VectorBinary.fromBinary(b); true }
+      catch { case _: IllegalArgumentException => true }
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(2000), prop)
+    assert(result.passed, result.status.toString)
+  }
+
   test("gRPC-Web framing: 5-byte headers, trailers frame, empty-body request") {
     val f = GrpcWeb.messageFrame(Array(0x61.toByte, 0x62.toByte))
     assert(hex(f) === "00000000026162")
@@ -190,6 +213,16 @@ class GrpcWebSpec extends SparkSpec {
       val hits = VectorProto.decodeVectorList(sm.head).map(VectorBinary.fromBinary)
       assert(hits.map(_.id) === Seq(idA, idB), s"got ${hits.map(_.id)}")
 
+      // a SearchNearest that omits k decodes as k = 0: the facade's one
+      // k check answers UNKNOWN with its message, cold and warm alike
+      for (warm <- Seq(false, true)) {
+        if (warm) assert(srv.db.buildAllIndexes())
+        val (km, kt) = rpc(base, "SearchNearest",
+          VectorProto.encodeSearchNearestRequest(VectorBinary.toBinary(query), 0))
+        assert(km.isEmpty && kt("grpc-status") === "2", s"warm=$warm: $kt")
+        assert(kt("grpc-message") === "requirement failed: Number of neighbors must be greater than 0")
+      }
+
       // UpdateVector: replaces values/text, drops tags (VectorList quirk)
       val replacement = VectorRecord(idA, Array(0f, 1f, 0f, 0f),
         Array(9.toShort), "updated doc")
@@ -237,6 +270,16 @@ class GrpcWebSpec extends SparkSpec {
       // request beginning with a trailers frame is not a valid unary call
       val (c3, t3) = raw(GrpcWeb.trailersFrame(0))
       assert(c3 === 200 && t3("grpc-status") === "2", s"got $c3 $t3")
+      // an AddVector payload declaring 2^31-1 values (or text bytes) is a
+      // status, not an OutOfMemoryError — on both content types — and
+      // the server answers the next request
+      for (forged <- Seq(GrpcWebSpec.forgedVector(Int.MaxValue, 0),
+          GrpcWebSpec.forgedVector(0, Int.MaxValue)); text <- Seq(false, true)) {
+        val (am, at) = rpc(base, "AddVector", VectorProto.encodeAddVectorRequest(forged), text)
+        assert(am.isEmpty && at("grpc-status") === "2", s"got $at")
+        assert(at("grpc-message").contains("vector binary truncated"))
+        assert(rpc(base, "GetVectors", Array.emptyByteArray)._2("grpc-status") === "0")
+      }
     }
   }
 
@@ -392,4 +435,14 @@ class GrpcWebSpec extends SparkSpec {
       assert(srv.db.count === 1, "the mismatched vector must not land")
     }
   }
+}
+
+object GrpcWebSpec {
+  val ForgedId = "0f8fad5b-d9cb-469f-a165-70867728950e"
+
+  /** The 24-byte `Vector.ToBinary()` header with the given values count
+    * and originalText length, and nothing after it. */
+  def forgedVector(nValues: Int, nText: Int): Array[Byte] =
+    java.nio.ByteBuffer.allocate(24).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put(VectorBinary.guidToBytes(ForgedId)).putInt(nValues).putInt(nText).array()
 }

@@ -29,9 +29,17 @@ class ServePathSpec extends SparkSpec {
       val coldNear = ids(db, near, 5, 0.6)
       val coldStrict = ids(db, vec(1.0f), 5, 0.0)
       val coldBypass = ids(db, far, 3, 2.0)
+      // k is checked once, before the warm/cold split: a validation
+      // failure (REST 400), not a failing Spark task
+      val kZero = intercept[IllegalArgumentException](ids(db, near, 0, 0.6))
+      assert(kZero.getMessage.contains("Number of neighbors must be greater than 0"))
 
       db.buildAllIndexes()
       assert(db.hasWarmIndexes)
+      for (alg <- Seq(SearchAlgorithm.KDTree, SearchAlgorithm.HNSW)) {
+        val e = intercept[IllegalArgumentException](db.searchRecords(near, 0, alg, 0.6))
+        assert(e.getMessage === kZero.getMessage, s"$alg")
+      }
       assert(ids(db, near, 5, 0.6) === coldNear)
       assert(coldNear.map(_._1) === Seq("v01")) // only dist 0.5 ≤ 0.6
       // exact-threshold boundary: dist 0.0 ≤ 0.0 keeps exactly the match
@@ -50,13 +58,26 @@ class ServePathSpec extends SparkSpec {
       // k beyond the qualifying set truncates identically
       assert(ids(db, near, 50, 1000.0).size === 30)
 
-      // HNSW warm: the records path and the DataFrame path answer from
-      // the same graph — identical hits
-      val viaRecords = db.searchRecords(near, 4, SearchAlgorithm.HNSW, 1000.0)
-        .map { case (r, d) => (r.id, d) }
-      val viaFrame = db.search(near, 4, SearchAlgorithm.HNSW, 1000.0)
-        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      assert(viaRecords === viaFrame)
+      // every warm name: the records path and the DataFrame path answer
+      // from the same index — identical hits
+      for (alg <- Seq(SearchAlgorithm.KDTree, SearchAlgorithm.BallTree,
+          SearchAlgorithm.Linear, SearchAlgorithm.HNSW)) {
+        val viaRecords = db.searchRecords(near, 4, alg, 1000.0)
+          .map { case (r, d) => (r.id, d) }
+        val viaFrame = db.search(near, 4, alg, 1000.0)
+          .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+        assert(viaRecords === viaFrame, s"$alg")
+        assert(viaRecords.size === 4, s"$alg")
+      }
+      // …and the text verb's warm HNSW arm: a ≥20-char text has no
+      // prefix-match tail, so its hits are the embedded query's
+      db.setEmbeddingProvider(graft.ops.HashEmbeddingProvider(dim))
+      val text = "a query text of twenty or more characters"
+      val viaText = db.search(text, 4, SearchAlgorithm.HNSW, Some(1000.0))
+        .collect().map(_.getString(0)).toSeq
+      val embedded = db.searchRecords(db.embeddingProvider.embed(text), 4,
+        SearchAlgorithm.HNSW, 1000.0).map(_._1.id)
+      assert(viaText === embedded && viaText.size === 4)
     } finally db.close()
   }
 }

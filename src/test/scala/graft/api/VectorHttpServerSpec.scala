@@ -54,6 +54,14 @@ class VectorHttpServerSpec extends SparkSpec {
       assert(hits.body().contains("\"v1\"") && hits.body().contains("\"dist\""))
       assert(!hits.body().contains("\"v2\"")) // dist 2.9 > default threshold 0.5
 
+      // k = 0 is a validation failure on the cold and the warm path alike
+      for (warm <- Seq(false, true)) {
+        if (warm) assert(db.buildAllIndexes())
+        val zero = req(base, "POST", "/vectors/searchNearest?k=0", """{"values":[0.1,0.0]}""")
+        assert(zero.statusCode() === 400, s"warm=$warm: ${zero.body()}")
+        assert(zero.body().contains("Number of neighbors must be greater than 0"))
+      }
+
       // UpdateVector: keeps id, drops tags (VectorList.cs:184-187 quirk); 404 for unknown
       val upd = req(base, "PUT", "/vector/v1",
         """{"values":[1.0,1.0],"originalText":"moved"}""")

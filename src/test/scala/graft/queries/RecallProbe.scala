@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe (test scope): measured semantic-mining recall vs the exact
@@ -8,10 +8,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/tmp/sf1"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(16)
     spark.sparkContext.setLogLevel("ERROR")
     val fix = IndexQueries.plantedEmbeddings(spark, dir).localCheckpoint(true)
     val e = table(spark, dir, "embeddings")
