@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{VectorRecord, VectorSchema}
 import graft.functions.Distances
-import graft.index.{Lsh, LshParams, PqModel}
+import graft.index.{LocalAnn, LocalHnsw, LocalStore, Lsh, LshParams, PqModel}
 import graft.index.{BinaryQuantization => BqIndex, ProductQuantization => PqIndex}
 import graft.io.{ContentType, Etl}
 import graft.meta.TagDictionary
@@ -108,26 +108,34 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * (VectorDatabase.cs:124,501-540) is reproduced on top of that
     * safety: a debounced lowest-priority daemon re-runs
     * [[buildAllIndexes]] after `autoRebuildDelayMs` without writes. */
-  /** `records` is the warm table keyed by surrogate id as a PERSISTED
-    * pair RDD — the serve path's record fetch: after the index probe
-    * returns k (surrogate, dist) hits driver-side, one raw RDD
-    * filter-collect yields the full records with no Catalyst planning,
-    * no exchange, no AQE staging in the request path (each of which cost
-    * more than the whole probe at serving size). Costs one extra
-    * deserialized copy of the table while indexes are warm — the
-    * explicit serving-tier trade, released on invalidation. No request
-    * reads `mapping`: it is kept because it holds the checkpoint the
-    * lazily built `ann`/`hnsw` RDDs read, and because `save` writes it. */
+  /** `records` is the warm table laid out like the index partitions
+    * ([[LocalStore]]): partition p holds a surrogate → record map for
+    * exactly the surrogates of `ann` and `hnsw` partition p, so ONE
+    * `zipPartitions` job returns every partition's local top-k with its
+    * full records — no second fetch job, no Catalyst planning, exchange
+    * or AQE staging in the request path. Costs one extra deserialized
+    * copy of the table while indexes are warm — the explicit
+    * serving-tier trade, released on invalidation. No request reads
+    * `mapping`: it is kept because it holds the checkpoint the lazily
+    * built `ann`/`hnsw` RDDs read, and because `save` writes it. */
   private case class LocalIdx(mapping: DataFrame,
       ann: org.apache.spark.rdd.RDD[graft.index.LocalNormIndex],
       hnsw: org.apache.spark.rdd.RDD[graft.index.HnswGraph],
-      records: org.apache.spark.rdd.RDD[(Long, VectorRecord)])
+      records: LocalStore.Store[VectorRecord])
   @volatile private var localIdx: Option[LocalIdx] = None
   @volatile private var cachedDf: Option[DataFrame] = None
 
   /** True when the KDTree/BallTree/HNSW names currently serve from warm
     * local indexes (vs the always-fresh scan/LSH fallback). */
   def hasWarmIndexes: Boolean = localIdx.isDefined
+
+  /** Per warm partition: the surrogates held by the KDTree index, the HNSW
+    * graph and the record store — the one layout they share (test seam;
+    * collects every surrogate). */
+  private[api] def warmLayout: Seq[(Set[Long], Set[Long], Set[Long])] =
+    localIdx.toSeq.flatMap(li => li.ann.zipPartitions(li.hnsw, li.records) { (a, h, r) =>
+      Iterator.single((a.flatMap(_.ids).toSet, h.flatMap(_.ids).toSet, r.flatMap(_.keys).toSet))
+    }.collect())
 
   // ----- debounced background rebuild (VectorDatabase.cs:124,501-540:
   // vectors modified → BuildAllIndexes ≥5 s later on a lowest-priority
@@ -225,11 +233,24 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   }
 
   def vectors: DataFrame = df
-  def count: Long = df.count()
+
+  /** `df.count()` memoized against the frame instance it counted, in one
+    * volatile pair: every mutation swaps `df`, so a memo of an older
+    * frame never matches and the next read recounts — the memo cannot
+    * drift. `install` seeds it from the record-store count its fit
+    * already ran, and `clear` with the empty table's 0. */
+  @volatile private var counted: (DataFrame, Long) = (null, 0L)
+
+  def count: Long = {
+    val live = df
+    val (of, n) = counted
+    if (of eq live) n
+    else { val c = live.count(); counted = (live, c); c }
+  }
 
   /** Observability (VectorDatabase.cs:218,342-348 analog): per-search
     * span metrics, a Spark-listener job counter for the serving path, and
-    * an observable vector-count gauge reading the LIVE table. */
+    * a vector-count gauge of the LIVE table (the memoized [[count]]). */
   val metrics: NeighborlyMetrics = {
     val m = new NeighborlyMetrics(() => count,
       s"${NeighborlyMetrics.ServeGroup}/${Integer.toHexString(System.identityHashCode(this))}")
@@ -265,6 +286,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
       invalidateLocalIndexes()
       if (checkpointEvery > 0 && mutations > 0 && mutations % checkpointEvery == 0)
         df = df.localCheckpoint(true)
+      if (emptied) counted = (df, 0L)
     }
     scheduleRebuild()
   }
@@ -379,9 +401,11 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * returns []. A threshold (incl. the high-dim bypass,
     * SearchService.cs:171-189) applies with the SAME semantics on both
     * sides (ThresholdFilter.applyLocal, property-pinned equal in
-    * ThresholdFilterLocalSpec); `None` leaves it to the caller. Reads
-    * the volatile `localIdx` once, so a background install cannot swap
-    * the index between the probe and the record fetch. */
+    * ThresholdFilterLocalSpec); `None` leaves it to the caller. A warm
+    * name is ONE Spark job: the probe and the record fetch run together
+    * over the co-partitioned record store (reading the volatile
+    * `localIdx` once, so a background install cannot swap the index
+    * under it). */
   private def dispatch(query: Array[Float], k: Int, algorithm: SearchAlgorithm.Value,
       threshold: Option[Double]): Hits = {
     require(k > 0, "Number of neighbors must be greater than 0")
@@ -389,9 +413,9 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     // the enum is closed: every name has an arm, as in the reference switch
     val hits: Hits = ((algorithm, localIdx): @unchecked) match {
       case (KDTree | BallTree | Linear, Some(li)) =>
-        Left(fetch(li, graft.index.LocalAnn.searchTop(li.ann, query, k)))
+        Left(warmHits(LocalStore.topK(li.ann, li.records, k)(_.topKWithStats(query, k)._1)))
       case (HNSW, Some(li)) =>
-        Left(fetch(li, graft.index.LocalHnsw.searchTop(li.hnsw, query, k)))
+        Left(warmHits(LocalStore.topK(li.hnsw, li.records, k)(_.search(query, k, LocalHnsw.DefaultEf))))
       case (KDTree | BallTree | Linear, None) =>
         Right(Knn.single(df, "id", "values", typedLit(query), k))
       case (LSH, _) =>
@@ -412,16 +436,10 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
       .map(ThresholdFilter(_, "dist", t, dimension)))
   }
 
-  /** Warm record fetch: one raw RDD filter-collect over the persisted
-    * record store for the k (dist, surrogate) probe hits — no Catalyst
-    * planning, exchange, or AQE staging in the request path. */
-  private def fetch(li: LocalIdx, top: Array[(Double, Long)]): Seq[(VectorRecord, Double)] =
-    if (top.isEmpty) Seq.empty
-    else {
-      val bySid = top.map { case (d, sid) => sid -> d }.toMap
-      byDistId(li.records.filter(r => bySid.contains(r._1)).collect()
-        .map { case (sid, rec) => (rec, bySid(sid)) })
-    }
+  /** Warm hits as (record, dist): already in (dist, surrogate) order,
+    * which is (dist, id) order — the surrogate is the id's rank. */
+  private def warmHits(top: Array[(Double, Long, VectorRecord)]): Seq[(VectorRecord, Double)] =
+    top.map { case (d, _, rec) => (rec, d) }.toSeq
 
   private def byDistId(hits: Array[(VectorRecord, Double)]): Seq[(VectorRecord, Double)] =
     hits.sortBy { case (rec, d) => (d, rec.id) }.toSeq
@@ -534,21 +552,13 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     installed
   }
 
-  private case class FittedIndexes(bq: Double, pq: PqModel, local: Option[LocalIdx])
+  /** `rows` is the snapshot's row count, from the record-store
+    * materialization (each row has exactly one surrogate). */
+  private case class FittedIndexes(bq: Double, pq: PqModel, local: Option[LocalIdx], rows: Long)
 
   /** Serving-tier partition clamp shared by every local-index artifact. */
   private def serveParts: Int =
     math.max(1, math.min(spark.sparkContext.defaultParallelism, 8))
-
-  /** Build + materialize the warm record store (ONE shape for the fit
-    * and load paths — r6 review: the two sites had drifted-in-waiting
-    * copies of the clamp + materialize sequence). */
-  private def buildRecordStore(table: DataFrame, mapping: DataFrame) = {
-    val records = NeighborlySpark.recordsBySid(
-      table.join(mapping, "id").repartition(serveParts))
-    records.count()
-    records
-  }
 
   /** Fit every index artifact from a snapshot — runs Spark jobs but
     * touches NO facade state, so the background thread can run it without
@@ -556,7 +566,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   private def fitIndexes(snapshot: DataFrame): FittedIndexes = {
     val bq = BqIndex.globalMean(snapshot, "values")
     val pq = PqIndex.fit(snapshot, "values")
-    val local = if (snapshot.limit(1).count() == 0) None else {
+    if (snapshot.limit(1).count() == 0) FittedIndexes(bq, pq, None, 0L) else {
       // ORDER-PRESERVING surrogate: the long key is the dense rank of the
       // string id (a distributed sort of ids only), so (dist, _sid)
       // tie-breaks inside the local indexes agree EXACTLY with the scan
@@ -569,19 +579,19 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
       val mapping = spark.createDataFrame(ranked).toDF("_sid", "id")
         .coalesce(parts)
         .localCheckpoint(true)
-      // ONE bounded-partition frame feeds both local index builds: the
-      // serve path's per-request RDD job runs `parts` tasks, not the
-      // session's shuffle width (32 near-empty tasks of scheduler
-      // latency were most of the warm-path p50)
-      val keyed = snapshot.select(col("id"), col("values")).join(mapping, "id")
-        .select(col("_sid"), col("id"), col("values"))
-        .repartition(parts, col("_sid"))
-      Some(LocalIdx(mapping,
-        graft.index.LocalAnn.build(keyed, "_sid", "values"),
-        graft.index.LocalHnsw.build(keyed, "_sid", "values"),
-        buildRecordStore(snapshot, mapping)))
+      // ONE bounded-partition frame feeds both local index builds AND
+      // the record store, so partition p of each holds the same
+      // surrogates (hash of `_sid`): the serve path's per-request job runs
+      // `parts` tasks, not the session's shuffle width (32 near-empty
+      // tasks of scheduler latency were most of the warm-path p50)
+      val keyed = snapshot.join(mapping, "id").repartition(parts, col("_sid"))
+      val records = LocalStore.fromPairs(NeighborlySpark.recordsBySid(keyed))
+      val rows = records.map(_.size.toLong).fold(0L)(_ + _)
+      FittedIndexes(bq, pq, Some(LocalIdx(mapping,
+        LocalAnn.build(keyed, "_sid", "values"),
+        LocalHnsw.build(keyed, "_sid", "values"),
+        records)), rows)
     }
-    FittedIndexes(bq, pq, local)
   }
 
   /** Install fitted artifacts (callers hold the lock). Cache ownership:
@@ -596,6 +606,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     pqModel = Some(f.pq)
     invalidateLocalIndexes()
     localIdx = f.local
+    counted = (cached, f.rows)
   }
 
   /** Snapshot: parquet vector table + tag dictionary
@@ -647,10 +658,15 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
       try {
         val mapping = spark.read.parquet(s"$path/indexes/sid_mapping")
           .localCheckpoint(true)
-        Some(LocalIdx(mapping,
-          graft.index.IndexStore.loadLocalAnn(spark, s"$path/indexes"),
-          graft.index.IndexStore.loadHnsw(spark, s"$path/indexes"),
-          buildRecordStore(df, mapping)))
+        val ann = graft.index.IndexStore.loadLocalAnn(spark, s"$path/indexes")
+        // the saved layout is the reloaded one: place each record with the
+        // index partition that holds its surrogate (both indexes reload
+        // in part_id order, so `hnsw` shares `ann`'s layout)
+        val records = LocalStore.placeLike(ann, (i: graft.index.LocalNormIndex) => i.ids,
+          NeighborlySpark.recordsBySid(df.join(mapping, "id")))
+        records.count()
+        Some(LocalIdx(mapping, ann,
+          graft.index.IndexStore.loadHnsw(spark, s"$path/indexes"), records))
       } catch { case _: Exception => None }
     unsaved = false
   }
@@ -677,16 +693,15 @@ object NeighborlySpark {
     * call returns false and the caller owns the retry schedule. */
   private[api] val ExplicitBuildAttempts = 3
 
-  /** (surrogate, full record) pair RDD from a (table ⋈ sid-mapping)
-    * frame, persisted MEMORY_AND_DISK — the warm serve path's record store.
-    * Lives on the companion so the map closure captures no facade
-    * instance (the class is not serializable, by design). */
+  /** (surrogate, full record) pairs of a (table ⋈ sid-mapping) frame,
+    * in its partitions — what the warm record store is built from. Lives
+    * on the companion so the map closure captures no facade instance
+    * (the class is not serializable, by design). */
   private[api] def recordsBySid(wide: DataFrame): org.apache.spark.rdd.RDD[(Long, VectorRecord)] =
     wide.select(col("_sid"), col("id"), col("values"), col("tags"),
         col("original_text"), col("priority"), col("user_id"), col("org_id"))
       .rdd
       .map(r => (r.getAs[Long]("_sid"), rowToRecord(r)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** A vector-table row as a record — the one decoder every reader of the
     * table (facade, REST listing, GetVectors streams, memory store) uses. */

@@ -11,9 +11,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   *
   *  - `searchCount` / `searchNanos`: per-search metrics, recorded by the
   *    facade around every materialized search (the Activity analog);
-  *  - `vectorCount`: an OBSERVABLE gauge — evaluated on read against the
-  *    live table, exactly like the reference's ObservableGauge callback,
-  *    never a stored counter that can drift;
+  *  - `vectorCount`: an OBSERVABLE gauge — evaluated on read, like the
+  *    reference's ObservableGauge callback. The facade's gauge is its
+  *    `count`, memoized against the live table instance it counted: a
+  *    scrape with no mutation since the last count runs no Spark job, and
+  *    any mutation swaps the table, so the memo cannot drift;
   *  - `serveJobs`: Spark-level ground truth — a `SparkListener` counting
   *    jobs tagged with the facade's `graft.serve` job group. This is the
   *    counter the serving spec pins the no-N+1 contract on: a k-row

@@ -49,7 +49,7 @@ import graft.core.VectorRecord
 class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
 
   private val mapper = new ObjectMapper()
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = VectorHttpServer.httpServer(new InetSocketAddress("127.0.0.1", port))
   server.setExecutor(null) // serial dispatch: the facade is single-writer
   server.createContext("/", (ex: HttpExchange) => handle(ex))
 
@@ -320,9 +320,10 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
 
   /** POST /vectors/searchNearest?k= (RestServices.cs:73-87 /
     * VectorService.cs:74-84): facade default dispatch, full records +
-    * dist in result order — ONE Spark action per request via
-    * `searchRecords` (the k-row hit set joins back to the table; no
-    * per-hit driver round-trips). */
+    * dist in result order via `searchRecords` — warm, ONE Spark job that
+    * probes the index and reads the hits' records from the co-partitioned
+    * record store; cold, two bounded k-row jobs. Never a per-hit driver
+    * round-trip. */
   private def searchNearest(ex: HttpExchange): Unit = {
     val k = queryParams(ex).get("k").map(_.toInt).getOrElse(10)
     val dto = parseDto(mapper.readTree(ex.getRequestBody))
@@ -335,8 +336,9 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
 
   /** GET /metrics — the OTel-export analog (VectorDatabase.cs:342-348
     * registers an ObservableGauge + per-search activities; this serves
-    * the same signals as JSON): live vector count (observable — read on
-    * request), search span counters, and the serve-group job count. */
+    * the same signals as JSON): live vector count (the facade's memoized
+    * count — no Spark job while the table is unchanged), search span
+    * counters, and the serve-group job count. */
   private def metrics(ex: HttpExchange): Unit = {
     val m = db.metrics
     val n = mapper.createObjectNode()
@@ -391,6 +393,20 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
 }
 
 object VectorHttpServer {
+
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** A JDK `HttpServer` whose connections run with TCP_NODELAY. The JDK
+    * server leaves Nagle on and writes a reply's headers and body as two
+    * small writes, so the body waits for the client's delayed ACK (about
+    * 40 ms a reply, on Linux). The JDK reads the switch, a system
+    * property, ONCE, when its first server is created in the JVM — so
+    * every JDK server in this code base is made here, and a value the
+    * JVM was started with is kept. */
+  private[graft] def httpServer(addr: InetSocketAddress): HttpServer = {
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+    HttpServer.create(addr, 0)
+  }
 
   /** Build a SERVED facade the way the reference's service process does:
     * the hosted `VectorDatabase` (API.gRPC/Program.cs:14 singleton)

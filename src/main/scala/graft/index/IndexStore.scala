@@ -21,9 +21,9 @@ import org.apache.spark.storage.StorageLevel
   * HNSW.cs:392-418). Format: one java-serialized blob per partition in a
   * parquet of (part_id, blob) rows, written and reloaded DISTRIBUTED
   * (no driver materialization); load re-establishes one index object per
-  * partition (part_id keys 0..n-1 hash perfectly onto n partitions) and
-  * re-persists deserialized in heap, so a reloaded index answers queries
-  * bit-identically to the one that was saved.
+  * partition, in part_id order (dense ranks 0..n-1 hash perfectly onto n
+  * partitions), and re-persists deserialized in heap, so a reloaded index
+  * answers queries bit-identically to the one that was saved.
   */
 object IndexStore {
 
@@ -53,16 +53,17 @@ object IndexStore {
 
   /** Reload: one index object per partition, persisted deserialized like
     * a fresh build. Saved part_ids can be sparse (empty build partitions
-    * emit no blob), so assignment uses a DENSE re-rank of the rows —
-    * exactly one blob per loaded partition, no hash collisions. */
+    * emit no blob), so the blob with the i-th smallest part_id goes to
+    * partition i (a DENSE rank of part_id, from the O(parts) id column
+    * alone): exactly one blob per loaded partition, and indexes saved
+    * from one layout (`local_ann` and `hnsw` of one build) reload into
+    * one layout, whatever order the parquet rows are read in. */
   private def loadLocalIndex[T: scala.reflect.ClassTag](spark: SparkSession, dir: String): RDD[T] = {
     val df = spark.read.parquet(dir)
-    val n = math.max(1, df.count().toInt)
+    val rank = df.select("part_id").collect().map(_.getInt(0)).sorted.zipWithIndex.toMap
     val rdd = df.rdd
-      .map(r => r.getAs[Array[Byte]]("blob"))
-      .zipWithIndex()
-      .map { case (blob, i) => (i.toInt, blob) }
-      .partitionBy(new HashPartitioner(n))
+      .map(r => (rank(r.getAs[Int]("part_id")), r.getAs[Array[Byte]]("blob")))
+      .partitionBy(new HashPartitioner(math.max(1, rank.size)))
       .map(kv => javaDeser(kv._2).asInstanceOf[T])
     rdd.persist(StorageLevel.MEMORY_ONLY)
     rdd

@@ -147,6 +147,9 @@ final class HnswGraph(val ids: Array[Long], val vecs: Array[Array[Float]],
 
 object LocalHnsw {
 
+  /** Search beam width of the serve path. */
+  val DefaultEf = 64
+
   /** Build one HNSW graph per partition (ascending-id insert order for
     * determinism), persisted deserialized in heap. */
   def build(df: DataFrame, idCol: String, vecCol: String,
@@ -164,14 +167,14 @@ object LocalHnsw {
   /** Driver-side (dist, id) top-k: per-partition graph search merged in
     * one RDD job — the serve path consumes this directly. */
   def searchTop(index: RDD[HnswGraph], query: Array[Float], k: Int,
-      ef: Int = 64): Array[(Double, Long)] =
+      ef: Int = DefaultEf): Array[(Double, Long)] =
     index.flatMap(_.search(query, k, ef).map { case (id, dd) => (dd, id) })
       .takeOrdered(k)(Ordering.Tuple2[Double, Long])
 
   /** Single-query approximate kNN: per-partition graph search, driver
     * merge, canonical (dist, id) order. */
   def search(index: RDD[HnswGraph], spark: SparkSession,
-      query: Array[Float], k: Int, idColName: String, ef: Int = 64): DataFrame = {
+      query: Array[Float], k: Int, idColName: String, ef: Int = DefaultEf): DataFrame = {
     val top = searchTop(index, query, k, ef)
     val schema = StructType(Seq(
       StructField(idColName, LongType, nullable = false),

@@ -171,6 +171,37 @@ class NeighborlySparkSpec extends SparkSpec {
     val reloaded = d2.search(Array(0f, 0f, 0f, 0f), 3, SearchAlgorithm.HNSW, 100.0)
       .collect().map(r => (r.getAs[String]("id"), r.getAs[Double]("dist"))).toSeq
     assert(reloaded === served)
+    // both reloaded indexes keep the saved layout, and the record store
+    // follows it: partition i of each holds the same surrogate set
+    val layout = d2.warmLayout
+    assert(layout.nonEmpty && layout.flatMap(_._1).size === 3)
+    layout.zipWithIndex.foreach { case ((ann, hnsw, records), i) =>
+      assert(ann === hnsw, s"partition $i: local_ann and hnsw hold different ids")
+      assert(records === ann, s"partition $i: the record store does not follow the index")
+    }
+  }
+
+  test("count is memoized per table and right after every mutation verb") {
+    val d = db()
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_facade_count"
+    assert(d.count === 3L && d.count === 3L)
+    d.addVector(VectorRecord("c1", Array(5f, 0f, 0f, 0f)))
+    assert(d.count === 4L)
+    d.addVectors(d.vectors.filter(org.apache.spark.sql.functions.col("id") === "c1")
+      .withColumn("id", org.apache.spark.sql.functions.lit("c2")))
+    assert(d.count === 5L)
+    assert(d.removeVector("c1") && d.count === 4L)
+    d.removeVectors(Seq("c2", "v3"))
+    assert(d.count === 2L)
+    assert(d.buildAllIndexes() && d.count === 2L) // seeded by the fit
+    d.save(path)
+    d.replaceTable(d.vectors.limit(1))
+    assert(d.count === 1L)
+    d.clear()
+    assert(d.count === 0L)
+    d.load(path)
+    assert(d.count === 2L)
+    d.close()
   }
 
   test("state verbs: hasUnsavedChanges tracks mutations vs save/load; generateVector embeds without adding") {

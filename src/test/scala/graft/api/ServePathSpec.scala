@@ -80,4 +80,28 @@ class ServePathSpec extends SparkSpec {
       assert(viaText === embedded && viaText.size === 4)
     } finally db.close()
   }
+
+  test("a facade restored by save/load serves warm records ≡ the cold path") {
+    val db = new NeighborlySpark(spark, dim)
+    val restored = new NeighborlySpark(spark, dim)
+    try {
+      db.addVectorRecords((1 to 30).map(i =>
+        VectorRecord(f"r$i%02d", vec(i.toFloat / 4f), Array(i.toShort), s"text-$i")))
+      val queries = Seq(vec(0.3f), vec(2.6f), vec(7.9f))
+      // the cold scan is the oracle: full records, (dist, id) order
+      def answers(d: NeighborlySpark, alg: SearchAlgorithm.Value) = queries.map(q =>
+        d.searchRecords(q, 5, alg, 1000.0).map { case (r, dist) =>
+          (r.id, r.values.toSeq, r.tags.toSeq, r.original_text, dist) })
+      val cold = answers(db, SearchAlgorithm.Linear)
+      assert(cold.forall(_.size == 5))
+      assert(db.buildAllIndexes())
+      val path = s"${System.getProperty("java.io.tmpdir")}/graft_serve_restored"
+      db.save(path)
+      restored.load(path)
+      assert(restored.hasWarmIndexes)
+      for (alg <- Seq(SearchAlgorithm.KDTree, SearchAlgorithm.BallTree,
+          SearchAlgorithm.Linear, SearchAlgorithm.HNSW))
+        assert(answers(restored, alg) === cold, s"$alg")
+    } finally { db.close(); restored.close() }
+  }
 }

@@ -167,6 +167,70 @@ class VectorHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("a warm search is exactly ONE Spark job, KDTree and HNSW alike") {
+    val db = new NeighborlySpark(spark, 2)
+    db.addVectorRecords((1 to 30).map(i =>
+      graft.core.VectorRecord(f"w$i%02d", Array(i.toFloat / 100f, 0f))))
+    assert(db.buildAllIndexes())
+    val srv = new VectorHttpServer(db)
+    val base = s"http://127.0.0.1:${srv.start()}"
+    try {
+      val q = Array(0f, 0f)
+      // first probes build the lazily persisted index partitions
+      req(base, "POST", "/vectors/searchNearest?k=10", """{"values":[0.0,0.0]}""")
+      db.searchRecords(q, 10, SearchAlgorithm.HNSW)
+      waitForListeners()
+      def jobsOf(n: Int)(search: => Unit): Long = {
+        val before = db.metrics.serveJobs.get()
+        (1 to n).foreach(_ => search)
+        waitForListeners()
+        db.metrics.serveJobs.get() - before
+      }
+      // KDTree: the REST default, and the facade verb
+      assert(jobsOf(3) {
+        val hits = req(base, "POST", "/vectors/searchNearest?k=10", """{"values":[0.0,0.0]}""")
+        assert(hits.statusCode() === 200 && hits.body().contains("\"w01\""))
+      } === 3L)
+      assert(jobsOf(3)(assert(db.searchRecords(q, 10).head._1.id === "w01")) === 3L)
+      assert(jobsOf(3)(assert(db.searchRecords(q, 10, SearchAlgorithm.HNSW)
+        .head._1.id === "w01")) === 3L)
+      assert(db.hasWarmIndexes)
+    } finally { srv.stop(); db.close() }
+  }
+
+  test("/metrics: a repeat scrape runs no Spark job, and replies without the delayed-ACK stall") {
+    val db = new NeighborlySpark(spark, 2)
+    db.addVectorRecords((1 to 5).map(i => graft.core.VectorRecord(s"c$i", Array(i.toFloat, 0f))))
+    val srv = new VectorHttpServer(db)
+    val base = s"http://127.0.0.1:${srv.start()}"
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(req(base, "GET", "/metrics").body().contains("\"vectorCount\":5"))
+      waitForListeners()
+      val before = jobs.get()
+      assert(req(base, "GET", "/metrics").body().contains("\"vectorCount\":5"))
+      waitForListeners()
+      assert(jobs.get() - before === 0L, "a scrape of an unchanged table ran Spark jobs")
+      // with Nagle on, the body write waits for the client's delayed ACK
+      // (about 44 ms a reply); with TCP_NODELAY a scrape takes about 1 ms
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(req(base, "GET", "/metrics").statusCode() === 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val p50 = (ms(9) + ms(10)) / 2
+      assert(p50 < 20.0, f"/metrics p50 $p50%.1f ms (${ms.mkString(", ")})")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      srv.stop(); db.close()
+    }
+  }
+
   private def waitForListeners(): Unit = {
     // listener bus is async; drain before reading counters
     val deadline = System.nanoTime() + 5e9.toLong

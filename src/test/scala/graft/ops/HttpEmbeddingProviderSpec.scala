@@ -1,6 +1,6 @@
 package graft.ops
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import graft.SparkSpec
 
 import java.net.InetSocketAddress
@@ -14,9 +14,12 @@ class HttpEmbeddingProviderSpec extends SparkSpec {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Stub endpoint: embedding = [len(prompt), len+1, len+2] — deterministic
-    * and visibly "from the server" (hash fallback can't produce it). */
+    * and visibly "from the server" (hash fallback can't produce it). Made
+    * by the code base's one JDK server factory: the JDK reads its
+    * TCP_NODELAY switch when the JVM's first server is created, and
+    * `VectorHttpServerSpec` pins the no-stall latency in any suite order. */
   private def withStub(f: String => Unit): Unit = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.api.VectorHttpServer.httpServer(new InetSocketAddress("127.0.0.1", 0))
     server.createContext("/api/embeddings", (ex: HttpExchange) => {
       val req = mapper.readTree(ex.getRequestBody)
       val n = req.get("prompt").asText().length
