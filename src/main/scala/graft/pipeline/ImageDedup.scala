@@ -23,6 +23,9 @@ import graft.functions.DHashExpr
   * wider radii and as the measured-recall alternative
   * ([[hamming64NearDuplicates]], `band_recall` gate). No all-pairs
   * product at any scale.
+  * The 64-bit Hamming miners here serve every 64-bit hash family: image
+  * dHash, audio envelope hash, video clip hash, and text SimHash
+  * ([[graft.pipeline.Dedup.simHashNearDuplicates]], 16-bit word banding).
   * Exact-duplicate media should be collapsed by the exact-dedup pass
   * first (identical bytes → identical hash → Hamming 0 survives here
   * too, but pays the banding join for rows a groupBy would collapse).
@@ -36,9 +39,9 @@ object ImageDedup {
       .filter(col("dhash").isNotNull)
 
   /** Word-banded Hamming mining over ANY 64-bit perceptual hash column
-    * — shared by the image (dHash), audio (envelope hash) and video
-    * (clip hash) miners: candidates share ≥ 1 of the `64/bandBits`
-    * words, verified by exact packed Hamming ≤ `maxHamming`.
+    * — shared by the image (dHash), audio (envelope hash), video (clip
+    * hash) and text SimHash miners: candidates share ≥ 1 of the
+    * `64/bandBits` words, verified by exact Hamming ≤ `maxHamming`.
     *
     * Pigeonhole: a pair at Hamming h is GUARANTEED found when
     * h < 64/bandBits. The default `bandBits = 8` (8 words) is therefore
@@ -60,22 +63,30 @@ object ImageDedup {
       logDroppedBuckets: Boolean, failOnCappedBuckets: Boolean,
       auditName: String, bandBits: Int = 8): DataFrame = {
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    val banded = bandRows(hashed, idCol, hashCol, bandBits)
-    val capped = auditedOrCapped(banded, Seq("word", "bucket"), idCol,
+    hammingPairs(bandRows(hashed, idCol, hashCol, bandBits), Seq("word", "bucket"),
+      idCol, hashCol, maxHamming, maxBucket, logDroppedBuckets, failOnCappedBuckets, auditName)
+  }
+
+  /** The Hamming miners' shared tail over banded rows: audit or cap the
+    * buckets ([[auditedOrCapped]]), self-join on the band keys, verify
+    * exact Hamming ≤ `maxHamming`, dedup the pairs.
+    *
+    * Hamming-verify runs BEFORE the pair-dedup shuffle: hamming is a
+    * pure function of the pair's two hashes, so every banded copy of a
+    * pair carries the identical value and filtering first changes
+    * nothing — but the dropDuplicates
+    * exchange now moves only ≤-radius pairs instead of every band
+    * collision (the overwhelming majority at corpus scale is far outside
+    * the radius). Catalyst cannot push this itself: the filter sits above
+    * an aggregate-kept value, not a grouping key. */
+  private def hammingPairs(banded: DataFrame, keys: Seq[String], idCol: String,
+      hashCol: String, maxHamming: Int, maxBucket: Int, logDroppedBuckets: Boolean,
+      failOnCappedBuckets: Boolean, auditName: String): DataFrame = {
+    val capped = auditedOrCapped(banded, keys, idCol,
       maxBucket, logDroppedBuckets, failOnCappedBuckets, auditName)
-    val left = capped.select(col("word"), col("bucket"),
-      col(idCol).as("id_a"), col(hashCol).as("ha"))
-    val right = capped.select(col("word"), col("bucket"),
-      col(idCol).as("id_b"), col(hashCol).as("hb"))
-    // Hamming-verify BEFORE the pair-dedup shuffle (guide §2.3 "shuffle
-    // fewer bytes"): hamming is a pure function of the pair's two hashes,
-    // so every banded copy of a pair carries the identical value and
-    // filtering first changes nothing — but the dropDuplicates exchange
-    // now moves only ≤-radius pairs instead of every band collision
-    // (the overwhelming majority at corpus scale is far outside the
-    // radius). Catalyst cannot push this itself: the filter sits above
-    // an aggregate-kept value, not a grouping key.
-    left.join(right, Seq("word", "bucket"))
+    def side(id: String, hash: String) =
+      capped.select(keys.map(col) :+ col(idCol).as(id) :+ col(hashCol).as(hash): _*)
+    side("id_a", "ha").join(side("id_b", "hb"), keys)
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
@@ -159,22 +170,8 @@ object ImageDedup {
     require(maxHamming >= 0 && maxHamming <= blocks - pick,
       s"combo banding is complete only to blocks - pick = ${blocks - pick}; " +
         s"got maxHamming = $maxHamming (raise blocks or lower pick)")
-    val banded = comboBandRows(hashed, idCol, hashCol, blocks, pick)
-    val capped = auditedOrCapped(banded, Seq("band", "bkey"), idCol,
-      maxBucket, logDroppedBuckets, failOnCappedBuckets, auditName)
-    val left = capped.select(col("band"), col("bkey"),
-      col(idCol).as("id_a"), col(hashCol).as("ha"))
-    val right = capped.select(col("band"), col("bkey"),
-      col(idCol).as("id_b"), col(hashCol).as("hb"))
-    // verify before the pair-dedup shuffle — see hamming64NearDuplicates:
-    // identical rows out (hamming is pair-functional), far fewer rows
-    // through the dropDuplicates exchange
-    left.join(right, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
+    hammingPairs(comboBandRows(hashed, idCol, hashCol, blocks, pick), Seq("band", "bkey"),
+      idCol, hashCol, maxHamming, maxBucket, logDroppedBuckets, failOnCappedBuckets, auditName)
   }
 
   /** Block boundaries for [[comboBandRows]]: 64 bits into `blocks`

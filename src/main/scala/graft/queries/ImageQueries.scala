@@ -83,9 +83,7 @@ object ImageQueries {
         maxHamming = 8, failOnCappedBuckets = true,
         hashed0 = Some(imageHashFor(s, dir)))
       val comps = graft.pipeline.Dedup.connectedComponents(pairs, "id_a", "id_b")
-      imageHashFor(s, dir).join(
-        comps.filter(col("id") =!= col("comp")).select(col("id").as("doc_id")),
-        Seq("doc_id"), "left_anti")
+      graft.pipeline.Dedup.keepOnePerComponent(imageHashFor(s, dir), comps, "doc_id")
         .select(col("doc_id"), col("dhash"))
     }),
 

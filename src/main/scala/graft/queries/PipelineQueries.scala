@@ -394,9 +394,7 @@ object PipelineQueries {
       val docs = table(s, dir, "documents")
       val comps = Dedup.minHashComponents(docs, "doc_id", "text", threshold = 0.4,
         repPairs0 = Some(minhashRepPairsFor(s, dir)))
-      docs.join(
-        comps.filter(col("id") =!= col("comp")).select(col("id").as("doc_id")),
-        Seq("doc_id"), "left_anti")
+      Dedup.keepOnePerComponent(docs, comps, "doc_id")
         .select(col("doc_id"), col("n_chars"))
     }),
 
@@ -428,9 +426,7 @@ object PipelineQueries {
       val comps = Dedup.cosineComponents(emb, "vec_id", "embedding",
         maxCosineDistance = 0.5, IndexQueries.lshP,
         candidates = Some(semanticCandsFor(s, dir)))
-      emb.join(
-        comps.filter(col("id") =!= col("comp")).select(col("id").as("vec_id")),
-        Seq("vec_id"), "left_anti")
+      Dedup.keepOnePerComponent(emb, comps, "vec_id")
         .select(col("vec_id"), col("label"))
     }),
 
@@ -943,9 +939,7 @@ object PipelineQueries {
     "text_dedup_keep_planted" -> ((s, dir) => {
       val docs = plantedDocs(s, dir)
       val comps = Dedup.minHashComponents(docs, "doc_id", "text", threshold = 1.0)
-      docs.join(
-        comps.filter(col("id") =!= col("comp")).select(col("id").as("doc_id")),
-        Seq("doc_id"), "left_anti")
+      Dedup.keepOnePerComponent(docs, comps, "doc_id")
         .select(col("doc_id"), length(col("text")).cast("long").as("n_len"))
     }),
 

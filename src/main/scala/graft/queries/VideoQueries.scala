@@ -64,9 +64,7 @@ object VideoQueries {
         maxHamming = 8, failOnCappedBuckets = true,
         hashed0 = Some(videoHashFor(s, dir)))
       val comps = graft.pipeline.Dedup.connectedComponents(pairs, "id_a", "id_b")
-      videoHashFor(s, dir).join(
-        comps.filter(col("id") =!= col("comp")).select(col("id").as("doc_id")),
-        Seq("doc_id"), "left_anti")
+      graft.pipeline.Dedup.keepOnePerComponent(videoHashFor(s, dir), comps, "doc_id")
         .select(col("doc_id"), col("vhash"))
     }),
 

@@ -143,9 +143,7 @@ object StreamingDedup {
     val comps = Dedup.cosineComponents(docs, idCol, vecCol, maxCosineDistance, params,
       candidates = Some(Dedup.cosineCandidateDistances(docs, idCol, vecCol, params,
         coded0 = Some(repCodes))))
-    val batchKeep = docs.join(
-        comps.filter(col("id") =!= col("comp")).select(col("id").as(idCol)),
-        Seq(idCol), "left_anti")
+    val batchKeep = Dedup.keepOnePerComponent(docs, comps, idCol)
       .localCheckpoint(false)
 
     val batchCodes = repCodes
@@ -263,9 +261,7 @@ object StreamingDedup {
       maxHamming, maxBucket, logDroppedBuckets = false,
       failOnCappedBuckets = failOnCappedBuckets, auditName = "stream_image")
     val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    val batchKeep = hashed.join(
-        comps.filter(col("id") =!= col("comp")).select(col("id").as(idCol)),
-        Seq(idCol), "left_anti")
+    val batchKeep = Dedup.keepOnePerComponent(hashed, comps, idCol)
       .localCheckpoint(false)
     val bucketDirs = priorCommittedDirs(spark, s"$storePath/buckets", batchId)
     val survivors =
@@ -385,9 +381,7 @@ object StreamingDedup {
       shingleSize, numHashes, bands, repPairs0 = Some(
         Dedup.minHashPairsFromBands(repBands, docs, idCol, textCol,
           threshold, shingleSize)))
-    val batchKeep = docs.join(
-        comps.filter(col("id") =!= col("comp")).select(col("id").as(idCol)),
-        Seq(idCol), "left_anti")
+    val batchKeep = Dedup.keepOnePerComponent(docs, comps, idCol)
       .localCheckpoint(false)
 
     val batchBands = repBands

@@ -193,13 +193,40 @@ class DedupSpec extends SparkSpec {
 
   test("simhash skew: identical docs contribute one rep; clique re-expands") {
     val df = ((1L to 100L).map(i => (i, base)) :+ (500L, near)).toDF("doc_id", "text")
-    val repPairs = Dedup.simHashNearDuplicates(df, "doc_id", "text",
-      maxHamming = 10, expandDuplicates = false)
-    // only the (rep=1, 500) pair is verified at rep level
-    assert(repPairs.count() <= 1L)
-    val full = Dedup.simHashNearDuplicates(df, "doc_id", "text", maxHamming = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(full.count(_._3 == 0L) === 100 * 99 / 2) // intra clique at hamming 0
+    // logDroppedBuckets = true audits the buckets first and, finding no
+    // overflow, skips the row_number cap window: same pairs either way
+    val runs = Seq(false, true).map { logDrops =>
+      val repPairs = Dedup.simHashNearDuplicates(df, "doc_id", "text",
+        maxHamming = 10, expandDuplicates = false, logDroppedBuckets = logDrops)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      // only the (rep=1, 500) pair is verified at rep level
+      assert(repPairs.length <= 1)
+      val full = Dedup.simHashNearDuplicates(df, "doc_id", "text", maxHamming = 10,
+          logDroppedBuckets = logDrops)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(full.count(_._3 == 0L) === 100 * 99 / 2) // intra clique at hamming 0
+      (repPairs.toSet, full.toSet)
+    }
+    assert(runs(1) === runs(0))
+  }
+
+  test("simhash rejects a negative radius, even for identical texts") {
+    // docs 1 and 2 are identical (Hamming 0), still outside any radius < 0
+    val memoized = Seq.empty[(Long, Long, Long)].toDF("id_a", "id_b", "hamming")
+    intercept[IllegalArgumentException] {
+      Dedup.simHashNearDuplicates(docs, "doc_id", "text", maxHamming = -1)
+    }
+    intercept[IllegalArgumentException] {
+      Dedup.simHashNearDuplicates(docs, "doc_id", "text", maxHamming = -1,
+        repPairs0 = Some(memoized))
+    }
+    intercept[IllegalArgumentException] {
+      Dedup.simHashComponents(docs, "doc_id", "text", maxHamming = -1)
+    }
+    intercept[IllegalArgumentException] {
+      Dedup.simHashComponents(docs, "doc_id", "text", maxHamming = -1,
+        repPairs0 = Some(memoized))
+    }
   }
 
   test("connected components resolve pair graphs to min-id clusters") {
@@ -345,10 +372,8 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps === oracle)
     assert(comps === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
-    val kept = df.join(
-      Dedup.minHashComponents(df, "doc_id", "text", threshold = 0.4)
-        .filter(col("id") =!= col("comp")).select(col("id").as("doc_id")),
-      Seq("doc_id"), "left_anti")
+    val kept = Dedup.keepOnePerComponent(df,
+        Dedup.minHashComponents(df, "doc_id", "text", threshold = 0.4), "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(kept === Seq(1L, 4L, 5L, 7L, 10L, 11L))
   }
@@ -424,6 +449,36 @@ class DedupSpec extends SparkSpec {
     // without strict mode the same mining call succeeds (recall loss only)
     Dedup.cosineCandidateDistances(emb, "vec_id", "embedding",
       LshParams.serving(64), maxBucket = 2).collect()
+  }
+
+  test("IVF-blocked mining: full assignment yields every rep pair; a binding strict cap throws") {
+    val rnd = new scala.util.Random(5)
+    val vecs = (1L to 12L).map(i => (i, Array.fill(16)(rnd.nextFloat() - 0.5f)))
+    // 13 duplicates 1's value: it collapses into rep 1 and never pairs
+    val emb = (vecs :+ ((13L, vecs.head._2.clone()))).toDF("vec_id", "embedding")
+    val centers = Array.fill(3)(Array.fill(16)(rnd.nextFloat() - 0.5f))
+    // nAssign = every center: all reps share every cell, so the blocked
+    // candidates are ALL rep pairs, verified by the exact cosine distance
+    val mined = Dedup.cosineIvfCandidateDistances(emb, "vec_id", "embedding",
+        centers, nAssign = centers.length)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(p => (p._1, p._2)).toSeq
+    val reps = emb.filter($"vec_id" <= 12L)
+    val brute = reps.as("a").crossJoin(reps.as("b"))
+      .filter($"a.vec_id" < $"b.vec_id")
+      .select($"a.vec_id", $"b.vec_id",
+        round(graft.functions.Distances.cosineDistance($"a.embedding", $"b.embedding"), 6))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(p => (p._1, p._2)).toSeq
+    assert(mined.length === 12 * 11 / 2)
+    assert(mined === brute)
+    // every cell holds all 12 reps: a cap of 5 binds, and strict mode
+    // says so at mining time (the LSH twin's contract)
+    val e = intercept[IllegalStateException] {
+      Dedup.cosineIvfCandidateDistances(emb, "vec_id", "embedding", centers,
+        nAssign = centers.length, maxBucket = 5, failOnCappedBuckets = true)
+    }
+    assert(e.getMessage.contains("bucket cap"), e.getMessage)
   }
 
   test("keepBestByJaccard keeps the quality-argmax per component, singletons survive") {
