@@ -311,6 +311,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   /** Update preserves the id but DROPS tags and attributes — the reference
     * builds the replacement from (values, text) only (VectorList.cs:184-187). */
   def updateVector(id: String, values: Array[Float], originalText: String = ""): Boolean = {
+    requireDimension(values)
     if (getVector(id).isEmpty) false
     else {
       mutate(df.filter(col("id") =!= id)
@@ -324,6 +325,13 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     else { mutate(df.filter(col("id") =!= id)); true }
   }
 
+  /** A stored row or a query must have the table's dimension (enforced at
+    * ingest, SURVEY §1.4): every kernel reads min(|a|, |b|) elements, so a
+    * short query would be scored over a prefix of each row. */
+  private def requireDimension(values: Array[Float]): Unit =
+    require(values.length == dimension,
+      s"dimension ${values.length} != table dimension $dimension (enforced at ingest, SURVEY §1.4)")
+
   /** Bulk record insert: ONE union plan rewrite and ONE mutation for the
     * whole batch (vs N rewrites + N plan-growth ticks of per-record
     * `addVector`). Returns the assigned ids in input order — blank ids
@@ -331,8 +339,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   def addVectorRecords(rs: Seq[VectorRecord]): Seq[String] = {
     if (rs.isEmpty) return Seq.empty
     val withIds = rs.map { r =>
-      require(r.values.length == dimension,
-        s"dimension ${r.values.length} != table dimension $dimension (enforced at ingest, SURVEY §1.4)")
+      requireDimension(r.values)
       if (r.id == null || r.id.isEmpty) r.copy(id = java.util.UUID.randomUUID().toString) else r
     }
     mutate(df.unionByName(frameOf(withIds)))
@@ -454,8 +461,10 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * Returns (id, dist) ordered by (dist, id). */
   def search(query: Array[Float], k: Int,
       algorithm: SearchAlgorithm.Value = SearchAlgorithm.KDTree,
-      similarityThreshold: Double = 0.5): DataFrame =
+      similarityThreshold: Double = 0.5): DataFrame = {
+    requireDimension(query)
     hitFrame(dispatch(query, k, algorithm, Some(similarityThreshold)))
+  }
 
   /** kNN returning FULL records with their distances — the serving path
     * must not run k+1 driver jobs — mirroring the reference's direct
@@ -470,6 +479,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   def searchRecords(query: Array[Float], k: Int,
       algorithm: SearchAlgorithm.Value = SearchAlgorithm.KDTree,
       similarityThreshold: Double = 0.5): Seq[(VectorRecord, Double)] = metrics.timed {
+    requireDimension(query)
     spark.sparkContext.setJobGroup(metrics.serveGroup, s"searchRecords(k=$k, $algorithm)")
     try dispatch(query, k, algorithm, Some(similarityThreshold)) match {
       case Left(recs) => recs
@@ -498,6 +508,20 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   def rangeSearch(query: Array[Float], radius: Double,
       algorithm: SearchAlgorithm.Value = SearchAlgorithm.Range,
       metric: String = "euclidean"): DataFrame = {
+    requireDimension(query)
+    withinRadius(query, radius, algorithm, metric)
+  }
+
+  /** Radius search by text (SearchService.cs RangeSearch(text, …): embed
+    * then range, same algorithm gating). */
+  def rangeSearch(text: String, radius: Double,
+      algorithm: SearchAlgorithm.Value, metric: String): DataFrame = {
+    require(text != null && text.trim.nonEmpty, "Text cannot be null or empty")
+    withinRadius(embeddingProvider.embed(text), radius, algorithm, metric)
+  }
+
+  private def withinRadius(query: Array[Float], radius: Double,
+      algorithm: SearchAlgorithm.Value, metric: String): DataFrame = {
     import SearchAlgorithm._
     algorithm match {
       case Linear | Range | KDTree =>
@@ -506,14 +530,6 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
         throw new UnsupportedOperationException(
           s"Range search is not supported for algorithm $other (parity with SearchService.cs:246-247)")
     }
-  }
-
-  /** Radius search by text (SearchService.cs RangeSearch(text, …): embed
-    * then range, same algorithm gating). */
-  def rangeSearch(text: String, radius: Double,
-      algorithm: SearchAlgorithm.Value, metric: String): DataFrame = {
-    require(text != null && text.trim.nonEmpty, "Text cannot be null or empty")
-    rangeSearch(embeddingProvider.embed(text), radius, algorithm, metric)
   }
 
   /** Fit/refresh every index artifact — the facade analog of the

@@ -8,44 +8,49 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
-/** Asymmetric Distance Computation for Product Quantization
-  * (ProductQuantization.cs:330-379): the query's per-block distance² to
-  * every centroid is precomputed driver-side into `tables[block][code]`;
-  * each row's approximate distance is then
-  * `sqrt(Σ_b tables[b][codes[b]])` — a table lookup per block, no float
-  * math over the original vector. Codegen kernel with the lookup tables as
-  * a reference object.
-  */
-case class AdcExpr(child: Expression, tables: Array[Array[Double]])
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"adc_dist requires ARRAY<INT> codes, got ${t.simpleString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "adc_dist"
-  override protected def withNewChildInternal(c: Expression): AdcExpr = copy(child = c)
-
-  override def nullSafeEval(a: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
+/** The ADC kernels: `sqrt(Σ_b tables[b][codes[b]])` over the first
+  * min(|codes|, |tables|) blocks, with the tables as driver-side arrays
+  * ([[AdcExpr]]) or as a per-row column value ([[AdcLookupExpr]]). The
+  * same block order and double sum, so both are bit-identical on the same
+  * (codes, tables). */
+object Adc {
+  def compute(codes: ArrayData, tables: Array[Array[Double]]): Double = {
     val m = math.min(codes.numElements(), tables.length)
     var s = 0.0; var b = 0
     while (b < m) { s += tables(b)(codes.getInt(b)); b += 1 }
     math.sqrt(s)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val tab = ctx.addReferenceObj("adcTables", tables, "double[][]")
-      val b = ctx.freshName("b"); val m = ctx.freshName("m"); val s = ctx.freshName("s")
-      s"""int $m = java.lang.Math.min($a.numElements(), $tab.length);
-         |double $s = 0.0;
-         |for (int $b = 0; $b < $m; $b++) {
-         |  $s += $tab[$b][$a.getInt($b)];
-         |}
-         |${ev.value} = java.lang.Math.sqrt($s);""".stripMargin
-    })
+  def lookup(codes: ArrayData, tables: ArrayData): Double = {
+    val m = math.min(codes.numElements(), tables.numElements())
+    var s = 0.0; var b = 0
+    while (b < m) { s += tables.getArray(b).getDouble(codes.getInt(b)); b += 1 }
+    math.sqrt(s)
+  }
+}
+
+/** Asymmetric Distance Computation for Product Quantization
+  * (ProductQuantization.cs:330-379): the query's per-block distance² to
+  * every centroid is precomputed driver-side into `tables[block][code]`;
+  * each row's approximate distance is then
+  * `sqrt(Σ_b tables[b][codes[b]])` — a table lookup per block, no float
+  * math over the original vector ([[Adc.compute]], with the lookup tables
+  * as a codegen reference object).
+  */
+case class AdcExpr(child: Expression, tables: Array[Array[Double]])
+    extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "ARRAY<INT> codes") { case ArrayType(IntegerType, _) => }
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "adc_dist"
+  override protected def withNewChildInternal(c: Expression): AdcExpr = copy(child = c)
+
+  override def nullSafeEval(a: Any): Any = Adc.compute(a.asInstanceOf[ArrayData], tables)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tab = ctx.addReferenceObj("adcTables", tables, "double[][]")
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.Adc.compute($a, $tab);")
+  }
 }
 
 object AdcExpr {
@@ -72,25 +77,11 @@ case class AdcLookupExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcLookupExpr =
     copy(left = l, right = r)
 
-  override def nullSafeEval(c: Any, t: Any): Any = {
-    val codes = c.asInstanceOf[ArrayData]
-    val tables = t.asInstanceOf[ArrayData]
-    val m = math.min(codes.numElements(), tables.numElements())
-    var s = 0.0; var b = 0
-    while (b < m) { s += tables.getArray(b).getDouble(codes.getInt(b)); b += 1 }
-    math.sqrt(s)
-  }
+  override def nullSafeEval(c: Any, t: Any): Any =
+    Adc.lookup(c.asInstanceOf[ArrayData], t.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, t) => {
-      val b = ctx.freshName("b"); val m = ctx.freshName("m"); val s = ctx.freshName("s")
-      s"""int $m = java.lang.Math.min($c.numElements(), $t.numElements());
-         |double $s = 0.0;
-         |for (int $b = 0; $b < $m; $b++) {
-         |  $s += $t.getArray($b).getDouble($c.getInt($b));
-         |}
-         |${ev.value} = java.lang.Math.sqrt($s);""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (c, t) => s"${ev.value} = graft.functions.Adc.lookup($c, $t);")
 }
 
 object AdcLookupExpr {

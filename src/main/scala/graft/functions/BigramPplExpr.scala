@@ -97,11 +97,8 @@ case class BigramPplExpr(child: Expression, numMicro: Seq[Long],
   @transient private lazy val numArr = numMicro.toArray
   @transient private lazy val denArr = denMicro.toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bigram_ppl requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("micro", LongType, nullable = false)))

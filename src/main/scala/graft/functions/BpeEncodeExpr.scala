@@ -111,11 +111,8 @@ case class BpeEncodeExpr(child: Expression, lefts: Array[String], rights: Array[
   require(lefts.length == rights.length,
     s"bpe_encode rule halves differ: ${lefts.length} vs ${rights.length}")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = StringType
   override def prettyName: String = "bpe_encode"
   override protected def withNewChildInternal(c: Expression): BpeEncodeExpr = copy(child = c)

@@ -10,13 +10,29 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
 
 /** Micro-unit squared distance from a float vector to ITS OWN group's
   * centroid: `Σ (⌊xᵢ·1e6+0.5⌋ − c[label]ᵢ)²` — the per-label outlier
-  * residual as ONE whole-stage-codegen kernel. The zip_with/aggregate
-  * higher-order formulation it replaces is CodegenFallback in Spark
+  * residual as ONE whole-stage-codegen kernel ([[CentroidDist2.compute]]).
+  * The zip_with/aggregate higher-order formulation it replaces is
+  * CodegenFallback in Spark
   * (interpreted per row, boxed lambda dispatch in the hot path); here
   * the centroid table rides as a codegen reference object indexed by a
   * dense label→row map. A label with no centroid yields −1 (callers
   * guarantee coverage — the map is built from the same frame).
   */
+object CentroidDist2 {
+  /** Σ (micro(vᵢ) − centers(labelIndex(label − minLabel))ᵢ)², or −1 when
+    * the label has no centroid. */
+  def compute(v: ArrayData, label: Int, minLabel: Int, labelIndex: Array[Int],
+      centers: Array[Array[Long]]): Long = {
+    val li = label - minLabel
+    if (li < 0 || li >= labelIndex.length || labelIndex(li) < 0) return -1L
+    val ctr = centers(labelIndex(li))
+    val n = math.min(v.numElements(), ctr.length)
+    var s = 0L; var i = 0
+    while (i < n) { val d = NearestCentroid.micro(v.getFloat(i).toDouble) - ctr(i); s += d * d; i += 1 }
+    s
+  }
+}
+
 case class CentroidDist2Expr(left: Expression, right: Expression,
     labels: Array[Int], centers: Array[Array[Long]])
     extends BinaryExpression {
@@ -43,41 +59,15 @@ case class CentroidDist2Expr(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CentroidDist2Expr =
     copy(left = l, right = r)
 
-  override def nullSafeEval(a: Any, lab: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val li = lab.asInstanceOf[Int] - minLabel
-    if (li < 0 || li >= labelIndex.length || labelIndex(li) < 0) return -1L
-    val ctr = centers(labelIndex(li))
-    val n = math.min(v.numElements(), ctr.length)
-    var s = 0L; var i = 0
-    while (i < n) {
-      val d = math.floor(v.getFloat(i).toDouble * 1e6 + 0.5).toLong - ctr(i)
-      s += d * d; i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, lab: Any): Any =
+    CentroidDist2.compute(a.asInstanceOf[ArrayData], lab.asInstanceOf[Int], minLabel, labelIndex, centers)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, lab) => {
-      val cen = ctx.addReferenceObj("odCenters", centers, "long[][]")
-      val idx = ctx.addReferenceObj("odLabelIdx", labelIndex, "int[]")
-      val li = ctx.freshName("li"); val ctr = ctx.freshName("ctr")
-      val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      val i = ctx.freshName("i"); val d = ctx.freshName("d")
-      s"""int $li = $lab - ($minLabel);
-         |if ($li < 0 || $li >= $idx.length || $idx[$li] < 0) {
-         |  ${ev.value} = -1L;
-         |} else {
-         |  long[] $ctr = $cen[$idx[$li]];
-         |  int $n = java.lang.Math.min($a.numElements(), $ctr.length);
-         |  long $s = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $d = (long) java.lang.Math.floor((double) $a.getFloat($i) * 1000000.0 + 0.5) - $ctr[$i];
-         |    $s += $d * $d;
-         |  }
-         |  ${ev.value} = $s;
-         |}""".stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cen = ctx.addReferenceObj("odCenters", centers, "long[][]")
+    val idx = ctx.addReferenceObj("odLabelIdx", labelIndex, "int[]")
+    nullSafeCodeGen(ctx, ev, (a, lab) =>
+      s"${ev.value} = graft.functions.CentroidDist2.compute($a, $lab, $minLabel, $idx, $cen);")
+  }
 }
 
 object CentroidDist2Expr {

@@ -87,11 +87,8 @@ object ImageHash {
 }
 
 case class DHashExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"image_dhash requires BINARY media, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "BINARY media") { case BinaryType => }
   override def dataType: DataType = LongType
   // NULL for undecodable payloads even when the input is non-null
   override def nullable: Boolean = true

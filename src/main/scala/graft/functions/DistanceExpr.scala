@@ -8,9 +8,14 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
-/** Shared float/double element access for array kernels: vectors are stored
-  * ARRAY<FLOAT>, but derived arrays (vector arithmetic) widen to
-  * ARRAY<DOUBLE>; the kernels handle both without an extra cast pass. */
+import FloatArrayKernel.at
+
+/** Float/double inputs for array kernels: vectors are stored ARRAY<FLOAT>,
+  * but derived arrays (vector arithmetic) widen to ARRAY<DOUBLE>. A kernel
+  * takes one flag per array input, `elemIsFloat` of the child (a Java
+  * literal in generated code), and reads elements through
+  * [[FloatArrayKernel.at]] — no cast pass, and one Scala loop for both
+  * element types. */
 trait FloatArrayKernel { self: Expression =>
   protected def arrayChildren: Seq[Expression]
 
@@ -29,34 +34,107 @@ trait FloatArrayKernel { self: Expression =>
       s"$prettyName requires ARRAY<FLOAT> or ARRAY<DOUBLE> inputs, got " +
         arrayChildren.map(_.dataType.simpleString).mkString(", "))
   }
-
-  /** Interpreted accessor: element i as double. */
-  protected def getter(e: Expression): (ArrayData, Int) => Double =
-    if (elemIsFloat(e)) (a, i) => a.getFloat(i).toDouble
-    else (a, i) => a.getDouble(i)
-
-  /** Codegen accessor: java source for element i as double. */
-  protected def jget(e: Expression, arr: String, i: String): String =
-    if (elemIsFloat(e)) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
 }
 
-/** Whole-stage-codegen distance kernels.
+object FloatArrayKernel {
+  /** Element i as double. */
+  def at(a: ArrayData, isFloat: Boolean, i: Int): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+}
+
+/** The type check of a one-input expression that accepts a single input
+  * type: success, or "<prettyName> requires <want>, got <type>". */
+private[functions] object InputType {
+  def check(e: UnaryExpression, want: String)(accepts: PartialFunction[DataType, Unit]): TypeCheckResult =
+    if (accepts.isDefinedAt(e.child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"${e.prettyName} requires $want, got ${e.child.dataType.simpleString}")
+}
+
+/** The distance kernels — one Scala loop per metric over two `ArrayData`
+  * buffers, each over the first min(|x|, |y|) elements.
   *
   * The reference ships SIMD / cache-aligned distance variants
   * (Neighborly/Distance/SimdEuclideanDistanceCalculator.cs,
   * CacheOptimizedDistanceCalculators.cs:10-120) purely as performance
-  * techniques. Here the same role is played by Catalyst codegen: each metric
-  * compiles to a tight primitive `for` loop over the two `ArrayData` buffers
-  * (no per-element boxing, no lambda dispatch — JIT auto-vectorizes), and the
-  * expression participates in whole-stage codegen so the kNN hot path stays
-  * in one generated function.
+  * techniques. Here [[DistanceExpr]]'s generated code is one static call
+  * into the metric's method below and its interpreted `eval` calls the same
+  * method, so both paths run one loop (no per-element boxing or lambda
+  * dispatch; the JIT inlines the call into the whole-stage-codegen
+  * function of the kNN hot path).
   *
   * Numerics match `Distances`' HOF forms exactly: every float widens to
-  * double and accumulates left-to-right, so results are bit-identical to the
-  * DuckDB oracle's sequential double fold.
+  * double and accumulates left-to-right, so results are bit-identical to
+  * the DuckDB oracle's sequential double fold.
   */
 object DistanceKernel extends Enumeration {
   val Euclidean, CosineSimilarity, Manhattan, Chebyshev, Minkowski3, Dot = Value
+
+  /** The method below that computes `k`: its name, lower camel case. */
+  private[functions] def method(k: Value): String = {
+    val s = k.toString
+    s"${s.head.toLower}${s.tail}"
+  }
+
+  def euclidean(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) { val d = at(x, xf, i) - at(y, yf, i); s += d * d; i += 1 }
+    math.sqrt(s)
+  }
+
+  def manhattan(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) { s += math.abs(at(x, xf, i) - at(y, yf, i)); i += 1 }
+    s
+  }
+
+  def chebyshev(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) { val d = math.abs(at(x, xf, i) - at(y, yf, i)); if (d > s) s = d; i += 1 }
+    s
+  }
+
+  def minkowski3(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) { val d = math.abs(at(x, xf, i) - at(y, yf, i)); s += d * d * d; i += 1 }
+    StrictMath.pow(s, 1.0 / 3.0)
+  }
+
+  def dot(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) { s += at(x, xf, i) * at(y, yf, i); i += 1 }
+    s
+  }
+
+  def cosineSimilarity(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val xa = at(x, xf, i); val yb = at(y, yf, i)
+      dot += xa * yb; na += xa * xa; nb += yb * yb; i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** sqrt(Σx²) (Vector.cs:270-273). */
+  def magnitude(x: ArrayData, xf: Boolean): Double = {
+    var s = 0.0; var i = 0
+    while (i < x.numElements()) { val v = at(x, xf, i); s += v * v; i += 1 }
+    math.sqrt(s)
+  }
+
+  /** XOR + popcount over sign-bit-packed words (BinaryQuantization.cs:30-55). */
+  def hammingPacked(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L; var i = 0
+    while (i < n) { s += java.lang.Long.bitCount(x.getLong(i) ^ y.getLong(i)); i += 1 }
+    s
+  }
 }
 
 case class DistanceExpr(left: Expression, right: Expression,
@@ -71,109 +149,25 @@ case class DistanceExpr(left: Expression, right: Expression,
     copy(left = l, right = r)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val gx = getter(left); val gy = getter(right)
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0
+    val x = a.asInstanceOf[ArrayData]; val xf = elemIsFloat(left)
+    val y = b.asInstanceOf[ArrayData]; val yf = elemIsFloat(right)
     kernel match {
-      case DistanceKernel.Euclidean =>
-        var s = 0.0
-        while (i < n) { val d = gx(x, i) - gy(y, i); s += d * d; i += 1 }
-        math.sqrt(s)
-      case DistanceKernel.Manhattan =>
-        var s = 0.0
-        while (i < n) { s += math.abs(gx(x, i) - gy(y, i)); i += 1 }
-        s
-      case DistanceKernel.Chebyshev =>
-        var s = 0.0
-        while (i < n) { val d = math.abs(gx(x, i) - gy(y, i)); if (d > s) s = d; i += 1 }
-        s
-      case DistanceKernel.Minkowski3 =>
-        var s = 0.0
-        while (i < n) { val d = math.abs(gx(x, i) - gy(y, i)); s += d * d * d; i += 1 }
-        StrictMath.pow(s, 1.0 / 3.0)
-      case DistanceKernel.Dot =>
-        var s = 0.0
-        while (i < n) { s += gx(x, i) * gy(y, i); i += 1 }
-        s
-      case DistanceKernel.CosineSimilarity =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        while (i < n) {
-          val xa = gx(x, i); val yb = gy(y, i)
-          dot += xa * yb; na += xa * xa; nb += yb * yb; i += 1
-        }
-        dot / (math.sqrt(na) * math.sqrt(nb))
+      case DistanceKernel.Euclidean => DistanceKernel.euclidean(x, xf, y, yf)
+      case DistanceKernel.CosineSimilarity => DistanceKernel.cosineSimilarity(x, xf, y, yf)
+      case DistanceKernel.Manhattan => DistanceKernel.manhattan(x, xf, y, yf)
+      case DistanceKernel.Chebyshev => DistanceKernel.chebyshev(x, xf, y, yf)
+      case DistanceKernel.Minkowski3 => DistanceKernel.minkowski3(x, xf, y, yf)
+      case DistanceKernel.Dot => DistanceKernel.dot(x, xf, y, yf)
     }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val header = s"int $n = java.lang.Math.min($a.numElements(), $b.numElements());"
-      def ga = jget(left, a, i)
-      def gb = jget(right, b, i)
-      kernel match {
-        case DistanceKernel.Euclidean =>
-          val s = ctx.freshName("s"); val d = ctx.freshName("d")
-          s"""$header
-             |double $s = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  double $d = $ga - $gb;
-             |  $s += $d * $d;
-             |}
-             |${ev.value} = java.lang.Math.sqrt($s);""".stripMargin
-        case DistanceKernel.Manhattan =>
-          val s = ctx.freshName("s")
-          s"""$header
-             |double $s = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $s += java.lang.Math.abs($ga - $gb);
-             |}
-             |${ev.value} = $s;""".stripMargin
-        case DistanceKernel.Chebyshev =>
-          val s = ctx.freshName("s"); val d = ctx.freshName("d")
-          s"""$header
-             |double $s = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  double $d = java.lang.Math.abs($ga - $gb);
-             |  if ($d > $s) $s = $d;
-             |}
-             |${ev.value} = $s;""".stripMargin
-        case DistanceKernel.Minkowski3 =>
-          val s = ctx.freshName("s"); val d = ctx.freshName("d")
-          s"""$header
-             |double $s = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  double $d = java.lang.Math.abs($ga - $gb);
-             |  $s += $d * $d * $d;
-             |}
-             |${ev.value} = java.lang.StrictMath.pow($s, 1.0 / 3.0);""".stripMargin
-        case DistanceKernel.Dot =>
-          val s = ctx.freshName("s")
-          s"""$header
-             |double $s = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $s += $ga * $gb;
-             |}
-             |${ev.value} = $s;""".stripMargin
-        case DistanceKernel.CosineSimilarity =>
-          val dt = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-          val xa = ctx.freshName("xa"); val yb = ctx.freshName("yb")
-          s"""$header
-             |double $dt = 0.0; double $na = 0.0; double $nb = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  double $xa = $ga;
-             |  double $yb = $gb;
-             |  $dt += $xa * $yb; $na += $xa * $xa; $nb += $yb * $yb;
-             |}
-             |${ev.value} = $dt / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));""".stripMargin
-      }
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.DistanceKernel.${DistanceKernel.method(kernel)}(" +
+        s"$a, ${elemIsFloat(left)}, $b, ${elemIsFloat(right)});")
 }
 
-/** sqrt(Σx²) as a codegen kernel (Vector.cs:270-273). */
+/** sqrt(Σx²) as a codegen expression over [[DistanceKernel.magnitude]]. */
 case class MagnitudeExpr(child: Expression) extends UnaryExpression with FloatArrayKernel {
   override protected def arrayChildren: Seq[Expression] = Seq(child)
   override def checkInputDataTypes(): TypeCheckResult = checkFloatArrayInputs()
@@ -181,28 +175,16 @@ case class MagnitudeExpr(child: Expression) extends UnaryExpression with FloatAr
   override def prettyName: String = "vec_magnitude"
   override protected def withNewChildInternal(c: Expression): MagnitudeExpr = copy(child = c)
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val g = getter(child)
-    var s = 0.0; var i = 0
-    while (i < x.numElements()) { val v = g(x, i); s += v * v; i += 1 }
-    math.sqrt(s)
-  }
+  override def nullSafeEval(a: Any): Any =
+    DistanceKernel.magnitude(a.asInstanceOf[ArrayData], elemIsFloat(child))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val s = ctx.freshName("s"); val v = ctx.freshName("v")
-      s"""double $s = 0.0;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  double $v = ${jget(child, a, i)};
-         |  $s += $v * $v;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($s);""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.DistanceKernel.magnitude($a, ${elemIsFloat(child)});")
 }
 
-/** XOR+popcount Hamming distance over sign-bit-packed BIGINT words
-  * (BinaryQuantization.cs:30-55). */
+/** Packed Hamming distance as a codegen expression over
+  * [[DistanceKernel.hammingPacked]]. */
 case class HammingPackedExpr(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
@@ -211,25 +193,12 @@ case class HammingPackedExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): HammingPackedExpr =
     copy(left = l, right = r)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L; var i = 0
-    while (i < n) { s += java.lang.Long.bitCount(x.getLong(i) ^ y.getLong(i)); i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DistanceKernel.hammingPacked(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      s"""int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += java.lang.Long.bitCount($a.getLong($i) ^ $b.getLong($i));
-         |}
-         |${ev.value} = $s;""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.DistanceKernel.hammingPacked($a, $b);")
 }
 
 object DistanceExpr {

@@ -7,13 +7,15 @@ import org.apache.spark.sql.functions._
   * family re-expressed as Spark `Column` builders
   * (reference: the calculators under Neighborly/Distance/; dispatch Vector.cs:194-200).
   *
-  * Each metric is backed by a whole-stage-codegen Catalyst kernel
-  * (`graft.functions.DistanceExpr`): a tight primitive loop over the two
-  * float arrays, widening to double and accumulating left-to-right — so
-  * results are bit-comparable with a sequential double-precision oracle
-  * while the hot path stays inside generated code (the Spark analog of the
-  * reference's SIMD variants, SimdEuclideanDistanceCalculator.cs /
-  * CacheOptimizedDistanceCalculators.cs — performance, not semantics).
+  * Each metric is a whole-stage-codegen Catalyst expression
+  * (`graft.functions.DistanceExpr`) whose generated code and interpreted
+  * `eval` both call the metric's one Scala kernel on `DistanceKernel`: a
+  * primitive loop over the two arrays, widening to double and
+  * accumulating left-to-right — so results are bit-comparable with a
+  * sequential double-precision oracle while the hot path stays inside
+  * generated code (the Spark analog of the reference's SIMD variants,
+  * SimdEuclideanDistanceCalculator.cs / CacheOptimizedDistanceCalculators.cs
+  * — performance, not semantics).
   *
   * `Distances.Hof` keeps the equivalent `aggregate`/`zip_with` higher-order
   * -function forms; the test suite asserts kernel ≡ HOF on random vectors.

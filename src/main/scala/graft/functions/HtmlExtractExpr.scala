@@ -118,11 +118,8 @@ case class HtmlExtractExpr(child: Expression, minLen: Int, linkRatio: Int)
   require(minLen >= 0, s"minLen must be >= 0, got $minLen")
   require(linkRatio >= 1, s"linkRatio must be >= 1, got $linkRatio")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"html_extract requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = StringType
   override def prettyName: String = "html_extract"
   override protected def withNewChildInternal(c: Expression): HtmlExtractExpr =

@@ -147,11 +147,8 @@ object ImgPairs {
 }
 
 case class ImgPairsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"img_pairs requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("src", StringType, nullable = false),
     StructField("alt", StringType, nullable = false),

@@ -12,15 +12,39 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * output j = Σᵢ sign(i,j)·⌊xᵢ·1e6 + 0.5⌋ over the Achlioptas-sparse
   * md5-derived ±1/0 sign matrix (see
   * [[graft.pipeline.EmbeddingOps.jlSign]]). The matrix rides along as a
-  * codegen reference object and the generated code is a dOut×dIn nested
-  * primitive loop — the column-expression formulation of the same sum
-  * unrolls to a dOut×(dIn/3)-term tree that blows Janino's 64 KB method
-  * limit and knocks the whole stage out of codegen at dIn = 64.
+  * codegen reference object and the generated code is one call to
+  * `compute`, a dOut×dIn nested primitive loop — the column-expression
+  * formulation of the same sum unrolls to a dOut×(dIn/3)-term tree that
+  * blows Janino's 64 KB method limit and knocks the whole stage out of
+  * codegen at dIn = 64.
   *
   * Bit-exactness: every term is an exact integer (micro-frozen input),
   * so the loop order is immaterial and a SQL oracle replays the sum
   * from `generate_series` without ulp risk.
   */
+object JlProject {
+  /** Row j of the output is Σᵢ signs(j)(i)·micro(xᵢ) over the first
+    * min(dIn, |x|) elements. */
+  def compute(x: ArrayData, xf: Boolean, signs: Array[Array[Byte]], dIn: Int): Array[Long] = {
+    val m = math.min(dIn, x.numElements())
+    val out = new Array[Long](signs.length)
+    var j = 0
+    while (j < out.length) {
+      val row = signs(j)
+      var acc = 0L
+      var i = 0
+      while (i < m) {
+        val s = row(i)
+        if (s != 0) acc += s * NearestCentroid.micro(FloatArrayKernel.at(x, xf, i))
+        i += 1
+      }
+      out(j) = acc
+      j += 1
+    }
+    out
+  }
+}
+
 case class JlProjectExpr(child: Expression, dIn: Int, dOut: Int, salt: String)
     extends UnaryExpression with FloatArrayKernel {
   require(dIn >= 1 && dOut >= 1, s"dims must be >= 1, got $dIn -> $dOut")
@@ -37,48 +61,15 @@ case class JlProjectExpr(child: Expression, dIn: Int, dOut: Int, salt: String)
     Array.tabulate(dOut, dIn)((j, i) =>
       graft.pipeline.EmbeddingOps.jlSign(i, j, salt).toByte)
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val g = getter(child)
-    val m = math.min(dIn, x.numElements())
-    val out = new Array[Long](dOut)
-    var j = 0
-    while (j < dOut) {
-      val row = signs(j)
-      var acc = 0L
-      var i = 0
-      while (i < m) {
-        val s = row(i)
-        if (s != 0) acc += s * math.floor(g(x, i) * 1e6 + 0.5).toLong
-        i += 1
-      }
-      out(j) = acc
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any =
+    new GenericArrayData(JlProject.compute(a.asInstanceOf[ArrayData], elemIsFloat(child), signs, dIn))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val sg = ctx.addReferenceObj("jlSigns", signs, "byte[][]")
-      val m = ctx.freshName("m"); val out = ctx.freshName("out")
-      val j = ctx.freshName("j"); val i = ctx.freshName("i")
-      val row = ctx.freshName("row"); val acc = ctx.freshName("acc")
-      val s = ctx.freshName("s")
-      s"""int $m = java.lang.Math.min($dIn, $a.numElements());
-         |long[] $out = new long[$dOut];
-         |for (int $j = 0; $j < $dOut; $j++) {
-         |  byte[] $row = $sg[$j];
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    byte $s = $row[$i];
-         |    if ($s != 0)
-         |      $acc += $s * (long) java.lang.Math.floor(${jget(child, a, i)} * 1000000.0 + 0.5);
-         |  }
-         |  $out[$j] = $acc;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);""".stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val sg = ctx.addReferenceObj("jlSigns", signs, "byte[][]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.functions.JlProject.compute($a, ${elemIsFloat(child)}, $sg, $dIn));""".stripMargin)
+  }
 }
 
 object JlProjectExpr {

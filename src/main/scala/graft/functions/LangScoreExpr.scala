@@ -99,11 +99,8 @@ case class LangScoreExpr(child: Expression, classes: Seq[String],
   @transient private lazy val priorsArr = priorsMicro.toArray
   @transient private lazy val weightsArr = weightsMicro.map(_.toArray).toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"lang_score requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = StructType(Seq(
     StructField("lang_pred", StringType, nullable = false),
     StructField("best_micro", LongType, nullable = false)))

@@ -10,13 +10,40 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 import graft.index.LshParams
 
-/** Per-table LSH bucket codes as a codegen kernel: code_t =
-  * (t << 32) | signBits_t where bit f of signBits_t is
-  * `dot(values, proj[t][f]) + bias[t][f] > 0` (LSHSearch.cs:72-88, double
-  * precision end-to-end so the DuckDB oracle replays identical IEEE ops).
-  * The projection matrix rides along as a codegen reference object — the
-  * generated loop reads primitive double[] rows, no boxing.
+/** Per-table LSH bucket codes: code_t = (t << 32) | signBits_t where bit
+  * f of signBits_t is `dot(values, proj[t][f]) + bias[t][f] > 0`
+  * (LSHSearch.cs:72-88, double precision end-to-end so the DuckDB oracle
+  * replays identical IEEE ops). [[LshCodesExpr]]'s interpreted and
+  * generated paths and the driver-side [[LshParams.codesLocal]] all call
+  * `compute`; in generated code the params ride along as a codegen
+  * reference object, so the loop reads primitive double[] rows, no boxing.
   */
+object LshCodes {
+  def compute(x: ArrayData, xf: Boolean, params: LshParams): Array[Long] = {
+    val proj = params.projections; val bias = params.biases
+    val fs = params.hashFunctionCount
+    val n = x.numElements()
+    val codes = new Array[Long](params.tableCount)
+    var t = 0
+    while (t < codes.length) {
+      var key = 0L
+      var f = 0
+      while (f < fs) {
+        val i = t * fs + f
+        val p = proj(i)
+        val m = math.min(n, p.length)
+        var dot = 0.0; var j = 0
+        while (j < m) { dot += FloatArrayKernel.at(x, xf, j) * p(j); j += 1 }
+        if (dot + bias(i) > 0) key |= (1L << f)
+        f += 1
+      }
+      codes(t) = (t.toLong << 32) | key
+      t += 1
+    }
+    codes
+  }
+}
+
 case class LshCodesExpr(child: Expression, params: LshParams)
     extends UnaryExpression with FloatArrayKernel {
   override protected def arrayChildren: Seq[Expression] = Seq(child)
@@ -25,56 +52,15 @@ case class LshCodesExpr(child: Expression, params: LshParams)
   override def prettyName: String = "lsh_codes"
   override protected def withNewChildInternal(c: Expression): LshCodesExpr = copy(child = c)
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val g = getter(child)
-    val n = x.numElements()
-    val codes = new Array[Long](params.tableCount)
-    var t = 0
-    while (t < params.tableCount) {
-      var key = 0L
-      var f = 0
-      while (f < params.hashFunctionCount) {
-        val i = t * params.hashFunctionCount + f
-        val p = params.projections(i)
-        var dot = 0.0
-        var j = 0
-        val m = math.min(n, p.length)
-        while (j < m) { dot += g(x, j) * p(j); j += 1 }
-        if (dot + params.biases(i) > 0) key |= (1L << f)
-        f += 1
-      }
-      codes(t) = (t.toLong << 32) | key
-      t += 1
-    }
-    new GenericArrayData(codes)
-  }
+  override def nullSafeEval(a: Any): Any =
+    new GenericArrayData(LshCodes.compute(a.asInstanceOf[ArrayData], elemIsFloat(child), params))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val proj = ctx.addReferenceObj("lshProj", params.projections, "double[][]")
-      val bias = ctx.addReferenceObj("lshBias", params.biases, "double[]")
-      val n = ctx.freshName("n"); val codes = ctx.freshName("codes")
-      val t = ctx.freshName("t"); val f = ctx.freshName("f"); val j = ctx.freshName("j")
-      val key = ctx.freshName("key"); val idx = ctx.freshName("idx")
-      val p = ctx.freshName("p"); val dot = ctx.freshName("dot"); val m = ctx.freshName("m")
-      val T = params.tableCount; val F = params.hashFunctionCount
-      s"""int $n = $a.numElements();
-         |long[] $codes = new long[$T];
-         |for (int $t = 0; $t < $T; $t++) {
-         |  long $key = 0L;
-         |  for (int $f = 0; $f < $F; $f++) {
-         |    int $idx = $t * $F + $f;
-         |    double[] $p = $proj[$idx];
-         |    double $dot = 0.0;
-         |    int $m = java.lang.Math.min($n, $p.length);
-         |    for (int $j = 0; $j < $m; $j++) $dot += ${jget(child, a, j)} * $p[$j];
-         |    if ($dot + $bias[$idx] > 0) $key |= (1L << $f);
-         |  }
-         |  $codes[$t] = (((long) $t) << 32) | $key;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);""".stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ps = ctx.addReferenceObj("lshParams", params)
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.functions.LshCodes.compute($a, ${elemIsFloat(child)}, $ps));""".stripMargin)
+  }
 }
 
 object LshCodesExpr {

@@ -64,11 +64,8 @@ case class MicroSumExpr(child: Expression, weightsMicro: Seq[Long])
 
   @transient private lazy val weightsArr = weightsMicro.toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"micro_sum requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = LongType
   override def prettyName: String = "micro_sum"
   override protected def withNewChildInternal(c: Expression): MicroSumExpr = copy(child = c)

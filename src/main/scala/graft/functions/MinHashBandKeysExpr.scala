@@ -31,11 +31,8 @@ case class MinHashBandKeysExpr(child: Expression, numHashes: Int, bands: Int)
     extends UnaryExpression {
   require(numHashes % bands == 0, "numHashes must divide into bands evenly")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_band_keys requires ARRAY<BIGINT> shingle hashes, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "ARRAY<BIGINT> shingle hashes") { case ArrayType(LongType, _) => }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_band_keys"
   override protected def withNewChildInternal(c: Expression): MinHashBandKeysExpr =

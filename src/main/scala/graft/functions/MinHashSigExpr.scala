@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** MinHash signature from pre-hashed shingles, one codegen pass.
+/** MinHash signature from pre-hashed shingles, one pass of `compute`
+  * ([[MinHashSigExpr]]'s interpreted and generated paths both call it).
   *
   * Each shingle is string-hashed ONCE upstream (xxhash64); the `numHashes`
   * signature lanes come from a splitmix64 finalizer over (shingleHash +
@@ -17,19 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * shingles × lanes string hashing (the difference between 23 s and
   * sub-second on the 5k-doc corpus).
   */
-case class MinHashSigExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires ARRAY<BIGINT> shingle hashes, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override protected def withNewChildInternal(c: Expression): MinHashSigExpr = copy(child = c)
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+object MinHashSig {
+  def compute(x: ArrayData, numHashes: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
     while (i < x.numElements()) {
@@ -45,27 +35,25 @@ case class MinHashSigExpr(child: Expression, numHashes: Int)
       }
       i += 1
     }
-    new GenericArrayData(sig)
+    sig
   }
+}
+
+case class MinHashSigExpr(child: Expression, numHashes: Int)
+    extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "ARRAY<BIGINT> shingle hashes") { case ArrayType(LongType, _) => }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash_sig"
+  override protected def withNewChildInternal(c: Expression): MinHashSigExpr = copy(child = c)
+
+  override def nullSafeEval(a: Any): Any =
+    new GenericArrayData(MinHashSig.compute(a.asInstanceOf[ArrayData], numHashes))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val lane = ctx.freshName("lane")
-      val h = ctx.freshName("h"); val z = ctx.freshName("z"); val sig = ctx.freshName("sig")
-      s"""long[] $sig = new long[$numHashes];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $lane = 0; $lane < $numHashes; $lane++) {
-         |    long $z = $h + ($lane + 1) * -7046029254386353131L;
-         |    $z = ($z ^ ($z >>> 30)) * -4658895280553007687L;
-         |    $z = ($z ^ ($z >>> 27)) * -7723592293110705685L;
-         |    $z = $z ^ ($z >>> 31);
-         |    if ($z < $sig[$lane]) $sig[$lane] = $z;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.functions.MinHashSig.compute($a, $numHashes));""".stripMargin)
 }
 
 object MinHashSigExpr {

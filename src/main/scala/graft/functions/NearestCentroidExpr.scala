@@ -17,31 +17,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * cluster id on exact ties, matching `ORDER BY d2, cl` in the replay.
   * Returns `struct<cluster int, dist2 bigint>` so assignment and
   * residual ride one kernel pass; centroids are a codegen reference
-  * object — one tight loop regardless of k (the [[ArgMinDistExpr]]
-  * precedent, integer-exact where that one is IEEE-double).
+  * object and the generated code is one call to `compute`, regardless of
+  * k (the [[ArgMinDist]] precedent, integer-exact where that one is
+  * IEEE-double).
   */
-case class NearestCentroidExpr(child: Expression, centers: Array[Array[Long]])
-    extends UnaryExpression {
-  require(centers.nonEmpty, "need at least one centroid")
+object NearestCentroid {
+  /** x frozen to micro-units: ⌊x·1e6 + 0.5⌋. */
+  def micro(x: Double): Long = math.floor(x * 1e6 + 0.5).toLong
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"nearest_centroid requires ARRAY<FLOAT>, got ${t.simpleString}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("cluster", IntegerType, nullable = false),
-    StructField("dist2", LongType, nullable = false)))
-  override def prettyName: String = "nearest_centroid"
-  override protected def withNewChildInternal(c: Expression): NearestCentroidExpr =
-    copy(child = c)
-
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+  def compute(v: ArrayData, centers: Array[Array[Long]]): InternalRow = {
     val n0 = v.numElements()
     val m = new Array[Long](n0)
     var i = 0
-    while (i < n0) { m(i) = math.floor(v.getFloat(i).toDouble * 1e6 + 0.5).toLong; i += 1 }
+    while (i < n0) { m(i) = micro(v.getFloat(i).toDouble); i += 1 }
     var best = 0; var bestD = Long.MaxValue
     var c = 0
     while (c < centers.length) {
@@ -54,31 +42,27 @@ case class NearestCentroidExpr(child: Expression, centers: Array[Array[Long]])
     }
     InternalRow(best, bestD)
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cen = ctx.addReferenceObj("kmCenters", centers, "long[][]")
-      val n0 = ctx.freshName("n0"); val m = ctx.freshName("m")
-      val c = ctx.freshName("c"); val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val s = ctx.freshName("s"); val d = ctx.freshName("d")
-      val best = ctx.freshName("best"); val bestD = ctx.freshName("bestD")
-      s"""int $n0 = $a.numElements();
-         |long[] $m = new long[$n0];
-         |for (int $i = 0; $i < $n0; $i++)
-         |  $m[$i] = (long) java.lang.Math.floor((double) $a.getFloat($i) * 1000000.0 + 0.5);
-         |int $best = 0; long $bestD = Long.MAX_VALUE;
-         |for (int $c = 0; $c < $cen.length; $c++) {
-         |  int $n = java.lang.Math.min($n0, $cen[$c].length);
-         |  long $s = 0L;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    long $d = $m[$j] - $cen[$c][$j];
-         |    $s += $d * $d;
-         |  }
-         |  if ($s < $bestD) { $bestD = $s; $best = $c; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { $best, $bestD });""".stripMargin
-    })
+case class NearestCentroidExpr(child: Expression, centers: Array[Array[Long]])
+    extends UnaryExpression {
+  require(centers.nonEmpty, "need at least one centroid")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "ARRAY<FLOAT>") { case ArrayType(FloatType, _) => }
+  override def dataType: DataType = StructType(Seq(
+    StructField("cluster", IntegerType, nullable = false),
+    StructField("dist2", LongType, nullable = false)))
+  override def prettyName: String = "nearest_centroid"
+  override protected def withNewChildInternal(c: Expression): NearestCentroidExpr =
+    copy(child = c)
+
+  override def nullSafeEval(a: Any): Any = NearestCentroid.compute(a.asInstanceOf[ArrayData], centers)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cen = ctx.addReferenceObj("kmCenters", centers, "long[][]")
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.NearestCentroid.compute($a, $cen);")
+  }
 }
 
 object NearestCentroidExpr {

@@ -61,11 +61,8 @@ case class NearestRefExpr(child: Expression, refs: Array[Array[Float]], ids: Arr
   require(ids.sliding(2).forall(w => w.length < 2 || w(0) < w(1)),
     "nearest_ref requires refs sorted by strictly increasing id (tie-break contract)")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"nearest_ref requires ARRAY<FLOAT> input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "ARRAY<FLOAT> input") { case ArrayType(FloatType, _) => }
   override def dataType: DataType = StructType(Seq(
     StructField("ref_id", LongType, nullable = false),
     StructField("cos_dist", DoubleType, nullable = false)))

@@ -83,11 +83,8 @@ object PercentNorm {
 }
 
 case class PercentNormExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"percent_norm requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = StringType
   override def prettyName: String = "percent_norm"
   override protected def withNewChildInternal(c: Expression): PercentNormExpr =

@@ -104,11 +104,8 @@ case class RepetitionProfileExpr(child: Expression, n: Int)
     extends UnaryExpression {
   require(n >= 1, s"n-gram size must be >= 1, got $n")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"repetition_profile requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "repetition_profile"
   override protected def withNewChildInternal(c: Expression): RepetitionProfileExpr =

@@ -58,11 +58,8 @@ case class SegmentRepetitionExpr(child: Expression, sep: String)
     extends UnaryExpression {
   require(sep.nonEmpty, "separator must be non-empty")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"segment_repetition requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "segment_repetition"
   override protected def withNewChildInternal(c: Expression): SegmentRepetitionExpr =

@@ -55,11 +55,8 @@ object ShingleHash {
 }
 
 case class ShingleHashExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes"
   override protected def withNewChildInternal(c: Expression): ShingleHashExpr = copy(child = c)

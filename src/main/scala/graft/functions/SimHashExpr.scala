@@ -10,22 +10,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** 64-bit SimHash over pre-hashed token/feature values: bit j of the
   * output is set iff Σ_tokens (bit j of token hash ? +1 : -1) > 0.
-  * One codegen pass over the array with 64 counters — near-duplicate
+  * One pass of `compute` over the array with 64 counters — near-duplicate
   * detection then reduces to packed Hamming distance on the result
   * (Charikar's scheme; standard LLM-corpus dedup primitive).
   */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash requires ARRAY<BIGINT> token hashes, got ${t.simpleString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash"
-  override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(child = c)
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+object SimHash {
+  def compute(x: ArrayData): Long = {
     val counts = new Array[Int](64)
     var i = 0
     while (i < x.numElements()) {
@@ -42,22 +32,19 @@ case class SimHashExpr(child: Expression) extends UnaryExpression {
     while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
     out
   }
+}
+
+case class SimHashExpr(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "ARRAY<BIGINT> token hashes") { case ArrayType(LongType, _) => }
+  override def dataType: DataType = LongType
+  override def prettyName: String = "simhash"
+  override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(child = c)
+
+  override def nullSafeEval(a: Any): Any = SimHash.compute(a.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val h = ctx.freshName("h")
-      val counts = ctx.freshName("counts"); val out = ctx.freshName("out")
-      s"""int[] $counts = new int[64];
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $j = 0; $j < 64; $j++) {
-         |    if ((($h >>> $j) & 1L) == 1L) $counts[$j]++; else $counts[$j]--;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < 64; $j++) { if ($counts[$j] > 0) $out |= (1L << $j); }
-         |${ev.value} = $out;""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.SimHash.compute($a);")
 }
 
 object SimHashExpr {

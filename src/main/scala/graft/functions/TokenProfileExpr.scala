@@ -64,11 +64,8 @@ case class TokenProfileExpr(child: Expression, stopLists: Seq[Seq[String]])
     extends UnaryExpression {
   @transient private lazy val sets = TokenProfile.toSets(stopLists)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_profile requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "token_profile"
   override protected def withNewChildInternal(c: Expression): TokenProfileExpr = copy(child = c)

@@ -30,14 +30,7 @@ object TopCells {
     val nlist = centers.length
     val dists = new Array[Double](nlist)
     var c = 0
-    while (c < nlist) {
-      val ctr = centers(c)
-      val n = math.min(v.numElements(), ctr.length)
-      var s = 0.0; var i = 0
-      while (i < n) { val d = v.getFloat(i).toDouble - ctr(i).toDouble; s += d * d; i += 1 }
-      dists(c) = s
-      c += 1
-    }
+    while (c < nlist) { dists(c) = ArgMinDist.sqDist(v, centers(c)); c += 1 }
     val k = math.min(p, nlist)
     val out = new Array[Int](k)
     val taken = new Array[Boolean](nlist)

@@ -141,11 +141,8 @@ case class UnigramEncodeExpr(child: Expression, pieces: Array[String],
     m
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"unigram_encode requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = StringType
   override def prettyName: String = "unigram_encode"
   override protected def withNewChildInternal(c: Expression): UnigramEncodeExpr =

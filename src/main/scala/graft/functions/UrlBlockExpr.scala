@@ -21,11 +21,8 @@ import graft.pipeline.{UrlFilterKernel, UrlFilterRules}
 abstract class UrlBlockedExprBase extends UnaryExpression {
   def rules: Broadcast[UrlFilterRules]
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING input, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "STRING input") { case StringType => }
   override def dataType: DataType = BooleanType
 
   /** The kernel method name on [[UrlFilterKernel]] this flag calls. */

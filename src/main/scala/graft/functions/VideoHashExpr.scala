@@ -52,11 +52,8 @@ object VideoHash {
 }
 
 case class VideoHashExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"video_phash requires BINARY media, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.check(this, "BINARY media") { case BinaryType => }
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "video_phash"

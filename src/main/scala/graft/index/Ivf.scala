@@ -3,9 +3,10 @@ package graft.index
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.Distances
+import graft.functions.{Distances, TopCells}
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic
   * coarse-quantizer scale path for embedding search (build-brief
@@ -33,15 +34,9 @@ final case class IvfModel(centers: Array[Array[Float]]) {
   def nlist: Int = centers.length
 
   /** Nearest `nprobe` centroid ids to the query, by euclidean,
-    * ties broken by centroid id. */
+    * ties broken by centroid id: the [[graft.functions.TopCellsExpr]] kernel. */
   def probes(query: Array[Float], nprobe: Int): Seq[Int] =
-    centers.zipWithIndex.map { case (c, i) =>
-      var s = 0.0; var j = 0
-      while (j < math.min(query.length, c.length)) {
-        val d = query(j).toDouble - c(j).toDouble; s += d * d; j += 1
-      }
-      (s, i)
-    }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2).toSeq
+    TopCells.compute(ArrayData.toArrayData(query), centers, nprobe).toSeq
 }
 
 object Ivf {
@@ -91,13 +86,41 @@ object Ivf {
     vectors.withColumn(outCol,
       graft.functions.ArgMinDistExpr(col(vecCol), model.centers))
 
+  private def requireProbes(nprobe: Int): Unit =
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+
+  /** The query's `nprobe` nearest cells ([[IvfModel.probes]]), checked. */
+  private def probesOf(model: IvfModel, query: Array[Float], nprobe: Int): Seq[Int] = {
+    requireProbes(nprobe)
+    model.probes(query, nprobe)
+  }
+
+  /** The batch verbs' probe frame: (query id, `_qv` query vector,
+    * `cluster`) for each query's `nprobe` nearest cells — the centroid
+    * table exploded per query (tiny), ranked by (euclidean, cell id) like
+    * [[IvfModel.probes]]. */
+  private def probePairs(model: IvfModel, queries: DataFrame, queryIdCol: String,
+      queryVecCol: String, nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    requireProbes(nprobe)
+    queries
+      .select(col(queryIdCol), col(queryVecCol))
+      .select(col(queryIdCol), col(queryVecCol),
+        posexplode(centersLit(model)).as(Seq("_cid", "_cv")))
+      .withColumn("_cd", Distances.euclidean(col(queryVecCol), col("_cv")))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col(queryIdCol)).orderBy(col("_cd"), col("_cid"))))
+      .filter(col("_rn") <= nprobe)
+      .select(col(queryIdCol), col(queryVecCol).as("_qv"), col("_cid").as("cluster"))
+  }
+
   /** Probe-limited exact kNN: scans only the `nprobe` clusters nearest the
     * query. With cluster-partitioned storage this is the fraction of data
     * actually read. */
   def search(model: IvfModel, vectors: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int, nprobe: Int = 4,
       metric: String = "euclidean"): DataFrame = {
-    val probeSet = model.probes(query, nprobe)
+    val probeSet = probesOf(model, query, nprobe)
     assign(model, vectors, vecCol)
       .filter(col("cluster").isin(probeSet: _*))
       .withColumn("dist", round(Distances.metric(metric)(col(vecCol), typedLit(query)), 6))
@@ -198,7 +221,7 @@ object Ivf {
       candidateFactor: Int = 128, coded0: Option[DataFrame] = None): DataFrame = {
     if (pq.numSubVectors == 0)
       return search(ivf, vectors, idCol, vecCol, query, k, nprobe, metric)
-    val probeSet = ivf.probes(query, nprobe)
+    val probeSet = probesOf(ivf, query, nprobe)
     // one ADC table set PER PROBED CELL, from the query's residual against
     // that cell (IVFADC scores ‖(q − c) − code(x − c)‖) — nprobe codegen
     // branches, each a plain table-lookup kernel
@@ -245,16 +268,7 @@ object Ivf {
     if (pq.numSubVectors == 0)
       return searchBatch(ivf, vectors, idCol, vecCol,
         queries, queryIdCol, queryVecCol, k, nprobe, metric)
-    import org.apache.spark.sql.expressions.Window
-    val probes = queries
-      .select(col(queryIdCol), col(queryVecCol))
-      .select(col(queryIdCol), col(queryVecCol),
-        posexplode(centersLit(ivf)).as(Seq("_cid", "_cv")))
-      .withColumn("_cd", Distances.euclidean(col(queryVecCol), col("_cv")))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(queryIdCol)).orderBy(col("_cd"), col("_cid"))))
-      .filter(col("_rn") <= nprobe)
-      .select(col(queryIdCol), col(queryVecCol).as("_qv"), col("_cid").as("cluster"))
+    val probes = probePairs(ivf, queries, queryIdCol, queryVecCol, nprobe)
     // per-(query, cell) ADC tables over the query's RESIDUAL against the
     // probed cell (IVFADC, §V): tables[b][c] = ‖rq_block_b − centroid_{b,c}‖²
     // — still |Q|·nprobe broadcast rows, never data
@@ -303,16 +317,7 @@ object Ivf {
   def searchBatch(model: IvfModel, vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, nprobe: Int = 4, metric: String = "euclidean"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probes = queries
-      .select(col(queryIdCol), col(queryVecCol))
-      .select(col(queryIdCol), col(queryVecCol),
-        posexplode(centersLit(model)).as(Seq("_cid", "_cv")))
-      .withColumn("_cd", Distances.euclidean(col(queryVecCol), col("_cv")))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(queryIdCol)).orderBy(col("_cd"), col("_cid"))))
-      .filter(col("_rn") <= nprobe)
-      .select(col(queryIdCol), col(queryVecCol).as("_qv"), col("_cid").as("cluster"))
+    val probes = probePairs(model, queries, queryIdCol, queryVecCol, nprobe)
     val scored = assign(model, vectors, vecCol)
       .join(broadcast(probes), "cluster")
       .withColumn("dist", round(Distances.metric(metric)(col(vecCol), col("_qv")), 6))

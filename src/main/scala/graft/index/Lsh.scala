@@ -1,9 +1,10 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Distances, LshCodesExpr}
+import graft.functions.{Distances, LshCodes, LshCodesExpr}
 import graft.ops.Knn
 
 /** Random-projection LSH (reference: Neighborly/Search/LSHSearch.cs).
@@ -53,23 +54,9 @@ final case class LshParams(dim: Int, tableCount: Int, hashFunctionCount: Int, se
     (proj, bias)
   }
 
-  /** Driver-side codes of one vector (same layout as LshCodesExpr). */
-  def codesLocal(values: Array[Float]): Array[Long] = {
-    val out = new Array[Long](tableCount)
-    for (t <- 0 until tableCount) {
-      var key = 0L
-      for (f <- 0 until hashFunctionCount) {
-        val i = t * hashFunctionCount + f
-        val p = projections(i)
-        var dot = 0.0
-        var j = 0
-        while (j < math.min(values.length, dim)) { dot += values(j).toDouble * p(j); j += 1 }
-        if (dot + biases(i) > 0) key |= (1L << f)
-      }
-      out(t) = (t.toLong << 32) | key
-    }
-    out
-  }
+  /** Driver-side codes of one vector: the [[LshCodesExpr]] kernel. */
+  def codesLocal(values: Array[Float]): Array[Long] =
+    LshCodes.compute(ArrayData.toArrayData(values), xf = true, this)
 }
 
 object LshParams {

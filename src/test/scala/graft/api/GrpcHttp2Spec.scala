@@ -73,6 +73,17 @@ class GrpcHttp2Spec extends SparkSpec {
         val (km, kt, kdf) = searchNoK()
         assert(km.isEmpty && kdf === 0 && kt("grpc-status") === "2", s"warm=$warm: $kt")
         assert(kt("grpc-message") === "requirement failed: Number of neighbors must be greater than 0")
+        // a 2-d query or update against the 3-d table: the same status
+        val short = VectorBinary.toBinary(VectorRecord(idA, Array(9f, 9f)))
+        for ((method, body) <- Seq(
+            "SearchNearest" -> VectorProto.encodeSearchNearestRequest(short, 1),
+            "UpdateVector" -> VectorProto.encodeUpdateVectorRequest(idA, short))) {
+          val (dm, dt, ddf) = c.call(method, body)
+          assert(dm.isEmpty && ddf === 0 && dt("grpc-status") === "2", s"warm=$warm $method: $dt")
+          assert(dt("grpc-message").startsWith(
+            "requirement failed: dimension 2 != table dimension 3 "), s"warm=$warm: $dt")
+        }
+        assert(srv.db.getVector(idA).get.values.toSeq === Seq(9f, 9f, 9f))
       }
 
       // an AddVector payload declaring 2^31-1 values is a status, not an

@@ -221,6 +221,18 @@ class GrpcWebSpec extends SparkSpec {
           VectorProto.encodeSearchNearestRequest(VectorBinary.toBinary(query), 0))
         assert(km.isEmpty && kt("grpc-status") === "2", s"warm=$warm: $kt")
         assert(kt("grpc-message") === "requirement failed: Number of neighbors must be greater than 0")
+        // a 3-d query or update against the 4-d table: the same status
+        val short = VectorRecord(idA, Array(1f, 0f, 0f))
+        val (dm, dt) = rpc(base, "SearchNearest",
+          VectorProto.encodeSearchNearestRequest(VectorBinary.toBinary(short), 2))
+        val (um, ut) = rpc(base, "UpdateVector",
+          VectorProto.encodeUpdateVectorRequest(idA, VectorBinary.toBinary(short)))
+        for ((m, t) <- Seq((dm, dt), (um, ut))) {
+          assert(m.isEmpty && t("grpc-status") === "2", s"warm=$warm: $t")
+          assert(t("grpc-message").startsWith(
+            "requirement failed: dimension 3 != table dimension 4 "), s"warm=$warm: $t")
+        }
+        assert(srv.db.getVector(idA).get.values.toSeq === recA.values.toSeq)
       }
 
       // UpdateVector: replaces values/text, drops tags (VectorList quirk)

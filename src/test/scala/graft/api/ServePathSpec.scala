@@ -33,12 +33,24 @@ class ServePathSpec extends SparkSpec {
       // failure (REST 400), not a failing Spark task
       val kZero = intercept[IllegalArgumentException](ids(db, near, 0, 0.6))
       assert(kZero.getMessage.contains("Number of neighbors must be greater than 0"))
+      // so is a query or an update of the wrong dimension: the kernels
+      // would score it over a prefix of each row
+      val short = near.take(3)
+      val dimErr = intercept[IllegalArgumentException](ids(db, short, 5, 0.6))
+      assert(dimErr.getMessage.contains(s"dimension 3 != table dimension $dim"))
+      for (bad <- Seq[() => Any](() => db.search(short, 5), () => db.rangeSearch(short, 1.0),
+          () => db.updateVector("v01", short), () => db.updateVector("absent", short)))
+        assert(intercept[IllegalArgumentException](bad()).getMessage === dimErr.getMessage)
+      assert(db.getVector("v01").get.values.toSeq === vec(1f).toSeq)
 
       db.buildAllIndexes()
       assert(db.hasWarmIndexes)
       for (alg <- Seq(SearchAlgorithm.KDTree, SearchAlgorithm.HNSW)) {
         val e = intercept[IllegalArgumentException](db.searchRecords(near, 0, alg, 0.6))
         assert(e.getMessage === kZero.getMessage, s"$alg")
+        for (bad <- Seq[() => Any](() => db.searchRecords(short, 5, alg, 0.6),
+            () => db.search(short, 5, alg, 0.6)))
+          assert(intercept[IllegalArgumentException](bad()).getMessage === dimErr.getMessage, s"$alg")
       }
       assert(ids(db, near, 5, 0.6) === coldNear)
       assert(coldNear.map(_._1) === Seq("v01")) // only dist 0.5 ≤ 0.6

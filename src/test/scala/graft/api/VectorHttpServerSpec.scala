@@ -60,6 +60,16 @@ class VectorHttpServerSpec extends SparkSpec {
         val zero = req(base, "POST", "/vectors/searchNearest?k=0", """{"values":[0.1,0.0]}""")
         assert(zero.statusCode() === 400, s"warm=$warm: ${zero.body()}")
         assert(zero.body().contains("Number of neighbors must be greater than 0"))
+        // so is a query or an update whose dimension is not the table's
+        val short = req(base, "POST", "/vectors/searchNearest?k=2", """{"values":[0.1]}""")
+        assert(short.statusCode() === 400, s"warm=$warm: ${short.body()}")
+        assert(short.body().contains("dimension 1 != table dimension 2"))
+        for (id <- Seq("v1", "nope")) {
+          val upd = req(base, "PUT", s"/vector/$id", """{"values":[1.0,1.0,1.0]}""")
+          assert(upd.statusCode() === 400, s"warm=$warm $id: ${upd.body()}")
+          assert(upd.body().contains("dimension 3 != table dimension 2"))
+        }
+        assert(db.getVector("v1").get.values.toSeq === Seq(0f, 0f))
       }
 
       // UpdateVector: keeps id, drops tags (VectorList.cs:184-187 quirk); 404 for unknown

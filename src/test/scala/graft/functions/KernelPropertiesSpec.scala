@@ -1,8 +1,15 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.index.LshParams
 import graft.pipeline.Dedup
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
 /** Property checks for the index/pipeline kernels (pack, Hamming, MinHash,
   * SimHash, shingles) over seeded random cases — invariants a refactor
   * must not break. */
@@ -147,6 +154,79 @@ class KernelPropertiesSpec extends SparkSpec {
           v.indices.map(j => { val d = micro(v(j)) - c(j); d * d }).sum).getOrElse(-1L)
         assert(got(id) === want, s"row $id label $l")
       }
+    }
+  }
+
+  test("every array kernel: interpreted eval ≡ generated code, bit for bit") {
+    // `eval` (nullSafeEval) and a generated projection (doGenCode, with no
+    // interpreted fallback) run the same rows; results compare as bits
+    val rnd = new scala.util.Random(7)
+    val dim = 24
+    def floats(n: Int) = Array.fill(n)(rnd.nextFloat() * 4f - 2f)
+    // lengths around dim: the kernels read min(|a|, |b|) elements
+    def len() = dim - 3 + rnd.nextInt(7)
+    def fArr() = ArrayData.toArrayData(floats(len()))
+    def dArr() = ArrayData.toArrayData(Array.fill(len())(rnd.nextDouble() * 4 - 2))
+    def lArr(n: Int) = ArrayData.toArrayData(Array.fill(n)(rnd.nextLong()))
+    val FA = ArrayType(FloatType, containsNull = false)
+    val DA = ArrayType(DoubleType, containsNull = false)
+    val LA = ArrayType(LongType, containsNull = false)
+    val IA = ArrayType(IntegerType, containsNull = false)
+    def in(i: Int, t: DataType) = BoundReference(i, t, nullable = true)
+    def rows(n: Int)(cols: => Seq[Any]): Seq[InternalRow] =
+      Seq.fill(n)(InternalRow.fromSeq(cols)) :+ InternalRow.fromSeq(cols.map(_ => null))
+
+    val centers = Array.fill(9)(floats(dim))
+    val micro = Array.fill(5)(Array.fill(dim)(NearestCentroid.micro(rnd.nextFloat() * 4 - 2)))
+    val tables = Array.fill(6, 16)(rnd.nextDouble() * 10)
+    val tablesCol = new GenericArrayData(tables.map(t => ArrayData.toArrayData(t): Any))
+    def codes() = ArrayData.toArrayData(Array.fill(4 + rnd.nextInt(4))(rnd.nextInt(16)))
+    val lsh = LshParams(dim, tableCount = 5, hashFunctionCount = 7, seed = 3)
+
+    val arrayTypes = Seq(("float", FA, () => fArr()), ("double", DA, () => dArr()))
+    val distances: Seq[(String, Expression, Seq[InternalRow])] = for {
+      k <- DistanceKernel.values.toSeq
+      (ln, lt, la) <- arrayTypes
+      (rn, rt, ra) <- arrayTypes
+    } yield (s"$k $ln×$rn", DistanceExpr(in(0, lt), in(1, rt), k), rows(40)(Seq(la(), ra())))
+    val perType: Seq[(String, Expression, Seq[InternalRow])] = arrayTypes.flatMap {
+      case (n, t, arr) => Seq(
+        (s"magnitude $n", MagnitudeExpr(in(0, t)), rows(40)(Seq(arr()))),
+        (s"lsh_codes $n", LshCodesExpr(in(0, t), lsh), rows(40)(Seq(arr()))),
+        (s"pack_bits $n", PackBitsExpr(in(0, t), 0.25), rows(40)(Seq(arr()))),
+        (s"jl_project $n", JlProjectExpr(in(0, t), dim, 8, "s"), rows(40)(Seq(arr()))))
+    }
+    val cases = distances ++ perType ++ Seq(
+      ("hamming_packed", HammingPackedExpr(in(0, LA), in(1, LA)),
+        rows(40)(Seq(lArr(1 + rnd.nextInt(3)), lArr(1 + rnd.nextInt(3))))),
+      ("argmin_dist", ArgMinDistExpr(in(0, FA), centers), rows(40)(Seq(fArr()))),
+      ("adc_dist", AdcExpr(in(0, IA), tables), rows(40)(Seq(codes()))),
+      ("adc_lookup", AdcLookupExpr(in(0, IA), in(1, ArrayType(DA))),
+        rows(40)(Seq(codes(), tablesCol))),
+      ("nearest_centroid", NearestCentroidExpr(in(0, FA), micro), rows(40)(Seq(fArr()))),
+      ("centroid_dist2", CentroidDist2Expr(in(0, FA), in(1, IntegerType),
+        Array(2, 3, 5, 8, 13), micro), rows(40)(Seq(fArr(), Seq(2, 3, 5, 8, 13, 4)(rnd.nextInt(6))))),
+      ("minhash_sig", MinHashSigExpr(in(0, LA), 16), rows(40)(Seq(lArr(rnd.nextInt(30))))),
+      ("simhash", SimHashExpr(in(0, LA)), rows(40)(Seq(lArr(rnd.nextInt(30))))))
+    // the 13 expression classes, each in every element-type variant
+    assert(cases.map(_._2.getClass).distinct.size === 13)
+
+    def bits(v: Any, t: DataType): Any = (v, t) match {
+      case (null, _) => null
+      case (d: Double, DoubleType) => java.lang.Double.doubleToLongBits(d)
+      case (a: ArrayData, ArrayType(et, _)) => a.toSeq[Any](et).map(bits(_, et))
+      case (r: InternalRow, StructType(fs)) =>
+        fs.indices.map(i => bits(r.get(i, fs(i).dataType), fs(i).dataType))
+      case (x, _) => x
+    }
+    for ((name, expr, input) <- cases) {
+      val generated = GenerateUnsafeProjection.generate(Seq(expr))
+      input.foreach { row =>
+        val interp = bits(expr.eval(row), expr.dataType)
+        val gen = bits(generated(row).get(0, expr.dataType), expr.dataType)
+        assert(interp === gen, s"$name diverged on $row")
+      }
+      assert(input.count(r => expr.eval(r) != null) === input.size - 1, name)
     }
   }
 }

@@ -60,6 +60,25 @@ class IvfSpec extends SparkSpec {
     assert(adc.map(_._1).distinct.sorted === Seq(0L, 1L, 2L, 3L, 4L))
   }
 
+  test("every IVF verb rejects nprobe < 1 instead of probing no cell") {
+    val q = emb.filter($"vec_id" === 0).head().getAs[scala.collection.Seq[Float]]("embedding").toArray
+    val qs = emb.filter($"vec_id" < 3).select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    val pq = Ivf.fitResidualPq(model, emb, "embedding")
+    for (nprobe <- Seq(0, -1)) {
+      val verbs: Seq[(String, () => Any)] = Seq(
+        "search" -> (() => Ivf.search(model, emb, "vec_id", "embedding", q, 5, nprobe)),
+        "searchBatch" -> (() => Ivf.searchBatch(model, emb, "vec_id", "embedding",
+          qs, "query_id", "qv", 5, nprobe)),
+        "searchPq" -> (() => Ivf.searchPq(model, pq, emb, "vec_id", "embedding", q, 5, nprobe)),
+        "searchPqBatch" -> (() => Ivf.searchPqBatch(model, pq, emb, "vec_id", "embedding",
+          qs, "query_id", "qv", 5, nprobe)))
+      for ((name, verb) <- verbs) {
+        val e = intercept[IllegalArgumentException](verb())
+        assert(e.getMessage.contains(s"nprobe must be >= 1, got $nprobe"), name)
+      }
+    }
+  }
+
   test("self-query lands in its own probe; probe-limited search finds it first") {
     val q = emb.filter($"vec_id" === 5).head().getAs[scala.collection.Seq[Float]]("embedding").toArray
     val out = Ivf.search(model, emb, "vec_id", "embedding", q, k = 3, nprobe = 1).collect()
