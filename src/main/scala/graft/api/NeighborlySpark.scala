@@ -1,5 +1,7 @@
 package graft.api
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,11 +62,24 @@ object SearchAlgorithm extends Enumeration {
   * with the mutation count). Search plans are the library's scale-safe
   * pipelines unchanged.
   */
-class NeighborlySpark(val spark: SparkSession, val dimension: Int,
-    initialEmbeddingProvider: EmbeddingProvider = HashEmbeddingProvider(),
-    val checkpointEvery: Int = 32,
-    val autoRebuild: Boolean = false,
-    val autoRebuildDelayMs: Long = 5000) {
+class NeighborlySpark private[api] (val spark: SparkSession, val dimension: Int,
+    initialEmbeddingProvider: EmbeddingProvider,
+    val checkpointEvery: Int,
+    val autoRebuild: Boolean,
+    val autoRebuildDelayMs: Long,
+    driverTierBytes: Long) {
+
+  /** `driverTierBytes`, settable only inside `graft.api` (specs force the
+    * job tier with it), is the heap a warm record store may take for the
+    * driver tier; the public constructor derives it from the driver heap
+    * ([[NeighborlySpark.driverTierBudget]]). */
+  def this(spark: SparkSession, dimension: Int,
+      initialEmbeddingProvider: EmbeddingProvider = HashEmbeddingProvider(),
+      checkpointEvery: Int = 32,
+      autoRebuild: Boolean = false,
+      autoRebuildDelayMs: Long = 5000) =
+    this(spark, dimension, initialEmbeddingProvider, checkpointEvery, autoRebuild,
+      autoRebuildDelayMs, NeighborlySpark.driverTierBudget(spark))
 
   private var provider: EmbeddingProvider = initialEmbeddingProvider
 
@@ -117,11 +132,44 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * copy of the table while indexes are warm — the explicit
     * serving-tier trade, released on invalidation. No request reads
     * `mapping`: it is kept because it holds the checkpoint the lazily
-    * built `ann`/`hnsw` RDDs read, and because `save` writes it. */
+    * built `ann`/`hnsw` RDDs read, and because `save` writes it.
+    *
+    * Driver tier: when `onDriver` (the fit measured the store and found
+    * it within the facade's driver budget, [[fitsDriver]]), the first
+    * warm search of a structure collects its partitions in one job, and
+    * the record maps in one more if no search collected them before
+    * (`annParts`, `hnswParts`, `recordMaps`: partition p of an index
+    * pairs with map p); every later search of it probes and merges them
+    * on the calling thread with no Spark job. Each copy is collected
+    * once, under its own lock, so the first HNSW search (which builds
+    * the graphs) does not hold up the norm-index searches. A copy that
+    * cannot be collected leaves that structure on the one-job tier. The
+    * copies live and die with this instance: an invalidation drops them
+    * with the RDDs. `storeBytes` is the store's estimated heap size, as
+    * the fit measured it. */
   private case class LocalIdx(mapping: DataFrame,
       ann: org.apache.spark.rdd.RDD[graft.index.LocalNormIndex],
       hnsw: org.apache.spark.rdd.RDD[graft.index.HnswGraph],
-      records: LocalStore.Store[VectorRecord])
+      records: LocalStore.Store[VectorRecord],
+      storeBytes: Long,
+      onDriver: Boolean) {
+    val recordMaps = new DriverCopy(onDriver, records.collect())
+    val annParts = new DriverCopy(onDriver, LocalStore.collectPartitions(ann))
+    val hnswParts = new DriverCopy(onDriver, LocalStore.collectPartitions(hnsw))
+  }
+
+  /** A driver copy, collected by its first use when `allowed`; `None`
+    * when not allowed or when the collection failed. */
+  private final class DriverCopy[A](allowed: Boolean, collect: => A) {
+    lazy val get: Option[A] =
+      if (!allowed) None
+      else try Some(collect)
+      catch { case NonFatal(e) =>
+        System.err.println(s"[graft] warm index stays on the one-job tier: driver copy failed: $e")
+        None
+      }
+  }
+
   @volatile private var localIdx: Option[LocalIdx] = None
   @volatile private var cachedDf: Option[DataFrame] = None
 
@@ -136,6 +184,12 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     localIdx.toSeq.flatMap(li => li.ann.zipPartitions(li.hnsw, li.records) { (a, h, r) =>
       Iterator.single((a.flatMap(_.ids).toSet, h.flatMap(_.ids).toSet, r.flatMap(_.keys).toSet))
     }.collect())
+
+  /** The warm store's heap size as its fit estimated it, and the
+    * estimated size of all its driver copies, collecting any not yet
+    * collected (test seam). */
+  private[api] def driverCopySize: Option[(Long, Long)] = localIdx.map(li => (li.storeBytes,
+    org.apache.spark.util.SizeEstimator.estimate(Seq(li.recordMaps.get, li.annParts.get, li.hnswParts.get))))
 
   // ----- debounced background rebuild (VectorDatabase.cs:124,501-540:
   // vectors modified → BuildAllIndexes ≥5 s later on a lowest-priority
@@ -224,7 +278,8 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   }
 
   /** Free every block a local-index build holds — the installed one on
-    * invalidation, or a fit that lost its install race. */
+    * invalidation, or a fit that lost its install race. Its driver copies
+    * go with the dropped instance. */
   private def release(li: LocalIdx): Unit = {
     li.ann.unpersist(blocking = false)
     li.hnsw.unpersist(blocking = false)
@@ -392,10 +447,14 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * reference's stale indexes after a clear. */
   def clear(): Unit = mutate(emptyTable, emptied = true)
 
+  /** A cold answer: a lazy (id, dist) plan over `table`, the one table
+    * version it reads (a record fetch for it must read the same one). */
+  private case class Cold(table: DataFrame, hits: DataFrame)
+
   /** Hits of the one algorithm dispatch: a warm local index answers with
     * full records, driver-side and already in (dist, id) order; every
-    * other case is a lazy (id, dist) plan over the live table. */
-  private type Hits = Either[Seq[(VectorRecord, Double)], DataFrame]
+    * other case is a [[Cold]] plan. */
+  private type Hits = Either[Seq[(VectorRecord, Double)], Cold]
 
   /** The ONE rule for which structure answers an algorithm name, warm or
     * cold (SearchService.cs:132-190) — `searchRecords`, `search(vector)`
@@ -409,44 +468,72 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * SearchService.cs:171-189) applies with the SAME semantics on both
     * sides (ThresholdFilter.applyLocal, property-pinned equal in
     * ThresholdFilterLocalSpec); `None` leaves it to the caller. A warm
-    * name is ONE Spark job: the probe and the record fetch run together
-    * over the co-partitioned record store (reading the volatile
-    * `localIdx` once, so a background install cannot swap the index
-    * under it). */
+    * name runs the probe and the record fetch together over the
+    * co-partitioned record store: on the driver copy with no Spark job
+    * when the store fits the driver budget, else in ONE job. It reads
+    * the volatile `localIdx` once, so a background install cannot swap
+    * the index under it; a probe whose structures a write retired
+    * mid-request (their blocks freed) is answered again from what is
+    * live now. Each dispatch counts once on its tier's counter. */
   private def dispatch(query: Array[Float], k: Int, algorithm: SearchAlgorithm.Value,
       threshold: Option[Double]): Hits = {
     require(k > 0, "Number of neighbors must be greater than 0")
-    import SearchAlgorithm._
-    // the enum is closed: every name has an arm, as in the reference switch
-    val hits: Hits = ((algorithm, localIdx): @unchecked) match {
-      case (KDTree | BallTree | Linear, Some(li)) =>
-        Left(warmHits(LocalStore.topK(li.ann, li.records, k)(_.topKWithStats(query, k)._1)))
-      case (HNSW, Some(li)) =>
-        Left(warmHits(LocalStore.topK(li.hnsw, li.records, k)(_.search(query, k, LocalHnsw.DefaultEf))))
-      case (KDTree | BallTree | Linear, None) =>
-        Right(Knn.single(df, "id", "values", typedLit(query), k))
-      case (LSH, _) =>
-        Right(Lsh.search(df, "id", "values", query, k, LshParams.adaptive(dimension)))
-      case (HNSW, None) =>
-        Right(Lsh.search(df, "id", "values", query, k, LshParams.serving(dimension)))
-      case (SearchAlgorithm.BinaryQuantization, _) =>
-        Right(BqIndex.search(df, "id", "values", query, k, threshold = bqThreshold)
-          .select(col("id"), col("dist")))
-      case (SearchAlgorithm.ProductQuantization, _) =>
-        val m = pqModel.getOrElse { val f = PqIndex.fit(df, "values"); pqModel = Some(f); f }
-        Right(PqIndex.search(m, df, "id", "values", query, k, scannedRows = count))
-      case (Range, _) =>
-        Right(df.limit(0).select(col("id"), lit(0.0).as("dist")))
-    }
+    val warm = localIdx
+    val hits =
+      try answer(warm, query, k, algorithm)
+      catch { case NonFatal(_) if warm.exists(w => !localIdx.exists(_ eq w)) =>
+        answer(localIdx, query, k, algorithm)
+      }
+    if (hits.isRight) metrics.coldSearches.incrementAndGet()
     threshold.fold(hits)(t => hits
       .left.map(ThresholdFilter.applyLocal(_, t, dimension))
-      .map(ThresholdFilter(_, "dist", t, dimension)))
+      .map(c => c.copy(hits = ThresholdFilter(c.hits, "dist", t, dimension))))
   }
 
-  /** Warm hits as (record, dist): already in (dist, surrogate) order,
-    * which is (dist, id) order — the surrogate is the id's rank. */
-  private def warmHits(top: Array[(Double, Long, VectorRecord)]): Seq[(VectorRecord, Double)] =
+  /** The hits of `algorithm` from `warm`, or from the live table when no
+    * warm index serves the name. */
+  private def answer(warm: Option[LocalIdx], query: Array[Float], k: Int,
+      algorithm: SearchAlgorithm.Value): Hits = {
+    import SearchAlgorithm._
+    val table = df
+    // the enum is closed: every name has an arm, as in the reference switch
+    ((algorithm, warm): @unchecked) match {
+      case (KDTree | BallTree | Linear, Some(li)) =>
+        Left(warmTop(li, li.annParts, li.ann, k)(_.topKWithStats(query, k)._1))
+      case (HNSW, Some(li)) =>
+        Left(warmTop(li, li.hnswParts, li.hnsw, k)(_.search(query, k, LocalHnsw.DefaultEf)))
+      case (KDTree | BallTree | Linear, None) =>
+        Right(Cold(table, Knn.single(table, "id", "values", typedLit(query), k)))
+      case (LSH, _) =>
+        Right(Cold(table, Lsh.search(table, "id", "values", query, k, LshParams.adaptive(dimension))))
+      case (HNSW, None) =>
+        Right(Cold(table, Lsh.search(table, "id", "values", query, k, LshParams.serving(dimension))))
+      case (SearchAlgorithm.BinaryQuantization, _) =>
+        Right(Cold(table, BqIndex.search(table, "id", "values", query, k, threshold = bqThreshold)
+          .select(col("id"), col("dist"))))
+      case (SearchAlgorithm.ProductQuantization, _) =>
+        val m = pqModel.getOrElse { val f = PqIndex.fit(table, "values"); pqModel = Some(f); f }
+        Right(Cold(table, PqIndex.search(m, table, "id", "values", query, k, scannedRows = count)))
+      case (Range, _) =>
+        Right(Cold(table, table.limit(0).select(col("id"), lit(0.0).as("dist"))))
+    }
+  }
+
+  /** A warm structure's k best as (record, dist), in (dist, surrogate)
+    * order — which is (dist, id) order, the surrogate being the id's
+    * rank: from the driver copies when there are, else in one job. */
+  private def warmTop[I](li: LocalIdx, parts: DriverCopy[Array[Seq[I]]],
+      index: org.apache.spark.rdd.RDD[I], k: Int)(
+      probe: I => Seq[(Long, Double)]): Seq[(VectorRecord, Double)] = {
+    val onDriver = for (p <- parts.get; recs <- li.recordMaps.get)
+      yield LocalStore.topKLocal(p, recs, k)(probe)
+    val (top, tier) = onDriver match {
+      case Some(t) => (t, metrics.driverSearches)
+      case None => (LocalStore.topK(index, li.records, k)(probe), metrics.jobSearches)
+    }
+    tier.incrementAndGet()
     top.map { case (d, _, rec) => (rec, d) }.toSeq
+  }
 
   private def byDistId(hits: Array[(VectorRecord, Double)]): Seq[(VectorRecord, Double)] =
     hits.sortBy { case (rec, d) => (d, rec.id) }.toSeq
@@ -455,7 +542,7 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   private def hitFrame(hits: Hits): DataFrame = hits.fold(
     recs => spark.createDataFrame(
       java.util.List.of(recs.map { case (r, d) => Row(r.id, d) }: _*), NeighborlySpark.HitSchema),
-    identity)
+    _.hits)
 
   /** kNN by raw vector (SearchService.cs:132-190 dispatch + threshold).
     * Returns (id, dist) ordered by (dist, id). */
@@ -470,7 +557,8 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * must not run k+1 driver jobs — mirroring the reference's direct
     * result mapping (VectorService.cs:74-84). Warm names come back from
     * the dispatch with their records; the cold
-    * (id, dist) hits take one bounded k-row fetch from the table instead
+    * (id, dist) hits take one bounded k-row fetch from the table version
+    * they were scored on instead
     * of one action nesting the distributed hit subplan inside a broadcast
     * exchange — still O(1) jobs in k, never the k+1 pattern. Jobs run
     * under the `graft.serve` group (the WHOLE serving path, including the
@@ -483,10 +571,10 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     spark.sparkContext.setJobGroup(metrics.serveGroup, s"searchRecords(k=$k, $algorithm)")
     try dispatch(query, k, algorithm, Some(similarityThreshold)) match {
       case Left(recs) => recs
-      case Right(frame) =>
+      case Right(Cold(table, frame)) =>
         val dist = frame.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
         if (dist.isEmpty) Seq.empty
-        else byDistId(df.filter(col("id").isin(dist.keySet.toSeq: _*)).collect()
+        else byDistId(table.filter(col("id").isin(dist.keySet.toSeq: _*)).collect()
           .map(r => (NeighborlySpark.rowToRecord(r), dist(r.getAs[String]("id")))))
     } finally spark.sparkContext.clearJobGroup()
   }
@@ -496,12 +584,14 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * dispatch as a raw-vector search (Search(text) → Search(query, k,
     * method) in the reference), then the short-text prefix-union tail.
     * `Range` contributes an empty kNN stage (the switch default), so a
-    * short text still gets its prefix matches and a long text none. */
+    * short text still gets its prefix matches and a long text none. The
+    * provider's embedding must have the table's dimension, like a raw
+    * query. */
   def search(text: String, k: Int, algorithm: SearchAlgorithm.Value,
       similarityThreshold: Option[Double]): DataFrame =
     TextSearch.search(df, "id", "values", "original_text", text, k,
       embeddingProvider, similarityThreshold,
-      knnFn = Some((q, kk) => hitFrame(dispatch(q, kk, algorithm, None))))
+      knnFn = Some { (q, kk) => requireDimension(q); hitFrame(dispatch(q, kk, algorithm, None)) })
 
   /** Radius search, gated exactly like the reference: only Linear, Range
     * and KDTree names support it (SearchService.cs:246-247). */
@@ -517,7 +607,9 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
   def rangeSearch(text: String, radius: Double,
       algorithm: SearchAlgorithm.Value, metric: String): DataFrame = {
     require(text != null && text.trim.nonEmpty, "Text cannot be null or empty")
-    withinRadius(embeddingProvider.embed(text), radius, algorithm, metric)
+    val query = embeddingProvider.embed(text)
+    requireDimension(query)
+    withinRadius(query, radius, algorithm, metric)
   }
 
   private def withinRadius(query: Array[Float], radius: Double,
@@ -572,6 +664,13 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
     * materialization (each row has exactly one surrogate). */
   private case class FittedIndexes(bq: Double, pq: PqModel, local: Option[LocalIdx], rows: Long)
 
+  /** Whether a warm store of `rows` records, `bytes` in heap as
+    * estimated, is served on the driver: it is no larger than the largest
+    * store measured faster there ([[NeighborlySpark.DriverTierMaxValues]])
+    * and fits the facade's heap budget. */
+  private def fitsDriver(rows: Long, bytes: Long): Boolean =
+    rows * dimension <= NeighborlySpark.DriverTierMaxValues && bytes <= driverTierBytes
+
   /** Serving-tier partition clamp shared by every local-index artifact. */
   private def serveParts: Int =
     math.max(1, math.min(spark.sparkContext.defaultParallelism, 8))
@@ -602,11 +701,11 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
       // tasks of scheduler latency were most of the warm-path p50)
       val keyed = snapshot.join(mapping, "id").repartition(parts, col("_sid"))
       val records = LocalStore.fromPairs(NeighborlySpark.recordsBySid(keyed))
-      val rows = records.map(_.size.toLong).fold(0L)(_ + _)
+      val (rows, bytes) = LocalStore.measure(records)
       FittedIndexes(bq, pq, Some(LocalIdx(mapping,
         LocalAnn.build(keyed, "_sid", "values"),
         LocalHnsw.build(keyed, "_sid", "values"),
-        records)), rows)
+        records, bytes, fitsDriver(rows, bytes))), rows)
     }
   }
 
@@ -680,9 +779,9 @@ class NeighborlySpark(val spark: SparkSession, val dimension: Int,
         // in part_id order, so `hnsw` shares `ann`'s layout)
         val records = LocalStore.placeLike(ann, (i: graft.index.LocalNormIndex) => i.ids,
           NeighborlySpark.recordsBySid(df.join(mapping, "id")))
-        records.count()
-        Some(LocalIdx(mapping, ann,
-          graft.index.IndexStore.loadHnsw(spark, s"$path/indexes"), records))
+        val (rows, bytes) = LocalStore.measure(records)
+        Some(LocalIdx(mapping, ann, graft.index.IndexStore.loadHnsw(spark, s"$path/indexes"),
+          records, bytes, fitsDriver(rows, bytes)))
       } catch { case _: Exception => None }
     unsaved = false
   }
@@ -708,6 +807,41 @@ object NeighborlySpark {
     * build could otherwise spin forever; after this many overtakes the
     * call returns false and the caller owns the retry schedule. */
   private[api] val ExplicitBuildAttempts = 3
+
+  /** Share of the driver's maximum heap that a warm record store, as
+    * its fit estimated it, may take for the store to be served on the
+    * driver. The heap itself is the operator's `spark.driver.memory`;
+    * the whole driver copy stays within [[DriverCopyRatio]] times this
+    * share, a tenth of the heap. */
+  private[api] val DriverStoreHeapShare = 0.025
+
+  /** The driver copy — record maps, norm indexes and HNSW graphs — as a
+    * multiple of its record store's estimate, at most: `DriverTierSpec`
+    * measures 3.0 (256-d) to 3.7 (1-d) over 2,000 Gaussian rows and pins
+    * this bound. The HNSW adjacency lists, the same size at any
+    * dimension, weigh most at low dimensions. */
+  private[api] val DriverCopyRatio = 4L
+
+  /** The largest warm store, in rows × dimension, served on the driver:
+    * the largest measured faster there than in one Spark job at every
+    * dimension tried (`Test/runMain graft.index.TierCrossover`; 4-core
+    * host, 4 partitions, i.i.d. Gaussian vectors, k = 10). At 2^19 values
+    * the driver's sequential norm-index probe took 1.3–22 ms against
+    * 20–39 ms for one job at 2, 4, 8, 12, 16, 64 and 1024 dimensions; at
+    * 2^20 it lost at 8 dimensions (39 vs 36 ms) and tied at 16. The HNSW graphs were 6 to
+    * 16 times faster on the driver at every size tried. Above the cap a
+    * warm search stays one job, which probes the partitions in parallel. */
+  private[api] val DriverTierMaxValues = 1L << 19
+
+  /** The heap a facade's warm record store may take for the driver tier:
+    * [[DriverStoreHeapShare]] of the driver's maximum heap, and no more
+    * than `spark.driver.maxResultSize` (each copy arrives as one job's
+    * results; 0 there means no limit). */
+  private[api] def driverTierBudget(spark: SparkSession): Long = {
+    val share = (Runtime.getRuntime.maxMemory * DriverStoreHeapShare).toLong
+    val maxResult = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (maxResult > 0) math.min(share, maxResult) else share
+  }
 
   /** (surrogate, full record) pairs of a (table ⋈ sid-mapping) frame,
     * in its partitions — what the warm record store is built from. Lives

@@ -19,7 +19,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   *  - `serveJobs`: Spark-level ground truth — a `SparkListener` counting
   *    jobs tagged with the facade's `graft.serve` job group. This is the
   *    counter the serving spec pins the no-N+1 contract on: a k-row
-  *    search answers in O(1) jobs, not O(k).
+  *    search answers in O(1) jobs, not O(k);
+  *  - `driverSearches` / `jobSearches` / `coldSearches`: search
+  *    dispatches by the tier that answered them — a warm index's driver
+  *    copy (no Spark job), a warm index probed in one Spark job, or a
+  *    plan over the live table (no warm index serves the name).
   */
 class NeighborlyMetrics(gauge: () => Long,
     val serveGroup: String = NeighborlyMetrics.ServeGroup) extends SparkListener {
@@ -27,6 +31,9 @@ class NeighborlyMetrics(gauge: () => Long,
   val searchCount = new AtomicLong
   val searchNanos = new AtomicLong
   val serveJobs = new AtomicLong
+  val driverSearches = new AtomicLong
+  val jobSearches = new AtomicLong
+  val coldSearches = new AtomicLong
 
   /** Observable vector-count gauge (VectorDatabase.cs:342-348). */
   def vectorCount: Long = gauge()

@@ -320,10 +320,10 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
 
   /** POST /vectors/searchNearest?k= (RestServices.cs:73-87 /
     * VectorService.cs:74-84): facade default dispatch, full records +
-    * dist in result order via `searchRecords` — warm, ONE Spark job that
-    * probes the index and reads the hits' records from the co-partitioned
-    * record store; cold, two bounded k-row jobs. Never a per-hit driver
-    * round-trip. */
+    * dist in result order via `searchRecords` — warm, a probe of the
+    * index that reads the hits' records from the co-partitioned record
+    * store, on its driver copy (no Spark job) or in ONE job; cold, two
+    * bounded k-row jobs. Never a per-hit driver round-trip. */
   private def searchNearest(ex: HttpExchange): Unit = {
     val k = queryParams(ex).get("k").map(_.toInt).getOrElse(10)
     val dto = parseDto(mapper.readTree(ex.getRequestBody))
@@ -338,7 +338,8 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
     * registers an ObservableGauge + per-search activities; this serves
     * the same signals as JSON): live vector count (the facade's memoized
     * count — no Spark job while the table is unchanged), search span
-    * counters, and the serve-group job count. */
+    * counters, the serve-group job count, and the searches each tier
+    * answered (driver copy, one job, cold). */
   private def metrics(ex: HttpExchange): Unit = {
     val m = db.metrics
     val n = mapper.createObjectNode()
@@ -346,6 +347,9 @@ class VectorHttpServer(val db: NeighborlySpark, port: Int = 0) {
     n.put("searchCount", m.searchCount.get())
     n.put("searchNanos", m.searchNanos.get())
     n.put("serveJobs", m.serveJobs.get())
+    n.put("driverSearches", m.driverSearches.get())
+    n.put("jobSearches", m.jobSearches.get())
+    n.put("coldSearches", m.coldSearches.get())
     respond(ex, 200, Some(n))
   }
 

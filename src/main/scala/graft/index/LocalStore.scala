@@ -5,14 +5,16 @@ import scala.collection.mutable
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SizeEstimator
 
 /** A record store laid out like a per-partition local index
   * ([[LocalAnn]], [[LocalHnsw]]): partition p holds a sid → record map
   * for exactly the surrogate ids of index partition p. One
   * `zipPartitions` job then answers a query with each partition's local
   * top-k AND its records, and the driver merges parts×k of them — the
-  * probe and the record fetch are one Spark job, and no index or table
-  * moves to the driver.
+  * probe and the record fetch are one Spark job. A store small enough
+  * for the driver can instead be collected once ([[collectPartitions]]) and
+  * probed there with the same two steps ([[topKLocal]]), with no job.
   */
 object LocalStore {
 
@@ -43,18 +45,59 @@ object LocalStore {
       .values)
   }
 
-  /** The k best (dist, sid, record) over every partition, in (dist, sid)
-    * order, from ONE job: `probe` gives a partition's local top-k as
-    * (sid, dist), and each hit takes its record from the co-located map.
-    * A probed sid missing from its partition's map means the store and
-    * the index disagree; that throws rather than dropping the hit. */
+  /** A hit: (dist, sid, record). */
+  type Hit[R] = (Double, Long, R)
+
+  /** The canonical hit order: (dist, sid). */
+  private def byDistSid[R]: Ordering[Hit[R]] = Ordering.by[Hit[R], (Double, Long)](t => (t._1, t._2))
+
+  /** The per-partition step: `probe` gives each of a partition's indexes
+    * its local top-k as (sid, dist), and each hit takes its record from
+    * the partition's map. A probed sid missing from the map means the
+    * store and the index disagree; that throws rather than dropping the
+    * hit. */
+  def probePartition[I, R](indexes: Iterator[I], recs: scala.collection.Map[Long, R])(
+      probe: I => Seq[(Long, Double)]): Iterator[Hit[R]] =
+    indexes.flatMap(probe(_).iterator.map { case (sid, d) =>
+      (d, sid, recs.getOrElse(sid, throw new IllegalStateException(
+        s"sid $sid is in the index partition but not in its record store")))
+    })
+
+  /** The merge step: the k best hits in (dist, sid) order. */
+  def merge[R](hits: Iterator[Hit[R]], k: Int): Array[Hit[R]] =
+    hits.toArray.sorted(byDistSid[R]).take(k)
+
+  /** The k best hits over every partition from ONE job: each task runs
+    * the per-partition step and merges its own hits, and the driver
+    * merges the parts×k. */
   def topK[I, R](index: RDD[I], store: Store[R], k: Int)(
-      probe: I => Seq[(Long, Double)]): Array[(Double, Long, R)] =
-    index.zipPartitions(store) { (indexes, maps) =>
-      val recs = maps.next()
-      indexes.flatMap(probe(_).iterator.map { case (sid, d) =>
-        (d, sid, recs.getOrElse(sid, throw new IllegalStateException(
-          s"sid $sid is in the index partition but not in its record store")))
-      })
-    }.takeOrdered(k)(Ordering.by[(Double, Long, R), (Double, Long)](t => (t._1, t._2)))
+      probe: I => Seq[(Long, Double)]): Array[Hit[R]] =
+    merge(index.zipPartitions(store) { (indexes, maps) =>
+      Iterator.single(merge(probePartition(indexes, maps.next())(probe), k))
+    }.collect().iterator.flatten, k)
+
+  /** Every partition of `rdd` on the driver, in partition order, one
+    * element per partition (an empty partition gives an empty Seq), from
+    * ONE job. Partition p of an index and map p of the store laid out
+    * like it (one map per partition) belong together, so collecting each
+    * side this way keeps them paired by position. */
+  def collectPartitions[A](rdd: RDD[A]): Array[Seq[A]] =
+    rdd.mapPartitions(it => Iterator.single(it.toVector: Seq[A])).collect()
+
+  /** [[topK]] over partitions already on the driver — partition p's
+    * indexes with record map p: the same two steps on the calling thread,
+    * with no Spark job. */
+  def topKLocal[I, R](indexes: Array[Seq[I]], records: Array[scala.collection.Map[Long, R]], k: Int)(
+      probe: I => Seq[(Long, Double)]): Array[Hit[R]] = {
+    require(indexes.length == records.length,
+      s"${indexes.length} index partitions but ${records.length} record maps")
+    merge(indexes.indices.iterator.flatMap(p => probePartition(indexes(p).iterator, records(p))(probe)), k)
+  }
+
+  /** (rows, estimated in-heap bytes) of a store, in one job: what a
+    * driver copy of it would hold. */
+  def measure[R](store: Store[R]): (Long, Long) =
+    store.map(m => (m.size.toLong, SizeEstimator.estimate(m))).fold((0L, 0L)) {
+      case ((r1, b1), (r2, b2)) => (r1 + r2, b1 + b2)
+    }
 }

@@ -76,12 +76,14 @@ class NeighborlySparkSpec extends SparkSpec {
 
   test("text search routes through the composition (prefix hit for short text)") {
     val d = db()
+    d.setEmbeddingProvider(graft.ops.HashEmbeddingProvider(4))
     val out = d.search("one", 2, SearchAlgorithm.KDTree, None).collect()
     assert(out.map(_.getAs[String]("id")).contains("v2"))
   }
 
   test("text search dispatches the embedded query through the algorithm (ADVICE r2)") {
     val d = db()
+    d.setEmbeddingProvider(graft.ops.HashEmbeddingProvider(4))
     // LSH path answers (approximate pipeline, small table → full recall here)
     val lsh = d.search("one", 2, SearchAlgorithm.LSH, Some(10.0)).collect()
     assert(lsh.nonEmpty)
@@ -96,6 +98,21 @@ class NeighborlySparkSpec extends SparkSpec {
     // exact and BQ paths agree on this small table
     val bq = d.search("one", 2, SearchAlgorithm.BinaryQuantization, Some(10.0)).collect()
     assert(bq.nonEmpty)
+  }
+
+  test("text search and text range search reject an embedding of another dimension") {
+    val d = db() // 4-d table, 300-d default provider
+    val vectorErr = intercept[IllegalArgumentException](
+      d.search(Array.fill(300)(0f), 2, SearchAlgorithm.KDTree, 10.0))
+    assert(vectorErr.getMessage.contains("dimension 300 != table dimension 4"))
+    for (alg <- Seq(SearchAlgorithm.KDTree, SearchAlgorithm.LSH, SearchAlgorithm.Range))
+      assert(intercept[IllegalArgumentException](d.search("one", 2, alg, Some(10.0)))
+        .getMessage === vectorErr.getMessage, s"$alg")
+    assert(intercept[IllegalArgumentException](
+      d.rangeSearch("one", 1.5, SearchAlgorithm.Linear, "euclidean")).getMessage === vectorErr.getMessage)
+    // a provider of the table's dimension is served
+    d.setEmbeddingProvider(graft.ops.HashEmbeddingProvider(4))
+    assert(d.rangeSearch("one", 100.0, SearchAlgorithm.Linear, "euclidean").count() === 3L)
   }
 
   test("plan-growth guard: 1000 point mutations stay flat (localCheckpoint every N)") {

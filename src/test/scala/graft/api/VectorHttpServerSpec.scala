@@ -106,6 +106,9 @@ class VectorHttpServerSpec extends SparkSpec {
       assert(body.contains("\"vectorCount\":3"))
       assert(body.contains("\"searchCount\":1"))
       assert(body.contains("\"searchNanos\""))
+      // no index was built: the cold tier answered
+      assert(body.contains("\"coldSearches\":1"))
+      assert(body.contains("\"driverSearches\":0") && body.contains("\"jobSearches\":0"))
     } finally srv.stop()
   }
 
@@ -177,8 +180,10 @@ class VectorHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  test("a warm search is exactly ONE Spark job, KDTree and HNSW alike") {
-    val db = new NeighborlySpark(spark, 2)
+  /** Serve jobs of 3 warm searches each over REST (KDTree, the REST
+    * default), the facade verb and HNSW, after a first probe of each
+    * structure; and the searches each tier answered over those 9. */
+  private def warmSearchJobs(db: NeighborlySpark): (Seq[Long], Long, Long) = {
     db.addVectorRecords((1 to 30).map(i =>
       graft.core.VectorRecord(f"w$i%02d", Array(i.toFloat / 100f, 0f))))
     assert(db.buildAllIndexes())
@@ -186,26 +191,43 @@ class VectorHttpServerSpec extends SparkSpec {
     val base = s"http://127.0.0.1:${srv.start()}"
     try {
       val q = Array(0f, 0f)
-      // first probes build the lazily persisted index partitions
+      // first probes build the lazily persisted index partitions (and,
+      // within the driver budget, collect their driver copies)
       req(base, "POST", "/vectors/searchNearest?k=10", """{"values":[0.0,0.0]}""")
       db.searchRecords(q, 10, SearchAlgorithm.HNSW)
       waitForListeners()
+      val (driver0, job0) = (db.metrics.driverSearches.get(), db.metrics.jobSearches.get())
       def jobsOf(n: Int)(search: => Unit): Long = {
         val before = db.metrics.serveJobs.get()
         (1 to n).foreach(_ => search)
         waitForListeners()
         db.metrics.serveJobs.get() - before
       }
-      // KDTree: the REST default, and the facade verb
-      assert(jobsOf(3) {
-        val hits = req(base, "POST", "/vectors/searchNearest?k=10", """{"values":[0.0,0.0]}""")
-        assert(hits.statusCode() === 200 && hits.body().contains("\"w01\""))
-      } === 3L)
-      assert(jobsOf(3)(assert(db.searchRecords(q, 10).head._1.id === "w01")) === 3L)
-      assert(jobsOf(3)(assert(db.searchRecords(q, 10, SearchAlgorithm.HNSW)
-        .head._1.id === "w01")) === 3L)
+      val jobs = Seq(
+        jobsOf(3) {
+          val hits = req(base, "POST", "/vectors/searchNearest?k=10", """{"values":[0.0,0.0]}""")
+          assert(hits.statusCode() === 200 && hits.body().contains("\"w01\""))
+        },
+        jobsOf(3)(assert(db.searchRecords(q, 10).head._1.id === "w01")),
+        jobsOf(3)(assert(db.searchRecords(q, 10, SearchAlgorithm.HNSW).head._1.id === "w01")))
       assert(db.hasWarmIndexes)
+      (jobs, db.metrics.driverSearches.get() - driver0, db.metrics.jobSearches.get() - job0)
     } finally { srv.stop(); db.close() }
+  }
+
+  test("a warm search is exactly ONE Spark job, KDTree and HNSW alike") {
+    // a zero driver budget forces the one-job tier
+    val db = new NeighborlySpark(spark, 2, graft.ops.HashEmbeddingProvider(), 32, false, 5000,
+      driverTierBytes = 0L)
+    val (jobs, driver, job) = warmSearchJobs(db)
+    assert(jobs === Seq(3L, 3L, 3L))
+    assert((driver, job) === ((0L, 9L)))
+  }
+
+  test("a warm search within the driver budget runs NO Spark job, KDTree and HNSW alike") {
+    val (jobs, driver, job) = warmSearchJobs(new NeighborlySpark(spark, 2))
+    assert(jobs === Seq(0L, 0L, 0L))
+    assert((driver, job) === ((9L, 0L)))
   }
 
   test("/metrics: a repeat scrape runs no Spark job, and replies without the delayed-ACK stall") {

@@ -4,8 +4,10 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions.col
 
 /** The record store laid out like the local indexes: one job answers
-  * with the records, equal to the index probe; a reloaded layout is
-  * followed; a store that disagrees with its index fails loudly. */
+  * with the records, equal to the index probe; the same probe over
+  * partitions collected to the driver answers the same; a reloaded
+  * layout is followed; a store that disagrees with its index fails
+  * loudly. */
 class LocalStoreSpec extends SparkSpec {
   import sqlImplicits._
 
@@ -26,6 +28,28 @@ class LocalStoreSpec extends SparkSpec {
         assert(exact.forall { case (_, sid, rec) => rec == s"rec-$sid" })
         val graph = LocalStore.topK(hnsw, store, 5)(_.search(q, 5, LocalHnsw.DefaultEf))
         assert(graph.map(t => (t._1, t._2)).toSeq === LocalHnsw.searchTop(hnsw, q, 5).toSeq)
+      }
+    } finally { ann.unpersist(); hnsw.unpersist(); store.unpersist() }
+  }
+
+  test("topKLocal over collected partitions equals topK, with an empty partition") {
+    // partition 1 is emptied: the builds emit no index for it, the store
+    // an empty map, and collecting each side by partition keeps them paired
+    val gappy = keyed.filter(org.apache.spark.sql.functions.spark_partition_id() =!= 1)
+    val ann = LocalAnn.build(gappy, "_sid", "values")
+    val hnsw = LocalHnsw.build(gappy, "_sid", "values")
+    val store = LocalStore.fromPairs(gappy.select("_sid", "name").as[(Long, String)].rdd)
+    try {
+      val annParts = LocalStore.collectPartitions(ann)
+      val hnswParts = LocalStore.collectPartitions(hnsw)
+      val maps = store.collect()
+      assert(annParts.map(_.size).toSeq === Seq(1, 0, 1))
+      assert(maps.length === 3 && maps(1).isEmpty)
+      for (q <- Seq(Array(0f, 0f), Array(3.2f, 4.1f), Array(9f, -1f)); k <- Seq(1, 5, 100)) {
+        assert(LocalStore.topKLocal(annParts, maps, k)(_.topKWithStats(q, k)._1).toSeq ===
+          LocalStore.topK(ann, store, k)(_.topKWithStats(q, k)._1).toSeq)
+        assert(LocalStore.topKLocal(hnswParts, maps, k)(_.search(q, k, LocalHnsw.DefaultEf)).toSeq ===
+          LocalStore.topK(hnsw, store, k)(_.search(q, k, LocalHnsw.DefaultEf)).toSeq)
       }
     } finally { ann.unpersist(); hnsw.unpersist(); store.unpersist() }
   }
