@@ -1,15 +1,15 @@
 package graft.index
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Index-artifact persistence (SURVEY §2.1 "Index persistence": the
   * reference serializes search indexes into its V1 snapshot,
-  * Neighborly/Search/SearchService.cs:285-342). Spark-native form: MLlib
-  * model dirs + a small parquet of parameters; LSH projections regenerate
+  * Neighborly/Search/SearchService.cs:285-342). Spark-native form: small
+  * parquets — PQ codebooks and IVF centers in one (block, cid, center)
+  * layout, and the scalar parameters; LSH projections regenerate
   * from (dim, tables, funcs, seed) and exact search needs no artifact,
   * mirroring the reference's choice to persist only what cannot be
   * re-derived cheaply.
@@ -102,21 +102,29 @@ object IndexStore {
   def loadBqThreshold(spark: SparkSession, path: String): Double =
     spark.read.parquet(s"$path/bq_threshold").head().getAs[Double]("threshold")
 
-  /** IVF coarse centroids as a tiny parquet (cid, center) — the raw-center
-    * model needs no MLlib machinery to restore. */
-  def saveIvf(spark: SparkSession, model: IvfModel, path: String): Unit = {
+  /** Codebooks as a tiny parquet of (block, cid, center) rows — PQ's m
+    * blocks, or IVF's coarse centers as block 0. */
+  private def saveCodebooks(spark: SparkSession, codebooks: Array[Array[Array[Float]]],
+      dir: String): Unit = {
     import spark.implicits._
-    model.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "center")
-      .write.mode("overwrite").parquet(s"$path/ivf_centers")
+    codebooks.zipWithIndex.flatMap { case (centers, b) =>
+      centers.zipWithIndex.map { case (c, i) => (b, i, c.toSeq) }
+    }.toSeq.toDF("block", "cid", "center")
+      .write.mode("overwrite").parquet(dir)
   }
 
-  def loadIvf(spark: SparkSession, path: String): IvfModel = {
-    val centers = spark.read.parquet(s"$path/ivf_centers")
-      .orderBy("cid").collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("center").toArray)
-    IvfModel(centers)
-  }
+  private def loadCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Float]]] =
+    spark.read.parquet(dir).collect()
+      .map(r => (r.getAs[Int]("block"), r.getAs[Int]("cid"),
+        r.getAs[scala.collection.Seq[Float]]("center").toArray))
+      .groupBy(_._1).toArray.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3))
+
+  def saveIvf(spark: SparkSession, model: IvfModel, path: String): Unit =
+    saveCodebooks(spark, Array(model.centers), s"$path/ivf_centers")
+
+  def loadIvf(spark: SparkSession, path: String): IvfModel =
+    IvfModel(loadCodebooks(spark, s"$path/ivf_centers").headOption.getOrElse(Array.empty))
 
   /** The IVFPQ read-path artifact: the (id, cluster, codes) table written
     * `partitionBy("cluster")`, so a probe's `cluster IN (…)` filter
@@ -149,19 +157,12 @@ object IndexStore {
   def loadIvfPq(spark: SparkSession, path: String): (IvfModel, PqModel, org.apache.spark.sql.DataFrame) =
     (loadIvf(spark, path), loadPq(spark, path), loadIvfCoded(spark, path))
 
-  def savePq(spark: SparkSession, model: PqModel, path: String): Unit = {
-    import spark.implicits._
-    Seq((model.numSubVectors, model.subDim)).toDF("num_sub_vectors", "sub_dim")
-      .write.mode("overwrite").parquet(s"$path/pq_meta")
-    model.models.zipWithIndex.foreach { case (km, b) =>
-      km.write.overwrite().save(s"$path/pq_block_$b")
-    }
-  }
+  def savePq(spark: SparkSession, model: PqModel, path: String): Unit =
+    saveCodebooks(spark, model.codebooks, s"$path/pq_codebooks")
 
+  /** An inert (no-block) model reloads as the one an empty fit gives. */
   def loadPq(spark: SparkSession, path: String): PqModel = {
-    val meta = spark.read.parquet(s"$path/pq_meta").head()
-    val m = meta.getAs[Int]("num_sub_vectors")
-    val models = (0 until m).map(b => KMeansModel.load(s"$path/pq_block_$b")).toArray
-    PqModel(models, meta.getAs[Int]("sub_dim"))
+    val codebooks = loadCodebooks(spark, s"$path/pq_codebooks")
+    PqModel(codebooks, codebooks.headOption.fold(1)(_.head.length))
   }
 }

@@ -1,7 +1,5 @@
 package graft.index
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -13,9 +11,10 @@ import graft.functions.{Distances, TopCells}
   * extension; the reference has no IVF, its ANN family is LSH/BQ/PQ).
   *
   * Two coarse-quantizer fits:
-  *  - `fit`: MLlib k-means on a bounded seeded sample
+  *  - `fit`: Lloyd's k-means on a bounded seeded sample, the PQ
+  *    codebook trainer ([[Codebooks]]) with one full-width block
   *    ([[Sampling.seededSample]] — the 100 TB-safe path; the single
-  *    training partition never holds more than `trainSample` rows);
+  *    training task never holds more than `trainSample` rows);
   *  - `fitSampledCentroids`: centroids are actual table rows picked by a
   *    multiplicative hash of the id — plain integer/float arithmetic that
   *    a SQL oracle can replay end-to-end (centroid selection, assignment,
@@ -24,11 +23,10 @@ import graft.functions.{Distances, TopCells}
   *    a standard IVF variant (random-subset coarse quantizer).
   *
   * The model holds raw float centers; `assign` computes the
-  * nearest-centroid id with the codegen distance kernel + an
-  * `array_min` over (dist, idx) structs — no MLlib, no UDF on the scan
-  * path, whole-stage-codegen friendly. `cluster` is the partition key
-  * you'd bucket the table by at 100 TB, so a probe scans only
-  * `nprobe/nlist` of the data.
+  * nearest-centroid id with the codegen argmin kernel the trainer
+  * assigns with ([[graft.functions.ArgMinDistExpr]]) — no UDF on the
+  * scan path. `cluster` is the partition key you'd bucket the table by
+  * at 100 TB, so a probe scans only `nprobe/nlist` of the data.
   */
 final case class IvfModel(centers: Array[Array[Float]]) {
   def nlist: Int = centers.length
@@ -41,20 +39,13 @@ final case class IvfModel(centers: Array[Array[Float]]) {
 
 object Ivf {
 
-  /** k-means coarse centroids (seed 42) on a bounded deterministic sample;
-    * the sample (not the table) is coalesced to one partition so the fit
-    * is identical across sessions AND bounded at scale. */
+  /** k-means coarse centroids (seed 42) on a bounded deterministic sample,
+    * fitted in one task ([[Codebooks]]), so the fit is identical across
+    * sessions AND bounded at scale. An empty input gives no centers. */
   def fit(vectors: DataFrame, vecCol: String, nlist: Int = 16, seed: Long = 42,
-      maxIter: Int = 20, trainSample: Int = 1 << 18): IvfModel = {
-    val n = vectors.count()
-    val k = math.min(math.min(nlist.toLong, n), trainSample.toLong).toInt
-    val train = Sampling.seededSample(vectors, vecCol, n, trainSample, seed)
-      .select(array_to_vector(col(vecCol)).as("_ivf_f")).coalesce(1).cache()
-    val km = new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-      .setFeaturesCol("_ivf_f").setPredictionCol("_ivf_c").fit(train)
-    train.unpersist()
-    IvfModel(km.clusterCenters.map(_.toArray.map(_.toFloat)))
-  }
+      maxIter: Int = 20, trainSample: Int = 1 << 18): IvfModel =
+    IvfModel(Codebooks.fit(vectors, vecCol, _ => 1, nlist, maxIter, seed, trainSample)
+      .fold(Array.empty[Array[Float]])(_._2.head))
 
   /** Knuth multiplicative hash of the row id — 2654435761 = ⌊2³²/φ⌋.
     * Chosen because `(id * 2654435761) % 4294967296` is exactly
@@ -273,8 +264,7 @@ object Ivf {
     // probed cell (IVFADC, §V): tables[b][c] = ‖rq_block_b − centroid_{b,c}‖²
     // — still |Q|·nprobe broadcast rows, never data
     val subDim = pq.subDim
-    val pqCentsLit = typedLit(
-      pq.models.map(_.clusterCenters.map(_.toArray.toSeq).toSeq).toSeq)
+    val pqCentsLit = typedLit(pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
     val probesT = probes
       .withColumn("_rqv",
         zip_with(col("_qv"), element_at(centersLit(ivf), col("cluster") + lit(1)),

@@ -1,21 +1,20 @@
 package graft.index
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{AdcExpr, Distances}
+import graft.functions.{AdcExpr, ArgMinDist, ArgMinDistExpr, Distances}
 
 /** Product Quantization (reference: Neighborly/Search/ProductQuantization.cs).
   *
   * Semantics reproduced:
   *  - auto sub-vector count prefers block sizes of 4-16 dims
   *    (CalculateOptimalSubVectors `:144-165`);
-  *  - one 256-centroid codebook per block, k-means seed 42, ≤50 iterations
-  *    (`:167-189`; Lloyd's in the reference → MLlib KMeans here — same
-  *    objective, declared substitution);
-  *  - codes = nearest centroid per block (`:289-306`);
+  *  - one 256-centroid codebook per block, Lloyd's k-means, seed 42,
+  *    ≤50 iterations (`:167-189`; [[Codebooks]], k-means++ seeds);
+  *  - codes = nearest centroid per block (`:289-306`; the
+  *    [[graft.functions.ArgMinDistExpr]] kernel the trainer assigns with);
   *  - search = ADC lookup tables from the query, approx dist
   *    `sqrt(Σ_b table[b][code_b])`, ascending sort (`:330-379`).
   *
@@ -29,26 +28,22 @@ import graft.functions.{AdcExpr, Distances}
   * rows picked by `xxhash64(vector, seed)` order — deterministic across
   * sessions and cluster sizes, standard PQ practice), coalesced to one
   * partition only AFTER the limit so the single training task never sees
-  * more than `trainSample` rows regardless of table size;
+  * more than `trainSample` rows regardless of table size; the codebooks
+  * are plain `[block][centroid][subDim]` float arrays;
   * `quantize` is a distributed column append (the
   * 8-bit codes are the persisted index, 32×subDim:1 compression,
   * GetCompressionRatio `:385-393`); search is a codegen table-lookup scan +
   * TakeOrderedAndProject — no shuffle beyond the bounded top-k.
   */
-final case class PqModel(models: Array[KMeansModel], subDim: Int) {
-  def numSubVectors: Int = models.length
+final case class PqModel(codebooks: Array[Array[Array[Float]]], subDim: Int) {
+  def numSubVectors: Int = codebooks.length
 
   /** [block][centroid] squared-euclidean of the query's block slice to the
     * centroid — the ADC lookup tables (ProductQuantization.cs:340-358). */
   def adcTables(query: Array[Float]): Array[Array[Double]] =
-    models.zipWithIndex.map { case (m, b) =>
-      m.clusterCenters.map { c =>
-        var s = 0.0; var j = 0
-        while (j < subDim) {
-          val d = query(b * subDim + j).toDouble - c(j); s += d * d; j += 1
-        }
-        s
-      }
+    codebooks.zipWithIndex.map { case (centers, b) =>
+      val slice = ArrayData.toArrayData(query.slice(b * subDim, (b + 1) * subDim))
+      centers.map(ArgMinDist.sqDist(slice, _))
     }
 
   /** 32 × subDim : 1 (8-bit code per 32-bit-float block —
@@ -66,55 +61,38 @@ object ProductQuantization {
     }).orElse(((dim / 8) to 1 by -1).find(dim % _ == 0)).getOrElse(1)
   }
 
-  private def blockCol(vecCol: String, b: Int, subDim: Int) =
-    array_to_vector(slice(col(vecCol), b * subDim + 1, subDim)).as(s"_pq_f$b")
-
   /** Train one codebook per block on a bounded deterministic sample.
     *
     * Tables larger than `trainSample` rows are cut down by seeded hash
     * order (`orderBy(xxhash64(vector, seed)).limit(trainSample)` — a
     * TakeOrderedAndProject, so only `trainSample` rows ever reach the
-    * driver-side single training partition no matter the table size).
-    * Smaller tables keep the plain `coalesce(1)` path so fitted centers
-    * stay identical across sessions with different parallelism (the
-    * oracle depends on it). */
+    * single training task no matter the table size). The one task sorts
+    * the sample before it seeds, so the codebooks are identical across
+    * sessions with different parallelism (the oracle depends on it). An
+    * empty input gives the inert model (ProductQuantization.cs:113-119). */
   def fit(vectors: DataFrame, vecCol: String,
       numSubVectors: Option[Int] = None, numCentroids: Int = 256,
       maxIter: Int = 50, seed: Long = 42,
       trainSample: Int = 1 << 18): PqModel = {
     require(numCentroids <= 256, "Number of centroids cannot exceed 256 (byte limit)")
-    val firstRow = vectors.select(size(col(vecCol))).limit(1).collect()
-    if (firstRow.isEmpty) return PqModel(Array.empty, 1) // empty input → inert model (ProductQuantization.cs:113-119)
-    val dim = firstRow.head.getInt(0)
-    val m = numSubVectors.getOrElse(optimalSubVectors(dim))
-    require(dim % m == 0,
-      s"Vector dimensions ($dim) must be evenly divisible by number of sub-vectors ($m)")
-    val subDim = dim / m
-    val n = vectors.count()
-    val k = math.min(math.min(numCentroids.toLong, n), trainSample.toLong).toInt
-    val train = Sampling.seededSample(vectors, vecCol, n, trainSample, seed)
-      .select((0 until m).map(b => blockCol(vecCol, b, subDim)): _*)
-      .coalesce(1).cache()
-    val models = (0 until m).map { b =>
-      new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-        .setFeaturesCol(s"_pq_f$b").setPredictionCol(s"_pq_c$b")
-        .fit(train)
-    }.toArray
-    train.unpersist()
-    PqModel(models, subDim)
+    val blocks = (dim: Int) => numSubVectors.getOrElse(optimalSubVectors(dim))
+    Codebooks.fit(vectors, vecCol, blocks, numCentroids, maxIter, seed, trainSample) match {
+      case None => PqModel(Array.empty, 1)
+      case Some((dim, codebooks)) =>
+        val m = blocks(dim)
+        require(dim % m == 0,
+          s"Vector dimensions ($dim) must be evenly divisible by number of sub-vectors ($m)")
+        PqModel(codebooks, dim / m)
+    }
   }
 
-  /** Append the `codes ARRAY<INT>` column (the persistable PQ index). */
+  /** Append the `codes ARRAY<INT>` column (the persistable PQ index): per
+    * block, the nearest centroid of the vector's slice. */
   def quantize(model: PqModel, vectors: DataFrame, vecCol: String,
-      outCol: String = "codes"): DataFrame = {
-    val m = model.numSubVectors
-    val withFeatures = vectors.select(
-      (vectors.columns.map(col) ++ (0 until m).map(b => blockCol(vecCol, b, model.subDim))): _*)
-    val predicted = model.models.foldLeft(withFeatures)((df, km) => km.transform(df))
-    predicted
-      .withColumn(outCol, array((0 until m).map(b => col(s"_pq_c$b")): _*))
-      .drop((0 until m).flatMap(b => Seq(s"_pq_f$b", s"_pq_c$b")): _*)
-  }
+      outCol: String = "codes"): DataFrame =
+    vectors.withColumn(outCol, array(model.codebooks.indices.map(b =>
+      ArgMinDistExpr(slice(col(vecCol), b * model.subDim + 1, model.subDim),
+        model.codebooks(b))): _*))
 
   /** Re-rank pool sized by the measured ADC-rank law, not a hand-tuned
     * constant: at fixed code resolution the true neighbor's rank in the

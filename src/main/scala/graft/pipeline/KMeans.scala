@@ -8,10 +8,11 @@ import graft.functions.NearestCentroidExpr
 /** Integer-exact Lloyd's k-means (Lloyd, IEEE TIT 1982) over an
   * embedding column — the clustering primitive diversity-aware corpus
   * pipelines build on (SemDeDup-style cluster-then-dedup, cluster-
-  * balanced sampling, coverage reports). Unlike the MLlib-backed IVF
-  * trainer (seeded, sample-based, oracle-opaque — `index/Ivf.scala`),
-  * this variant is deterministic END-TO-END in micro-unit integer
-  * arithmetic, so a SQL oracle replays every iteration exactly:
+  * balanced sampling, coverage reports). Unlike the PQ/IVF codebook
+  * trainer (float Lloyd in one task over a seeded sample, k-means++
+  * seeds — `index/Codebooks.scala`), this distributed variant is
+  * deterministic END-TO-END in micro-unit integer arithmetic, so a SQL
+  * oracle replays every iteration exactly:
   *
   *  - elements freeze to `⌊x·1e6 + 0.5⌋`; distances are exact integer
   *    sums ([[NearestCentroidExpr]]); ties keep the lower cluster id;

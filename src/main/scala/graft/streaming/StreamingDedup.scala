@@ -221,31 +221,9 @@ object StreamingDedup {
       .write.mode("overwrite").parquet(s"$storePath/urls/batch$batchId")
   }
 
-  /** Streaming IMAGE near-dup keep (r12 verdict Next #8, second leg):
-    * each micro-batch hashes its images once (dHash kernel), collapses
-    * within-batch near-dup clusters (shared 8-bit-word banding +
-    * connected components, min-id representative), then probes the
-    * persisted `(word, bucket, dhash, id)` perceptual-hash index —
-    * candidates share a band word, verification is ONE packed-Hamming
-    * compare on the stored hash (no payload fetch). Survivors append
-    * `(id, dhash)` under `kept/batch<id>` and their band rows under
-    * `buckets/batch<id>`; same commit protocol as the text/vector legs.
-    * Because the index holds hashes, the store stays narrow no matter
-    * how large the media payloads are — the 100 TB crawl-refresh shape. */
-  def nearDupKeepImages(stream: DataFrame, idCol: String, mediaCol: String,
-      storePath: String, checkpoint: String,
-      maxHamming: Int = 8, maxBucket: Int = 4096,
-      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDupImageBatch(batch, batchId, idCol, mediaCol, storePath,
-          maxHamming, maxBucket)
-      }
-      .start()
-
+  /** One micro-batch of IMAGE near-dup keep: within-batch dHash clusters
+    * collapse, then survivors probe the stored `(word, bucket, dhash, id)`
+    * index and append under `kept/batch<id>` and `buckets/batch<id>`. */
   private[graft] def nearDupImageBatch(batch: DataFrame, batchId: Long,
       idCol: String, mediaCol: String, storePath: String,
       maxHamming: Int, maxBucket: Int,

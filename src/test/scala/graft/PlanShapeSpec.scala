@@ -48,6 +48,12 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("pq_knn quantizes with the argmin kernel: no interpreted UDF on the PQ scan") {
+    val p = plan("pq_knn")
+    assert(p.contains("argmin_dist"), s"want the codegen argmin kernel, got:\n${p.take(1200)}")
+    assert(!p.contains("UDF"), s"an interpreted UDF is back on the PQ scan:\n${p.take(1200)}")
+  }
+
   test("point lookup pushes the id predicate into the scan") {
     val p = plan("q_point_lookup")
     assert(p.contains("PushedFilters:") && (p.contains("EqualTo") || p.contains("In(")),

@@ -65,7 +65,7 @@ class GrpcHttp2Spec extends SparkSpec {
       def searchNoK() = c.call("SearchNearest", VectorProto.encodeSearchNearestRequest(
         VectorBinary.toBinary(VectorRecord(idA, Array(9f, 9f, 9f))), 0))
       for (warm <- Seq(false, true)) {
-        if (warm) { // PQ's k-means needs more than one row to fit
+        if (warm) { // a few more rows, then every index is built
           (1 to 3).foreach(i => srv.db.addVector(VectorRecord(
             f"00000000-0000-0000-0000-$i%012d", Array(i.toFloat, 0f, 0f))))
           assert(srv.db.buildAllIndexes())

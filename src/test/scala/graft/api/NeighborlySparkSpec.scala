@@ -158,6 +158,20 @@ class NeighborlySparkSpec extends SparkSpec {
     assert(pq.nonEmpty && pq.head.getAs[String]("id") === "v1")
   }
 
+  test("a one-vector facade fits every index and its searches return that row") {
+    val d = new NeighborlySpark(spark, 4)
+    d.addVector(VectorRecord("only", Array(1f, 2f, 3f, 4f)))
+    val q = Array(0f, 0f, 0f, 0f)
+    def ids(algo: SearchAlgorithm.Value) =
+      d.search(q, 3, algo, 100.0).collect().map(_.getAs[String]("id")).toSeq
+    // cold: the PQ name fits its one-centroid codebook on demand
+    assert(ids(SearchAlgorithm.ProductQuantization) === Seq("only"))
+    assert(d.buildAllIndexes())
+    for (algo <- Seq(SearchAlgorithm.KDTree, SearchAlgorithm.ProductQuantization))
+      assert(ids(algo) === Seq("only"), s"$algo")
+    d.close()
+  }
+
   test("built local indexes serve KDTree exactly and HNSW via the true graph; writes invalidate") {
     val d = db()
     val exactBefore = d.search(Array(0f, 0f, 0f, 0f), 3, SearchAlgorithm.KDTree, 100.0)

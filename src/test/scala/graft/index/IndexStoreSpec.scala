@@ -104,8 +104,7 @@ class IndexStoreSpec extends SparkSpec {
     val loaded = IndexStore.loadPq(spark, dir)
     assert(loaded.numSubVectors === m.numSubVectors && loaded.subDim === m.subDim)
     (0 until m.numSubVectors).foreach { b =>
-      assert(loaded.models(b).clusterCenters.map(_.toArray.toSeq).toSeq ===
-        m.models(b).clusterCenters.map(_.toArray.toSeq).toSeq)
+      assert(loaded.codebooks(b).map(_.toSeq).toSeq === m.codebooks(b).map(_.toSeq).toSeq)
     }
     val a = ProductQuantization.quantize(m, emb, "embedding").select("codes").collect()
     val c = ProductQuantization.quantize(loaded, emb, "embedding").select("codes").collect()

@@ -16,6 +16,12 @@ class IvfSpec extends SparkSpec {
     assert(assigned.count() === emb.count())
     val clusters = assigned.select($"cluster").distinct().collect().map(_.getInt(0))
     assert(clusters.forall(c => c >= 0 && c < 16))
+    // one row: k caps at n = 1, and the one center is that row
+    val one = emb.filter($"vec_id" === 0)
+    val single = Ivf.fit(one, "embedding", nlist = 16)
+    assert(single.nlist === 1)
+    assert(single.centers.head.toSeq ===
+      one.head().getAs[scala.collection.Seq[Float]]("embedding"))
   }
 
   test("probing every cluster reproduces the exact result") {

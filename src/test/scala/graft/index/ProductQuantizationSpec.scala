@@ -17,22 +17,62 @@ class ProductQuantizationSpec extends SparkSpec {
     assert(ProductQuantization.optimalSubVectors(7) === 1)
   }
 
+  /** Spark jobs `body` submits, counted by its own job group. */
+  private def jobsOf[T](body: => T): (T, Long) = {
+    val group = s"graft.test.pq.${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(p => group == p.getProperty("spark.jobGroup.id")))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "pq fit")
+      val out = try body finally spark.sparkContext.clearJobGroup()
+      // the listener bus is async: poll until the count is stable
+      val deadline = System.nanoTime() + 5e9.toLong
+      var last = -1L
+      while (System.nanoTime() < deadline &&
+        { val c = jobs.get(); val changed = c != last; last = c; Thread.sleep(100); changed }) ()
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("fit produces 256-capped codebooks per block with the right shape") {
     assert(model.numSubVectors === 4)
     assert(model.subDim === 16)
-    model.models.foreach { m =>
-      assert(m.clusterCenters.length <= 256)
-      assert(m.clusterCenters.head.size === 16)
+    model.codebooks.foreach { centers =>
+      assert(centers.length <= 256)
+      assert(centers.head.length === 16)
     }
+    // the row count plus ONE training task; a refit is identical
+    emb.count()
+    val (refit, jobs) = jobsOf(ProductQuantization.fit(emb, "embedding"))
+    assert(jobs >= 1 && jobs <= 2, s"PQ fit ran $jobs Spark jobs")
+    assert(refit.codebooks.map(_.map(_.toSeq).toSeq).toSeq ===
+      model.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
+    // fewer distinct rows (3) than k (8): still k finite centers
+    val few = (0 until 10).map(i => Tuple1(Array(i % 3, 1, 2, 3).map(_.toFloat).toSeq))
+      .toDF("v")
+    val small = ProductQuantization.fit(few, "v", numSubVectors = Some(2), numCentroids = 8)
+    assert(small.codebooks.map(_.length).toSeq === Seq(8, 8))
+    assert(small.codebooks.forall(_.forall(_.forall(x => !x.isNaN && !x.isInfinite))))
   }
 
   test("quantize appends ARRAY<INT> codes in [0, 256)") {
     val rows = ProductQuantization.quantize(model, emb, "embedding")
-      .select($"codes").limit(20).collect()
+      .select($"embedding", $"codes").limit(20).collect()
     rows.foreach { r =>
       val codes = r.getAs[scala.collection.Seq[Int]]("codes")
       assert(codes.length === 4)
       assert(codes.forall(c => c >= 0 && c < 256))
+      // each code is the argmin kernel over the driver-side codebook
+      val v = r.getAs[scala.collection.Seq[Float]]("embedding").toArray
+      val expected = (0 until 4).map(b => graft.functions.ArgMinDist.compute(
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v.slice(b * 16, b * 16 + 16)),
+        model.codebooks(b)))
+      assert(codes === expected)
     }
   }
 

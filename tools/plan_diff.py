@@ -5,7 +5,8 @@
 query key. Two runs of the same code already differ on almost every line:
 expression ids (`doc_id#4675L`), plan ids (`plan_id=54418`), checkpoint
 RDD ids and their call-site line numbers, temp paths, broadcast variable
-ids, lambda class names, the identity hashes of objects embedded in
+ids, lambda class names, the session counter in higher-order function
+variables (`lambda x_118`), the identity hashes of objects embedded in
 expressions, and the checkout directory holding `spark-warehouse`. This script
 normalizes those away and reports, for each key present under both tags,
 `same` or a unified diff of the normalized plans.
@@ -31,6 +32,7 @@ NORMALIZE = [
     (re.compile(r"Broadcast\(\d+\)"), "Broadcast(N)"),         # broadcast var ids
     (re.compile(r"@[0-9a-f]{1,8}\b"), "@H"),                   # JVM identity hashes
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),   # lambda class names
+    (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1_N"),          # higher-order fn variables
     (re.compile(r"file:\S*/spark-warehouse/"), "file:<warehouse>/"),  # checkout dir
 ]
 
