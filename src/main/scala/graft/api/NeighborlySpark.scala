@@ -681,7 +681,7 @@ class NeighborlySpark private[api] (val spark: SparkSession, val dimension: Int,
   private def fitIndexes(snapshot: DataFrame): FittedIndexes = {
     val bq = BqIndex.globalMean(snapshot, "values")
     val pq = PqIndex.fit(snapshot, "values")
-    if (snapshot.limit(1).count() == 0) FittedIndexes(bq, pq, None, 0L) else {
+    if (snapshot.isEmpty) FittedIndexes(bq, pq, None, 0L) else {
       // ORDER-PRESERVING surrogate: the long key is the dense rank of the
       // string id (a distributed sort of ids only), so (dist, _sid)
       // tie-breaks inside the local indexes agree EXACTLY with the scan

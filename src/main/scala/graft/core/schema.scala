@@ -108,8 +108,8 @@ object VectorSchema {
     * from `dim`. Runs distributed — no collect.
     */
   def validateDimension(df: DataFrame, valuesCol: String, dim: Int): Unit = {
-    val bad = df.filter(size(col(valuesCol)) =!= dim).limit(1).count()
-    require(bad == 0L, s"column '$valuesCol' contains vectors of dimension != $dim")
+    require(df.filter(size(col(valuesCol)) =!= dim).isEmpty,
+      s"column '$valuesCol' contains vectors of dimension != $dim")
   }
 
   /** Infer the (uniform) dimension of a vector table from its first row. */

@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Distances, PackBitsExpr}
+import graft.functions.{Distances, PackBitsExpr, Round6Expr}
 import graft.ops.Knn
 
 /** Binary Quantization kNN — the reference's BQ pipeline
@@ -61,13 +61,13 @@ object BinaryQuantization {
       .withColumn("hamming", Distances.hammingPacked(col("packed"), typedLit(qPacked)))
 
     val within = packed.filter(col("hamming") <= maxHamming)
-    val hasCandidates = assumeCandidates || within.limit(1).count() > 0
+    val hasCandidates = assumeCandidates || !within.isEmpty
     val candidates =
       if (hasCandidates) within
       else packed.orderBy(col("hamming"), col(idCol)).limit(k * 3)
 
     candidates
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), qv), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), qv)))
       .select(col(idCol), col("hamming"), col("dist"))
       .orderBy(col("dist"), col(idCol))
       .limit(k)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Distances, TopCells}
+import graft.functions.{Distances, Round6Expr, TopCells}
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic
   * coarse-quantizer scale path for embedding search (build-brief
@@ -114,7 +114,7 @@ object Ivf {
     val probeSet = probesOf(model, query, nprobe)
     assign(model, vectors, vecCol)
       .filter(col("cluster").isin(probeSet: _*))
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), typedLit(query)), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), typedLit(query))))
       .select(col(idCol), col("dist"))
       .orderBy(col("dist"), col(idCol))
       .limit(k)
@@ -234,7 +234,7 @@ object Ivf {
     // table — the wide float column is read for O(k·cf) rows only
     vectors.select(col(idCol), col(vecCol))
       .join(broadcast(pool), idCol)
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), typedLit(query)), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), typedLit(query))))
       .select(col(idCol), col("dist"))
       .orderBy(col("dist"), col(idCol))
       .limit(k)
@@ -290,7 +290,7 @@ object Ivf {
       .join(broadcast(pool.select(col(queryIdCol), col(idCol))), idCol)
       .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol).as("_qv"))),
         queryIdCol)
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), col("_qv")), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), col("_qv"))))
     graft.ops.Knn.batchOver(rescored, idCol, queryIdCol, k)
   }
 
@@ -310,7 +310,7 @@ object Ivf {
     val probes = probePairs(model, queries, queryIdCol, queryVecCol, nprobe)
     val scored = assign(model, vectors, vecCol)
       .join(broadcast(probes), "cluster")
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), col("_qv")), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), col("_qv"))))
     graft.ops.Knn.batchOver(scored, idCol, queryIdCol, k)
   }
 }

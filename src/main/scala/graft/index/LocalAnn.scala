@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.Round6
+
 /** Per-partition local index for the single-query exact-kNN path (SURVEY
   * §2.8's suggested mapPartitions accelerator; build-brief extension — the
   * reference's KD/Ball trees are single-node in-memory indexes,
@@ -49,7 +51,7 @@ final case class LocalNormIndex(ids: Array[Long], norms: Array[Double],
     def worst: (Double, Long) =
       if (heap.size >= k) heap.head else (Double.PositiveInfinity, Long.MaxValue)
     def offer(at: Int): Unit = {
-      val d6 = LocalAnn.round6(LocalAnn.dist(q, vecs(at)))
+      val d6 = Round6.compute(LocalAnn.dist(q, vecs(at)))
       evaluated += 1
       val cand = (d6, ids(at))
       if (heap.size < k) heap.enqueue(cand)
@@ -85,10 +87,6 @@ object LocalAnn {
     while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
     math.sqrt(s)
   }
-
-  /** Spark's `round(col, 6)` semantics (BigDecimal HALF_UP). */
-  private[index] def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Build and persist the per-partition indexes (deserialized in-heap —
     * the "build once" half of the KD-tree contract). */

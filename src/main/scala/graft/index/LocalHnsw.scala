@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.Round6
+
 import scala.collection.mutable
 
 /** True graph HNSW, per partition (Malkov & Yashunin, "Efficient and
@@ -139,7 +141,7 @@ final class HnswGraph(val ids: Array[Long], val vecs: Array[Array[Float]],
     var lc = levels(entry)
     while (lc > 0) { ep = greedyStep(q, ep, lc); lc -= 1 }
     searchLayer(q, ep, math.max(ef, k), 0).toArray
-      .map(t => (LocalAnn.round6(t._1), t._2))
+      .map(t => (Round6.compute(t._1), t._2))
       .sortBy(identity).take(k)
       .map { case (dd, id) => (id, dd) }.toSeq
   }

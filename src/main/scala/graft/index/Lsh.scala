@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Distances, LshCodes, LshCodesExpr}
+import graft.functions.{Distances, LshCodes, LshCodesExpr, Round6Expr}
 import graft.ops.Knn
 
 /** Random-projection LSH (reference: Neighborly/Search/LSHSearch.cs).
@@ -94,12 +94,12 @@ object Lsh {
     val qCodes = params.codesLocal(query)
     val coded = withCodes(vectors, vecCol, params)
     val hits = coded.filter(arrays_overlap(col("codes"), typedLit(qCodes)))
-    val hasCandidates = assumeCandidates || hits.limit(1).count() > 0
+    val hasCandidates = assumeCandidates || !hits.isEmpty
     val candidates =
       if (hasCandidates) hits
       else coded.orderBy(xxhash64(col(idCol), lit(params.seed))).limit(k * 10)
     candidates
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), typedLit(query)), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), typedLit(query))))
       .select(col(idCol), col("dist"))
       .orderBy(col("dist"), col(idCol))
       .limit(k)
@@ -114,16 +114,19 @@ object Lsh {
     val qCodes = params.codesLocal(query)
     withCodes(vectors, vecCol, params)
       .filter(arrays_overlap(col("codes"), typedLit(qCodes)))
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), typedLit(query)), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), typedLit(query))))
       .filter(col("dist") <= radius)
       .select(col(idCol), col("dist"))
       .orderBy(col("dist"), col(idCol))
   }
 
   /** Batch approximate kNN: explode codes on both sides, equi-join on the
-    * code (bucket) value, dedup (query, id) pairs, exact re-rank, bounded
-    * per-query top-k. The shuffle carries only bucket-colliding candidate
-    * pairs — the distributed form of LSHSearch.cs:180-217. */
+    * code (bucket) value, exact re-rank, bounded per-query top-k. A pair
+    * that collides in several tables repeats with the identical dist, and
+    * the top-k aggregate keeps an exact (dist, id) repeat once, so no
+    * dedup shuffle runs first: the one shuffle carries at most k pairs per
+    * query from each map task — the distributed form of
+    * LSHSearch.cs:180-217. */
   def searchBatch(vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, params: LshParams, metric: String = "euclidean"): DataFrame = {
@@ -132,12 +135,10 @@ object Lsh {
     val qCoded = withCodes(queries, queryVecCol, params)
       .select(col(queryIdCol), col(queryVecCol), explode(col("codes")).as("code"))
     // distance computed inside the (broadcast) join projection, so the
-    // multi-table dedup shuffles only (query, id, dist) scalars — never the
-    // embedding arrays (every duplicate pair carries the identical dist)
+    // partial top-k sees only (query, id, dist) scalars
     val pairs = coded.join(broadcast(qCoded), "code")
       .select(col(queryIdCol), col(idCol),
-        round(Distances.metric(metric)(col(vecCol), col(queryVecCol)), 6).as("dist"))
-      .dropDuplicates(queryIdCol, idCol)
+        Round6Expr(Distances.metric(metric)(col(vecCol), col(queryVecCol))).as("dist"))
     Knn.batchOver(pairs, idCol, queryIdCol, k)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{AdcExpr, ArgMinDist, ArgMinDistExpr, Distances}
+import graft.functions.{AdcExpr, ArgMinDist, ArgMinDistExpr, Distances, Round6Expr}
 
 /** Product Quantization (reference: Neighborly/Search/ProductQuantization.cs).
   *
@@ -142,7 +142,7 @@ object ProductQuantization {
       .withColumn("adc", AdcExpr(col("codes"), tables))
       .orderBy(col("adc"), col(idCol))
       .limit(math.max(k, pool))
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), typedLit(query)), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), typedLit(query))))
       .select(col(idCol), col("dist"))
       .orderBy(col("dist"), col(idCol))
       .limit(k)

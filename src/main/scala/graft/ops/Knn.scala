@@ -1,52 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Encoder, Encoders}
 
-import graft.functions.Distances
-
-/** A (distance, id) candidate used by the bounded top-k aggregation;
-  * generic in the id type so string-keyed tables (the facade's UUIDs)
-  * keep their native ids instead of silently nulling through a cast. */
-case class Scored[I](dist: Double, id: I)
-
-/** Bounded top-k by (dist, id) — the distributed form of the reference's
-  * `BoundedPriorityQueue` (Neighborly/Search/KDTree.cs:58-116). Used as a
-  * partial-aggregable UDAF so each map task ships at most k rows per query
-  * group instead of shuffling the whole candidate set — at 100 TB the
-  * shuffle is O(queries × k), not O(vectors × queries).
-  */
-class TopKAgg[I: scala.reflect.runtime.universe.TypeTag](k: Int)(implicit idOrd: Ordering[I])
-    extends Aggregator[Scored[I], Seq[Scored[I]], Seq[Scored[I]]] {
-  private val ord: Ordering[Scored[I]] = Ordering.by(s => (s.dist, s.id))
-  override def zero: Seq[Scored[I]] = Vector.empty
-  // Buffer stays sorted; each update is an O(k) bounded insertion (the
-  // reference's BoundedPriorityQueue push), not a re-sort.
-  override def reduce(b: Seq[Scored[I]], a: Scored[I]): Seq[Scored[I]] =
-    if (b.size >= k && !ord.lt(a, b.last)) b
-    else {
-      val idx = b.indexWhere(s => ord.lt(a, s))
-      val ins = if (idx < 0) b :+ a else (b.take(idx) :+ a) ++ b.drop(idx)
-      if (ins.size > k) ins.take(k) else ins
-    }
-  override def merge(x: Seq[Scored[I]], y: Seq[Scored[I]]): Seq[Scored[I]] = {
-    // merge of two sorted runs, capped at k
-    val out = Vector.newBuilder[Scored[I]]
-    var (i, j, n) = (0, 0, 0)
-    while (n < k && (i < x.size || j < y.size)) {
-      if (j >= y.size || (i < x.size && ord.lteq(x(i), y(j)))) { out += x(i); i += 1 }
-      else { out += y(j); j += 1 }
-      n += 1
-    }
-    out.result()
-  }
-  override def finish(r: Seq[Scored[I]]): Seq[Scored[I]] = r
-  override def bufferEncoder: Encoder[Seq[Scored[I]]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored[I]]]()
-  override def outputEncoder: Encoder[Seq[Scored[I]]] = bufferEncoder
-}
+import graft.functions.{Distances, Round6Expr}
 
 /** Exact (brute-force) k-nearest-neighbor search — the reference's
   * `LinearSearch` semantics (Neighborly/Search/LinearSearch.cs:10-42):
@@ -67,7 +24,7 @@ object Knn {
     * oracle-stable ordering (ties then broken by id). */
   def withDistance(vectors: DataFrame, vecCol: String, query: Column,
       metric: String = "euclidean", outCol: String = "dist"): DataFrame =
-    vectors.withColumn(outCol, round(Distances.metric(metric)(col(vecCol), query), 6))
+    vectors.withColumn(outCol, Round6Expr(Distances.metric(metric)(col(vecCol), query)))
 
   /** Single-query exact kNN: `orderBy(dist, id).limit(k)` →
     * TakeOrderedAndProject (no full sort, no full shuffle). */
@@ -87,7 +44,7 @@ object Knn {
   def batch(vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, metric: String = "euclidean"): DataFrame = {
-    val dist = round(Distances.metric(metric)(col(vecCol), col(queryVecCol)), 6)
+    val dist = Round6Expr(Distances.metric(metric)(col(vecCol), col(queryVecCol)))
     batchOver(
       vectors
         .crossJoin(broadcast(queries.select(col(queryIdCol), col(queryVecCol))))
@@ -96,25 +53,24 @@ object Knn {
   }
 
   /** Per-query bounded top-k over a prepared (queryId, id, dist) frame —
-    * the shared tail of exact-batch and LSH-batch search. Shuffle is
-    * O(#queries × k) thanks to the partial-aggregable bounded heap.
+    * the shared tail of every batch kNN verb. The [[TopKNearest]]
+    * aggregate keeps each query's k smallest (dist, id) pairs, an exact
+    * repeat once, so the shuffle is O(#queries × k).
     * Returns (query_id, rank BIGINT, id, dist). */
   def batchOver(scored: DataFrame, idCol: String, queryIdCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.types._
-    // ids keep their native family: integral widens to long (as before),
-    // strings stay strings; anything else fails loudly instead of nulling
-    val (idExpr, topk) = scored.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        (col(idCol).cast("long"), udaf(new TopKAgg[Long](k), Encoders.product[Scored[Long]]))
-      case StringType =>
-        (col(idCol), udaf(new TopKAgg[String](k), Encoders.product[Scored[String]]))
+    // ids keep their native family: integral widens to long, strings stay
+    // strings; anything else fails loudly instead of nulling
+    val idExpr = scored.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => col(idCol).cast("long")
+      case StringType => col(idCol)
       case dt => throw new IllegalArgumentException(
         s"batch kNN id column '$idCol' must be integral or string, got $dt")
     }
     scored
       .select(col(queryIdCol), col("dist"), idExpr.as("id"))
       .groupBy(col(queryIdCol))
-      .agg(topk(col("dist"), col("id")).as("nn"))
+      .agg(TopKNearest(col("dist"), col("id"), k).as("nn"))
       .select(col(queryIdCol), posexplode(col("nn")))
       .select(
         col(queryIdCol),

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Distances
+import graft.functions.{Distances, Round6, Round6Expr}
 import graft.ops.Knn
 
 /** Embedding-column utilities for training-data pipelines: symmetric
@@ -155,9 +155,6 @@ object EmbeddingOps {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  private def round6(d: Double): Double =
-    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Maximal Marginal Relevance diverse top-k (Carbonell & Goldstein,
     * SIGIR 1998) — the standard RAG re-rank that trades relevance
     * against redundancy: greedily pick
@@ -185,7 +182,7 @@ object EmbeddingOps {
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0, 1], got $lambda")
     val spark = corpus.sparkSession
     val pool = corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"),
-        round(Distances.cosineSimilarity(col(vecCol), typedLit(query)), 6).as("rel"))
+        Round6Expr(Distances.cosineSimilarity(col(vecCol), typedLit(query))).as("rel"))
       .orderBy(col("rel").desc, col("id"))
       .limit(candidates)
       .collect()
@@ -202,14 +199,14 @@ object EmbeddingOps {
         if (!taken.contains(id)) {
           val maxSel =
             if (selectedVecs.isEmpty) 0.0
-            else selectedVecs.map(s => round6(cosSim(v, s))).max
+            else selectedVecs.map(s => Round6.compute(cosSim(v, s))).max
           val score = lambda * rel - (1.0 - lambda) * maxSel
           if (score > bestScore) { bestScore = score; bestId = id; bestVec = v }
         }
       }
       taken += bestId
       selectedVecs += bestVec
-      out += ((rank, bestId, round6(bestScore)))
+      out += ((rank, bestId, Round6.compute(bestScore)))
       rank += 1
     }
     import spark.implicits._
@@ -238,7 +235,7 @@ object EmbeddingOps {
       metric: String = "cosine_distance"): DataFrame = {
     val scored = corpus
       .crossJoin(broadcast(queries.select(col(qIdCol), col(qVecCol))))
-      .withColumn("dist", round(Distances.metric(metric)(col(vecCol), col(qVecCol)), 6))
+      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), col(qVecCol))))
       .filter(col("dist") > minDist)
     Knn.batchOver(scored, idCol, qIdCol, k)
   }

@@ -36,9 +36,31 @@ class PlanShapeSpec extends SparkSpec {
 
   test("batch kNN partial-aggregates the bounded heap before its single shuffle") {
     val p = plan("knn_batch_100")
-    assert(p.contains("ObjectHashAggregate"), "TopKAgg must run as a partial-aggregable UDAF")
+    assert(p.contains("ObjectHashAggregate"), "the top-k must run as a partial-aggregable aggregate")
     assert(p.contains("BroadcastExchange") || p.contains("BroadcastNestedLoopJoin"),
       "the query set must broadcast against the table")
+  }
+
+  test("LSH batch kNN shuffles once: the top-k aggregate drops repeated pairs, no dedup exchange") {
+    // executed (post-AQE) plan: the broadcast of the coded queries and the
+    // one shuffle of the partial top-k; the (query, id) dedup this replaced
+    // was a second hash exchange
+    val df = SparkEntry.queries("lsh_knn_batch")(spark, sf)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert(p.contains("isFinalPlan=true"))
+    assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, s"want one shuffle, got:\n$p")
+    assert(p.contains("BroadcastExchange"), s"the coded queries must broadcast:\n$p")
+  }
+
+  test("no batch kNN plan rounds the distance through Spark's round") {
+    for (name <- Seq("knn_multi", "knn_batch_100", "lsh_knn_batch", "ivf_knn_batch",
+        "ivfpq_knn_batch", "hard_negatives")) {
+      val p = plan(name)
+      assert(p.contains("round6("), s"$name must freeze its distances with round6:\n${p.take(1200)}")
+      assert(!p.contains("round("), s"$name rounds through Spark's round:\n${p.take(1200)}")
+      assert(p.contains("topk_nearest("), s"$name must rank with the top-k aggregate")
+    }
   }
 
   test("ivf_knn_batch: probe pairs broadcast, per-query top-k partial-aggregated") {

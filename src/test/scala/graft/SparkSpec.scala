@@ -8,6 +8,28 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlImplicits = spark.implicits
+
+  /** Spark jobs `body` submits, counted by its own job group. */
+  def jobsOf[T](body: => T): (T, Long) = {
+    val group = s"graft.test.jobs.${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(p => group == p.getProperty("spark.jobGroup.id")))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "counted")
+      val out = try body finally spark.sparkContext.clearJobGroup()
+      // the listener bus is async: poll until the count is stable
+      val deadline = System.nanoTime() + 5e9.toLong
+      var last = -1L
+      while (System.nanoTime() < deadline &&
+        { val c = jobs.get(); val changed = c != last; last = c; Thread.sleep(100); changed }) ()
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

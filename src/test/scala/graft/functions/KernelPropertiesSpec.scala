@@ -229,4 +229,44 @@ class KernelPropertiesSpec extends SparkSpec {
       assert(input.count(r => expr.eval(r) != null) === input.size - 1, name)
     }
   }
+
+  test("round6: interpreted eval ≡ generated code ≡ Spark's round(x, 6), bit for bit") {
+    import java.lang.Double.{doubleToRawLongBits => raw, longBitsToDouble}
+    val rnd = new scala.util.Random(6)
+    // exact decimal ties at the 7th place, the doubles either side of each,
+    // random values over 16 decades, random bit patterns, and the edges
+    val ties = Seq.fill(150000)("%d.%06d5".format(rnd.nextInt(1000000), rnd.nextInt(1000000)).toDouble)
+    val near = ties.flatMap(t => Seq(t, math.nextUp(t), math.nextDown(t)))
+    val spread = Seq.fill(300000)(rnd.nextDouble() * math.pow(10, rnd.nextInt(16) - 8))
+    val bits = Seq.fill(100000)(longBitsToDouble(rnd.nextLong()))
+    val edges = Seq(0.0, -0.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.MinPositiveValue, -Double.MinPositiveValue, 5e-7, 4.9999999999e-7, 999999.9999995,
+      999999.9999994999, 1e6, 1e6 + 0.0000005, 123456789.1234565, 1e15 + 0.5, Double.MaxValue,
+      java.lang.Double.MIN_NORMAL, 0.5e-6, 1.5e-6, 2.5e-6)
+    val positive = near ++ spread ++ bits ++ edges
+    val values = (positive ++ positive.map(-_)).toArray
+    assert(values.length >= 1000000)
+
+    val expr = Round6Expr(BoundReference(0, DoubleType, nullable = true))
+    val sparkRound = org.apache.spark.sql.catalyst.expressions.Round(
+      BoundReference(0, DoubleType, nullable = true),
+      org.apache.spark.sql.catalyst.expressions.Literal(6))
+    val generated = GenerateUnsafeProjection.generate(Seq(expr))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(values.toSeq.map(Tuple1(_)), 4))
+      .toDF("x").select(col("x"), round(col("x"), 6), Round6Expr(col("x")))
+    assert(df.queryExecution.executedPlan.toString.contains("round6("))
+    val rows = df.collect()
+    assert(rows.length === values.length)
+    val diverged = rows.iterator.flatMap { r =>
+      val row = InternalRow(r.getDouble(0))
+      val want = raw(r.getDouble(1))
+      Seq("generated (plan)" -> r.getDouble(2),
+        "generated" -> generated(row).getDouble(0),
+        "interpreted" -> expr.eval(row).asInstanceOf[Double],
+        "Spark's interpreted round" -> sparkRound.eval(row).asInstanceOf[Double])
+        .collect { case (path, got) if raw(got) != want => s"$path: ${r.getDouble(0)} -> $got" }
+    }.take(10).toList
+    assert(diverged.isEmpty, diverged.mkString("\n"))
+    assert(expr.eval(InternalRow(null)) === null)
+  }
 }

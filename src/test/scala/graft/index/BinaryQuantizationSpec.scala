@@ -42,6 +42,17 @@ class BinaryQuantizationSpec extends SparkSpec {
     assert(out.head.getAs[Long]("hamming") === 0L)
   }
 
+  test("the candidate probe is one Spark job when the prefilter passes rows") {
+    // `isEmpty` takes one row and stops; a `limit(1).count()` under AQE
+    // runs a shuffle-map job before its result job
+    val t = BinaryQuantization.globalMean(emb, "embedding")
+    val q = emb.filter($"vec_id" === 3).head().getAs[scala.collection.Seq[Float]]("embedding").toArray
+    val (out, jobs) = jobsOf(BinaryQuantization.search(emb, "vec_id", "embedding", q, k = 5,
+      threshold = Some(t)))
+    assert(jobs === 1L)
+    assert(out.head().getAs[Long]("vec_id") === 3L)
+  }
+
   test("far-off query takes the 3k-by-Hamming fallback and still returns k") {
     val out = BinaryQuantization.search(emb, "vec_id", "embedding",
       Array.fill(64)(10.0f), k = 10).collect()
