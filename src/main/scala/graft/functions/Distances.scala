@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Distance-metric scalar library — the reference's `IDistanceCalculator`
@@ -73,6 +74,26 @@ object Distances {
   def metric(name: String): (Column, Column) => Column =
     registry.getOrElse(name.toLowerCase,
       throw new IllegalArgumentException(s"unknown distance metric '$name'; known: ${registry.keys.mkString(", ")}"))
+
+  /** A float metric of [[registry]] as a direct call on two vectors, for
+    * scans that score pairs outside an expression: the metric's
+    * `DistanceKernel` method (and `1 -` for `cosine_distance`), so it
+    * agrees with the column form bit for bit. */
+  private[graft] trait Kernel extends Serializable {
+    def apply(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double
+  }
+
+  private[graft] def kernel(name: String): Kernel = name.toLowerCase match {
+    case "euclidean" => DistanceKernel.euclidean(_, _, _, _)
+    case "cosine" => DistanceKernel.cosineSimilarity(_, _, _, _)
+    case "cosine_distance" => (x, xf, y, yf) => 1.0 - DistanceKernel.cosineSimilarity(x, xf, y, yf)
+    case "manhattan" => DistanceKernel.manhattan(_, _, _, _)
+    case "chebyshev" => DistanceKernel.chebyshev(_, _, _, _)
+    case "minkowski" => DistanceKernel.minkowski3(_, _, _, _)
+    case _ =>
+      metric(name)
+      throw new IllegalArgumentException(s"distance metric '$name' does not score float vectors")
+  }
 
   /** Higher-order-function reference forms (pre-codegen); kept for
     * kernel-equivalence tests and as documentation of the numerics. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Distances, Round6Expr, TopCells}
+import graft.functions.{ArgMinDist, DistanceKernel, Distances, Round6Expr, TopCells}
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic
   * coarse-quantizer scale path for embedding search (build-brief
@@ -86,8 +86,8 @@ object Ivf {
     model.probes(query, nprobe)
   }
 
-  /** The batch verbs' probe frame: (query id, `_qv` query vector,
-    * `cluster`) for each query's `nprobe` nearest cells — the centroid
+  /** [[searchPqBatch]]'s probe frame: (query id, `_qv` query vector,
+    * `cluster`) for each query id's `nprobe` nearest cells — the centroid
     * table exploded per query (tiny), ranked by (euclidean, cell id) like
     * [[IvfModel.probes]]. */
   private def probePairs(model: IvfModel, queries: DataFrame, queryIdCol: String,
@@ -240,9 +240,9 @@ object Ivf {
       .limit(k)
   }
 
-  /** Batch IVF-ADC — [[searchPq]]'s multi-query form. Probe selection
-    * and the (query, cluster)-pair broadcast join are [[searchBatch]]'s;
-    * the difference is the scoring of each collision: every query's
+  /** Batch IVF-ADC — [[searchPq]]'s multi-query form: probe pairs from
+    * the probe window, broadcast-joined on the cluster; each collision is
+    * scored in the compressed domain: every query's
     * 256-entry-per-block ADC tables are computed ONCE on the broadcast
     * side (a per-row HOF over the codebook literals — |Q|·nprobe rows,
     * never data), and each probed row then costs `numSubVectors` table
@@ -294,23 +294,37 @@ object Ivf {
     graft.ops.Knn.batchOver(rescored, idCol, queryIdCol, k)
   }
 
-  /** Batch probe-limited kNN — the multi-query scale path. Each query
-    * ranks the `nlist`-row centroid table (exploded per query — tiny) and
-    * keeps its `nprobe` nearest clusters; the (query, cluster) probe
-    * pairs broadcast-join the cluster-assigned table, so a vector is
-    * scored ONLY against queries probing its cluster — the work is
-    * O(data × nprobe/nlist × |Q|-collisions), never the full cross
-    * product — and the per-query top-k runs as the bounded-heap partial
-    * aggregate (shuffle O(|Q| × k)). Probe ranking is euclidean with ties
-    * to the lower centroid id, identical to [[IvfModel.probes]]. Returns
-    * (query_id, rank BIGINT, id, dist). */
+  /** Batch probe-limited kNN — the multi-query scale path, one
+    * [[graft.ops.Knn.scanTopK]] pass. On the driver each query id ranks
+    * its (query row, centroid) pairs by (euclidean, cell id) and keeps the
+    * `nprobe` nearest, so a repeated query id probes `nprobe` cells over
+    * all its rows; a corpus vector is scored ONLY against the query rows
+    * probing its `ArgMinDist` cell, so the work is
+    * O(data × nprobe/nlist × |Q|), never the full cross product, and the
+    * per-query top-k ships O(|Q| × k) rows. A null query vector ranks
+    * every cell equal and probes the lowest ids; a null corpus vector has
+    * no cell. Returns (query_id, rank BIGINT, id, dist). */
   def searchBatch(model: IvfModel, vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, nprobe: Int = 4, metric: String = "euclidean"): DataFrame = {
-    val probes = probePairs(model, queries, queryIdCol, queryVecCol, nprobe)
-    val scored = assign(model, vectors, vecCol)
-      .join(broadcast(probes), "cluster")
-      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), col("_qv"))))
-    graft.ops.Knn.batchOver(scored, idCol, queryIdCol, k)
+    requireProbes(nprobe)
+    val centers = model.centers
+    graft.ops.Knn.scanTopK(vectors, idCol, vecCol, queries, queryIdCol, queryVecCol, k, metric) {
+      qs =>
+        require(qs.corpusFloat, s"IVF assigns ARRAY<FLOAT> vectors; '$vecCol' holds doubles")
+        val cells = centers.map(c => ArrayData.toArrayData(c))
+        val byCell = Array.fill(math.max(centers.length, 1))(Array.newBuilder[Int])
+        qs.ids.indices.groupBy(qs.ids(_)).values.foreach { rows =>
+          val pairs = for (j <- rows; c <- cells.indices) yield (j, c,
+            if (qs.vecs(j) == null) Double.NegativeInfinity // a null distance ranks first
+            else DistanceKernel.euclidean(qs.vecs(j), qs.queryFloat, cells(c), true))
+          pairs.sortWith { case ((j1, c1, d1), (j2, c2, d2)) =>
+            val o = java.lang.Double.compare(d1, d2)
+            o < 0 || o == 0 && (c1 < c2 || c1 == c2 && j1 < j2)
+          }.take(nprobe).foreach { case (j, c, _) => byCell(c) += j }
+        }
+        val probedBy = byCell.map(_.result())
+        v => if (v == null) Array.emptyIntArray else probedBy(ArgMinDist.compute(v, centers))
+    }
   }
 }

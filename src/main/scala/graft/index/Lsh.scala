@@ -24,9 +24,11 @@ import graft.ops.Knn
   * per table, `(table << 32) | bucketBits` — via a codegen expression; a
   * single-query search is `arrays_overlap(codes, queryCodes)` (a codegen
   * scan, no shuffle) + exact re-rank (TakeOrderedAndProject). A batch
-  * search equi-joins exploded codes, so the only shuffle carries candidate
-  * pairs — the distributed form of bucket lookup. At 100 TB the codes
-  * column is persisted once (`withCodes`) and reused per query set.
+  * search indexes the broadcast queries by bucket and scores each vector
+  * against the queries sharing a bucket with it in the fused batch scan
+  * ([[Knn.scanTopK]]), so the only shuffle carries per-query top-k runs —
+  * the distributed form of bucket lookup. At 100 TB the codes column is
+  * persisted once (`withCodes`) for the single-query verbs.
   *
   * Deviation (declared): the reference's empty-bucket fallback samples
   * `random.Next` indices; a distributed engine substitutes a deterministic
@@ -120,25 +122,28 @@ object Lsh {
       .orderBy(col("dist"), col(idCol))
   }
 
-  /** Batch approximate kNN: explode codes on both sides, equi-join on the
-    * code (bucket) value, exact re-rank, bounded per-query top-k. A pair
-    * that collides in several tables repeats with the identical dist, and
-    * the top-k aggregate keeps an exact (dist, id) repeat once, so no
-    * dedup shuffle runs first: the one shuffle carries at most k pairs per
-    * query from each map task — the distributed form of
-    * LSHSearch.cs:180-217. */
+  /** Batch approximate kNN, one [[Knn.scanTopK]] pass: the queries'
+    * codes index the broadcast query set by bucket, and each corpus vector
+    * is scored once against the union of the queries sharing any of its
+    * buckets (LSHSearch.cs:180-217), so the one shuffle carries at most k
+    * pairs per query from each map task. A null vector on either side has
+    * no bucket. */
   def searchBatch(vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, params: LshParams, metric: String = "euclidean"): DataFrame = {
-    val coded = withCodes(vectors, vecCol, params)
-      .select(col(idCol), col(vecCol), explode(col("codes")).as("code"))
-    val qCoded = withCodes(queries, queryVecCol, params)
-      .select(col(queryIdCol), col(queryVecCol), explode(col("codes")).as("code"))
-    // distance computed inside the (broadcast) join projection, so the
-    // partial top-k sees only (query, id, dist) scalars
-    val pairs = coded.join(broadcast(qCoded), "code")
-      .select(col(queryIdCol), col(idCol),
-        Round6Expr(Distances.metric(metric)(col(vecCol), col(queryVecCol))).as("dist"))
-    Knn.batchOver(pairs, idCol, queryIdCol, k)
-  }
+      k: Int, params: LshParams, metric: String = "euclidean"): DataFrame =
+    Knn.scanTopK(vectors, idCol, vecCol, queries, queryIdCol, queryVecCol, k, metric) {
+      qs =>
+        val byBucket = qs.vecs.indices.flatMap(j =>
+            if (qs.vecs(j) == null) Nil else LshCodes.compute(qs.vecs(j), qs.queryFloat, params).map(_ -> j))
+          .groupBy(_._1).map { case (code, hits) => code -> hits.map(_._2).toArray }
+        val vf = qs.corpusFloat
+        v => if (v == null) Array.emptyIntArray else {
+          val hits = LshCodes.compute(v, vf, params)
+            .flatMap(byBucket.getOrElse(_, Array.emptyIntArray))
+          java.util.Arrays.sort(hits)
+          var n = 0
+          for (j <- hits if n == 0 || hits(n - 1) != j) { hits(n) = j; n += 1 }
+          java.util.Arrays.copyOf(hits, n)
+        }
+    }
 }

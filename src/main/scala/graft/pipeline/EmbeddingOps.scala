@@ -221,10 +221,9 @@ object EmbeddingOps {
     * copies, and near-dup positives in one band).
     *
     * Scale shape: the query set broadcasts (an eval/anchor set is small
-    * by construction); the corpus is scanned ONCE with a codegen
-    * distance, the exclusion band filters BEFORE aggregation, and
-    * per-query top-k runs as the partial-aggregable bounded heap
-    * ([[graft.ops.Knn.batchOver]]) — the only shuffle is the
+    * by construction); the corpus is scanned ONCE by the fused batch scan
+    * ([[graft.ops.Knn.scanTopK]]), the exclusion band filters each pair
+    * before its per-query bounded run, and the only shuffle is the
     * O(#queries × k) combine, never the corpus.
     *
     * Returns (query_id, rank BIGINT, id, dist), nearest-first with the
@@ -232,11 +231,7 @@ object EmbeddingOps {
   def hardNegatives(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int = 10, minDist: Double = 0.05,
-      metric: String = "cosine_distance"): DataFrame = {
-    val scored = corpus
-      .crossJoin(broadcast(queries.select(col(qIdCol), col(qVecCol))))
-      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), col(qVecCol))))
-      .filter(col("dist") > minDist)
-    Knn.batchOver(scored, idCol, qIdCol, k)
-  }
+      metric: String = "cosine_distance"): DataFrame =
+    Knn.scanTopK(corpus, idCol, vecCol, queries, qIdCol, qVecCol, k, metric,
+      Some(minDist))(Knn.everyQuery)
 }

@@ -34,38 +34,81 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("GlobalSort") && !p.contains("Sort ["))
   }
 
+  /** The batch kNN keys answered by the fused scan (`Knn.scanTopK`): the
+    * query set is collected and broadcast by the scan itself, so no join
+    * operator is left in the plan. */
+  private val fusedBatchKeys =
+    Seq("knn_multi", "knn_batch_100", "lsh_knn_batch", "ivf_knn_batch", "hard_negatives")
+
+  /** One run of a key: its final (post-AQE) executed plan, the map tasks
+    * and the shuffle records they wrote, the distinct query ids and the
+    * largest rank (at most k) of its (query_id, rank, …) answer. */
+  private case class Executed(plan: String, tasks: Long, records: Long, queries: Long, k: Long)
+
+  private lazy val executed: Map[String, Executed] = fusedBatchKeys.map { name =>
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val df = SparkEntry.queries(name)(spark, sf)
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskType == "ShuffleMapTask") {
+        tasks.incrementAndGet()
+        records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      }
+    }
+    val rows = listening(listener, tasks.get() * 1000003 + records.get())(df.collect())
+    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert(p.contains("isFinalPlan=true"), s"$name did not run adaptively:\n$p")
+    name -> Executed(p, tasks.get(), records.get(), rows.map(_.get(0)).distinct.length.toLong,
+      rows.map(_.getLong(1)).foldLeft(0L)(math.max))
+  }.toMap
+
+  test("fused batch kNN keys: one shuffle of at most k pairs per query per task, no join") {
+    for (name <- fusedBatchKeys) {
+      val Executed(p, tasks, records, queries, k) = executed(name)
+      assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, s"$name: want one shuffle:\n$p")
+      assert(p.contains("topk_nearest("), s"$name must rank with the top-k aggregate:\n$p")
+      for (op <- Seq("BroadcastNestedLoopJoin", "CartesianProduct", "Window"))
+        assert(!p.contains(op), s"$name plans a $op:\n$p")
+      assert(queries > 0 && tasks > 0, s"$name: $queries queries over $tasks map tasks")
+      assert(records <= tasks * queries * k,
+        s"$name shuffled $records records from $tasks tasks for $queries queries, k = $k")
+    }
+  }
+
   test("batch kNN partial-aggregates the bounded heap before its single shuffle") {
-    val p = plan("knn_batch_100")
+    val p = executed("knn_batch_100").plan
     assert(p.contains("ObjectHashAggregate"), "the top-k must run as a partial-aggregable aggregate")
-    assert(p.contains("BroadcastExchange") || p.contains("BroadcastNestedLoopJoin"),
-      "the query set must broadcast against the table")
+    assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, s"want one shuffle, got:\n$p")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"the query set must not be joined against the table:\n$p")
   }
 
   test("LSH batch kNN shuffles once: the top-k aggregate drops repeated pairs, no dedup exchange") {
-    // executed (post-AQE) plan: the broadcast of the coded queries and the
-    // one shuffle of the partial top-k; the (query, id) dedup this replaced
-    // was a second hash exchange
-    val df = SparkEntry.queries("lsh_knn_batch")(spark, sf)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(p.contains("isFinalPlan=true"))
+    // executed (post-AQE) plan: the one shuffle of the partial top-k; the
+    // (query, id) dedup this replaced was a second hash exchange, and the
+    // bucket equi-join after it a broadcast
+    val p = executed("lsh_knn_batch").plan
     assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, s"want one shuffle, got:\n$p")
-    assert(p.contains("BroadcastExchange"), s"the coded queries must broadcast:\n$p")
+    assert(!p.contains("BroadcastExchange") && !p.contains("Generate explode"),
+      s"LSH buckets must not be exploded and joined:\n$p")
   }
 
   test("no batch kNN plan rounds the distance through Spark's round") {
-    for (name <- Seq("knn_multi", "knn_batch_100", "lsh_knn_batch", "ivf_knn_batch",
-        "ivfpq_knn_batch", "hard_negatives")) {
+    // the fused keys freeze their distances with the round6 kernel inside
+    // the scan, so no rounding expression is left in their plans
+    for (name <- fusedBatchKeys :+ "ivfpq_knn_batch") {
       val p = plan(name)
-      assert(p.contains("round6("), s"$name must freeze its distances with round6:\n${p.take(1200)}")
+      if (name == "ivfpq_knn_batch")
+        assert(p.contains("round6("), s"$name must freeze its distances with round6:\n${p.take(1200)}")
       assert(!p.contains("round("), s"$name rounds through Spark's round:\n${p.take(1200)}")
       assert(p.contains("topk_nearest("), s"$name must rank with the top-k aggregate")
     }
   }
 
-  test("ivf_knn_batch: probe pairs broadcast, per-query top-k partial-aggregated") {
-    val p = plan("ivf_knn_batch")
-    assert(p.contains("BroadcastExchange"), "probe pairs must broadcast")
+  test("ivf_knn_batch: no probe window, per-query top-k partial-aggregated") {
+    val p = executed("ivf_knn_batch").plan
+    assert(!p.contains("Window"), s"probes must be ranked on the driver, not by a window:\n$p")
     assert(p.contains("ObjectHashAggregate"), "per-query top-k must partial-aggregate")
     assert(!p.contains("CartesianProduct"))
   }

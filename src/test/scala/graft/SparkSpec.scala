@@ -18,16 +18,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         if (Option(j.properties).exists(p => group == p.getProperty("spark.jobGroup.id")))
           jobs.incrementAndGet()
     }
+    val out = listening(listener, jobs.get()) {
+      spark.sparkContext.setJobGroup(group, "counted")
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    (out, jobs.get())
+  }
+
+  /** `body` run with `listener` registered; the listener bus is async, so
+    * it returns once `progress` (what the listener counts) is stable. */
+  def listening[T](listener: org.apache.spark.scheduler.SparkListener, progress: => Long)(body: => T): T = {
     spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sparkContext.setJobGroup(group, "counted")
-      val out = try body finally spark.sparkContext.clearJobGroup()
-      // the listener bus is async: poll until the count is stable
+      val out = body
       val deadline = System.nanoTime() + 5e9.toLong
       var last = -1L
       while (System.nanoTime() < deadline &&
-        { val c = jobs.get(); val changed = c != last; last = c; Thread.sleep(100); changed }) ()
-      (out, jobs.get())
+        { val c = progress; val changed = c != last; last = c; Thread.sleep(100); changed }) ()
+      out
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

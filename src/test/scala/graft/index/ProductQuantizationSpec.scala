@@ -99,4 +99,27 @@ class ProductQuantizationSpec extends SparkSpec {
     info(f"ADC-only recall: $recall%.2f")
     assert(recall >= 0.5)
   }
+
+  // One query's recall moves in steps of 0.1 and sat at exactly 0.5 when
+  // this was written, so a codebook trainer change can trip it by chance.
+  // The mean over 100 queries on the same table measured 0.501 with the
+  // greedy k-means++ trainer (MLlib's k-means gave 0.503, plain
+  // k-means++ seeding 0.481); the floor sits between plain seeding and
+  // the measured value.
+  test("raw ADC ordering keeps mean recall@10 >= 0.49 over 100 queries") {
+    val qs = emb.filter($"vec_id" < 100)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    val exact = Knn.batch(emb, "vec_id", "embedding", qs, "query_id", "qv", k = 10)
+      .collect().groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
+    assert(exact.size === 100)
+    val recalls = qs.collect().map { r =>
+      val adcTop = ProductQuantization.search(model, emb, "vec_id", "embedding",
+          r.getAs[scala.collection.Seq[Float]]("qv").toArray, k = 10, candidateFactor = 1)
+        .select($"vec_id").collect().map(_.getLong(0)).toSet
+      adcTop.intersect(exact(r.getLong(0))).size / 10.0
+    }
+    val mean = recalls.sum / recalls.length
+    info(f"mean ADC-only recall@10 over ${recalls.length} queries: $mean%.3f")
+    assert(mean >= 0.49)
+  }
 }

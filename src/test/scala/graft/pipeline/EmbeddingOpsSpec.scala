@@ -197,9 +197,11 @@ class EmbeddingOpsSpec extends SparkSpec {
     val df = EmbeddingOps.hardNegatives(corpus, "vec_id", "embedding",
       anchors, "query_id", "qv", k = 4, minDist = 0.05)
     val plan = df.queryExecution.executedPlan.toString
-    // broadcast anchors (no shuffle of the corpus side), partial agg
-    // before the single exchange on query_id
-    assert(plan.contains("BroadcastExchange"))
+    // the fused scan broadcasts the anchors itself (no join, no shuffle of
+    // the corpus side); partial agg before the single exchange on query_id
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+    assert(plan.contains("partial_topk_nearest("), plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
     assert(df.collect().length == 8)
   }
 }
