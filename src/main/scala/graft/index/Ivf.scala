@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ArgMinDist, DistanceKernel, Distances, Round6Expr, TopCells}
+import graft.functions.{Adc, ArgMinDist, DistanceKernel, Distances, Round6Expr, TopCells}
+import graft.ops.Knn
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic
   * coarse-quantizer scale path for embedding search (build-brief
@@ -86,25 +87,6 @@ object Ivf {
     model.probes(query, nprobe)
   }
 
-  /** [[searchPqBatch]]'s probe frame: (query id, `_qv` query vector,
-    * `cluster`) for each query id's `nprobe` nearest cells — the centroid
-    * table exploded per query (tiny), ranked by (euclidean, cell id) like
-    * [[IvfModel.probes]]. */
-  private def probePairs(model: IvfModel, queries: DataFrame, queryIdCol: String,
-      queryVecCol: String, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    requireProbes(nprobe)
-    queries
-      .select(col(queryIdCol), col(queryVecCol))
-      .select(col(queryIdCol), col(queryVecCol),
-        posexplode(centersLit(model)).as(Seq("_cid", "_cv")))
-      .withColumn("_cd", Distances.euclidean(col(queryVecCol), col("_cv")))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(queryIdCol)).orderBy(col("_cd"), col("_cid"))))
-      .filter(col("_rn") <= nprobe)
-      .select(col(queryIdCol), col(queryVecCol).as("_qv"), col("_cid").as("cluster"))
-  }
-
   /** Probe-limited exact kNN: scans only the `nprobe` clusters nearest the
     * query. With cluster-partitioned storage this is the fraction of data
     * actually read. */
@@ -137,10 +119,14 @@ object Ivf {
       zip_with(col(vecCol), element_at(centersLit(model), col("cluster") + lit(1)),
         (x, y) => x - y))
 
-  /** The query-side residual against one coarse cell, in the same f32
-    * arithmetic [[withResidual]] uses on the build side. */
-  private def residualOf(query: Array[Float], center: Array[Float]): Array[Float] =
-    Array.tabulate(query.length)(i => query(i) - center(i))
+  /** The query-side residual against one coarse cell, in the arithmetic
+    * [[withResidual]] uses on the build side: float subtraction for a
+    * float query (a double query subtracts in double, as Spark's `-`
+    * does), widened to double for [[PqModel.adcTables]]. */
+  private def residualOf(query: ArrayData, queryFloat: Boolean,
+      center: Array[Float]): Array[Double] =
+    Array.tabulate(query.numElements())(i =>
+      if (queryFloat) (query.getFloat(i) - center(i)).toDouble else query.getDouble(i) - center(i))
 
   /** Train the PQ codebooks IVFADC actually scores with: on the coarse
     * RESIDUALS, not the raw vectors (a raw-trained codebook mis-centers
@@ -186,8 +172,9 @@ object Ivf {
     * (recomputing codes per query would put the codebook scoring back
     * on the read path). NARROW by design — (id, cluster, codes) only,
     * ~12 B/row: the artifact must not duplicate the wide float column;
-    * both search verbs re-rank by joining the O(k·cf) candidate pool
-    * back to the main table by id. */
+    * both search verbs re-rank the O(k·cf) candidate pool against the
+    * main table by id ([[searchPq]] by a join, [[searchPqBatch]] by a
+    * re-rank scan). */
   def codedTable(ivf: IvfModel, pq: PqModel, vectors: DataFrame,
       idCol: String, vecCol: String): DataFrame =
     ProductQuantization.quantize(pq,
@@ -216,8 +203,8 @@ object Ivf {
     // one ADC table set PER PROBED CELL, from the query's residual against
     // that cell (IVFADC scores ‖(q − c) − code(x − c)‖) — nprobe codegen
     // branches, each a plain table-lookup kernel
-    val tablesByCell = probeSet.map(c =>
-      c -> pq.adcTables(residualOf(query, ivf.centers(c)))).toMap
+    val tablesByCell = probeSet.map(c => c -> pq.adcTables(
+      residualOf(ArrayData.toArrayData(query), queryFloat = true, ivf.centers(c)))).toMap
     val adcCol = probeSet.tail.foldLeft(
       when(col("cluster") === probeSet.head,
         graft.functions.AdcExpr(col("codes"), tablesByCell(probeSet.head)))) {
@@ -240,17 +227,23 @@ object Ivf {
       .limit(k)
   }
 
-  /** Batch IVF-ADC — [[searchPq]]'s multi-query form: probe pairs from
-    * the probe window, broadcast-joined on the cluster; each collision is
-    * scored in the compressed domain: every query's
-    * 256-entry-per-block ADC tables are computed ONCE on the broadcast
-    * side (a per-row HOF over the codebook literals — |Q|·nprobe rows,
-    * never data), and each probed row then costs `numSubVectors` table
-    * lookups over its 8-byte code instead of a full-width float fold.
-    * The per-query `candidateFactor×k` ADC pool (bounded-heap partial
-    * aggregate) re-ranks exactly, so the output matches the exact probe
-    * replay whenever the pool contains the true top-k — the property
-    * the oracle pins. */
+  /** Batch IVF-ADC — [[searchPq]]'s multi-query form, two
+    * [[graft.ops.Knn.scan]] passes over one collected query set:
+    *  - the pool scan reads only the coded table (id, cluster, codes):
+    *    each row is scored against the query rows probing its cell
+    *    ([[probedBy]]), by `Adc.compute` over the ADC tables of the query's
+    *    residual against that cell — [[searchPq]]'s tables, built once per
+    *    (query row, probed cell) on the driver — into per-query-row runs
+    *    of `candidateFactor × k` (a null code or query vector scores 0.0);
+    *  - on the driver the runs merge per query id into its ADC pool, and
+    *    each pooled id maps to the query rows of that id (|Q| × cf × k
+    *    entries at most; a null query id pools nothing);
+    *  - the re-rank scan reads the vectors and scores each row whose id is
+    *    pooled exactly, by the metric's kernel frozen by `round6`, against
+    *    those query rows.
+    * So the output matches the exact probe replay whenever the pool holds
+    * the true top-k — the property the oracle pins. Three Spark jobs.
+    * Returns (query_id, rank BIGINT, id, dist). */
   def searchPqBatch(ivf: IvfModel, pq: PqModel, vectors: DataFrame,
       idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
@@ -259,72 +252,80 @@ object Ivf {
     if (pq.numSubVectors == 0)
       return searchBatch(ivf, vectors, idCol, vecCol,
         queries, queryIdCol, queryVecCol, k, nprobe, metric)
-    val probes = probePairs(ivf, queries, queryIdCol, queryVecCol, nprobe)
-    // per-(query, cell) ADC tables over the query's RESIDUAL against the
-    // probed cell (IVFADC, §V): tables[b][c] = ‖rq_block_b − centroid_{b,c}‖²
-    // — still |Q|·nprobe broadcast rows, never data
-    val subDim = pq.subDim
-    val pqCentsLit = typedLit(pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-    val probesT = probes
-      .withColumn("_rqv",
-        zip_with(col("_qv"), element_at(centersLit(ivf), col("cluster") + lit(1)),
-          (x, y) => x - y))
-      .withColumn("_tables",
-        transform(pqCentsLit, (blockCents, b) =>
-          transform(blockCents, cv =>
-            aggregate(
-              zip_with(slice(col("_rqv"), b * lit(subDim) + lit(1), lit(subDim)), cv,
-                (x, y) => { val d = x.cast("double") - y; d * d }),
-              lit(0.0), (acc, v) => acc + v))))
-    // the (cluster, codes) table is the build-time artifact; the probe
-    // join reads only colliding cells of it
+    requireProbes(nprobe)
+    val qs = Knn.querySet(queries, queryIdCol, queryVecCol)
+    val probed = probedBy(ivf, qs, nprobe)
+    val tables = Array.fill(qs.ids.length)(new Array[Array[Array[Double]]](probed.length))
+    for (c <- probed.indices; j <- probed(c) if qs.vecs(j) != null)
+      tables(j)(c) = pq.adcTables(residualOf(qs.vecs(j), qs.queryFloat, ivf.centers(c)))
     val coded = coded0.getOrElse(codedTable(ivf, pq, vectors, idCol, vecCol))
-    val scored = coded.select(col(idCol), col("cluster"), col("codes"))
-      .join(broadcast(probesT), "cluster")
-      .withColumn("dist", graft.functions.AdcLookupExpr(col("codes"), col("_tables")))
-    val pool = graft.ops.Knn.batchOver(scored, idCol, queryIdCol,
-      math.max(k, candidateFactor * k))
-    // exact re-rank of the bounded pool: candidate ids broadcast back to
-    // the table; query vectors re-attach by query id
-    val rescored = vectors.select(col(idCol), col(vecCol))
-      .join(broadcast(pool.select(col(queryIdCol), col(idCol))), idCol)
-      .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol).as("_qv"))),
-        queryIdCol)
-      .withColumn("dist", Round6Expr(Distances.metric(metric)(col(vecCol), col("_qv"))))
-    graft.ops.Knn.batchOver(rescored, idCol, queryIdCol, k)
+      .select(col(idCol), col("codes"), col("cluster"))
+    val pool = Knn.scan(coded, qs, math.max(k, candidateFactor * k), (row, lv, sv, runs) => {
+      val cell = if (row.isNullAt(2)) -1 else row.getInt(2)
+      val cand = if (cell < 0 || cell >= probed.length) Array.emptyIntArray else probed(cell)
+      val codes = if (row.isNullAt(1)) null else row.getArray(1)
+      var i = 0
+      while (i < cand.length) {
+        val t = tables(cand(i))(cell)
+        runs(cand(i)).offer(if (codes == null || t == null) 0.0 else Adc.compute(codes, t), lv, sv)
+        i += 1
+      }
+      cand.length
+    })
+    val pooledBy = new java.util.HashMap[Any, Array[Int]]()
+    for ((qid, rows) <- Knn.byId(qs) if qid != null) {
+      val run = rows.map(pool(_)).reduce(_.merge(_))
+      (0 until run.n).map(run.idAt).distinct.foreach(id => pooledBy.merge(id, rows.toArray, _ ++ _))
+    }
+    val corpus = vectors.select(col(idCol), col(vecCol))
+    val idType = corpus.schema(0).dataType
+    val rerank = Knn.scan(corpus, qs, k,
+      Knn.metricScorer(qs, corpus.schema(1), metric, None) { row =>
+        if (row.isNullAt(0)) Array.emptyIntArray
+        else pooledBy.getOrDefault(row.get(0, idType) match {
+          case n: Number => Long.box(n.longValue)
+          case id => id
+        }, Array.emptyIntArray)
+      })
+    Knn.answer(corpus, idCol, qs, rerank)
+  }
+
+  /** Which query rows probe each cell, ranked on the driver: each query
+    * id ranks its (query row, cell) pairs by (euclidean, cell id) and
+    * keeps the `nprobe` nearest, so a repeated query id probes `nprobe`
+    * cells over all its rows. A null query vector ranks every cell first
+    * and probes the lowest ids. */
+  private def probedBy(model: IvfModel, qs: Knn.QuerySet, nprobe: Int): Array[Array[Int]] = {
+    val cells = model.centers.map(c => ArrayData.toArrayData(c))
+    val byCell = Array.fill(math.max(cells.length, 1))(Array.newBuilder[Int])
+    Knn.byId(qs).foreach { case (_, rows) =>
+      val pairs = for (j <- rows; c <- cells.indices) yield (j, c,
+        if (qs.vecs(j) == null) Double.NegativeInfinity // a null distance ranks first
+        else DistanceKernel.euclidean(qs.vecs(j), qs.queryFloat, cells(c), true))
+      pairs.sortWith { case ((j1, c1, d1), (j2, c2, d2)) =>
+        val o = java.lang.Double.compare(d1, d2)
+        o < 0 || o == 0 && (c1 < c2 || c1 == c2 && j1 < j2)
+      }.take(nprobe).foreach { case (j, c, _) => byCell(c) += j }
+    }
+    byCell.map(_.result())
   }
 
   /** Batch probe-limited kNN — the multi-query scale path, one
-    * [[graft.ops.Knn.scanTopK]] pass. On the driver each query id ranks
-    * its (query row, centroid) pairs by (euclidean, cell id) and keeps the
-    * `nprobe` nearest, so a repeated query id probes `nprobe` cells over
-    * all its rows; a corpus vector is scored ONLY against the query rows
-    * probing its `ArgMinDist` cell, so the work is
-    * O(data × nprobe/nlist × |Q|), never the full cross product, and the
-    * per-query top-k ships O(|Q| × k) rows. A null query vector ranks
-    * every cell equal and probes the lowest ids; a null corpus vector has
-    * no cell. Returns (query_id, rank BIGINT, id, dist). */
+    * [[graft.ops.Knn.scanTopK]] pass: a corpus vector is scored ONLY
+    * against the query rows probing its `ArgMinDist` cell ([[probedBy]]),
+    * so the work is O(data × nprobe/nlist × |Q|), never the full cross
+    * product, and the per-query runs merge on the driver. A null corpus
+    * vector has no cell. Returns (query_id, rank BIGINT, id, dist). */
   def searchBatch(model: IvfModel, vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, nprobe: Int = 4, metric: String = "euclidean"): DataFrame = {
     requireProbes(nprobe)
     val centers = model.centers
-    graft.ops.Knn.scanTopK(vectors, idCol, vecCol, queries, queryIdCol, queryVecCol, k, metric) {
-      qs =>
-        require(qs.corpusFloat, s"IVF assigns ARRAY<FLOAT> vectors; '$vecCol' holds doubles")
-        val cells = centers.map(c => ArrayData.toArrayData(c))
-        val byCell = Array.fill(math.max(centers.length, 1))(Array.newBuilder[Int])
-        qs.ids.indices.groupBy(qs.ids(_)).values.foreach { rows =>
-          val pairs = for (j <- rows; c <- cells.indices) yield (j, c,
-            if (qs.vecs(j) == null) Double.NegativeInfinity // a null distance ranks first
-            else DistanceKernel.euclidean(qs.vecs(j), qs.queryFloat, cells(c), true))
-          pairs.sortWith { case ((j1, c1, d1), (j2, c2, d2)) =>
-            val o = java.lang.Double.compare(d1, d2)
-            o < 0 || o == 0 && (c1 < c2 || c1 == c2 && j1 < j2)
-          }.take(nprobe).foreach { case (j, c, _) => byCell(c) += j }
-        }
-        val probedBy = byCell.map(_.result())
-        v => if (v == null) Array.emptyIntArray else probedBy(ArgMinDist.compute(v, centers))
+    Knn.scanTopK(vectors, idCol, vecCol, queries, queryIdCol, queryVecCol, k, metric) {
+      (qs, vf) =>
+        require(vf, s"IVF assigns ARRAY<FLOAT> vectors; '$vecCol' holds doubles")
+        val probed = probedBy(model, qs, nprobe)
+        v => if (v == null) Array.emptyIntArray else probed(ArgMinDist.compute(v, centers))
     }
   }
 }

@@ -26,9 +26,9 @@ import graft.ops.Knn
   * scan, no shuffle) + exact re-rank (TakeOrderedAndProject). A batch
   * search indexes the broadcast queries by bucket and scores each vector
   * against the queries sharing a bucket with it in the fused batch scan
-  * ([[Knn.scanTopK]]), so the only shuffle carries per-query top-k runs —
-  * the distributed form of bucket lookup. At 100 TB the codes column is
-  * persisted once (`withCodes`) for the single-query verbs.
+  * ([[Knn.scanTopK]]), with no shuffle: per-query top-k runs merge on the
+  * driver — the distributed form of bucket lookup. At 100 TB the codes
+  * column is persisted once (`withCodes`) for the single-query verbs.
   *
   * Deviation (declared): the reference's empty-bucket fallback samples
   * `random.Next` indices; a distributed engine substitutes a deterministic
@@ -125,18 +125,17 @@ object Lsh {
   /** Batch approximate kNN, one [[Knn.scanTopK]] pass: the queries'
     * codes index the broadcast query set by bucket, and each corpus vector
     * is scored once against the union of the queries sharing any of its
-    * buckets (LSHSearch.cs:180-217), so the one shuffle carries at most k
-    * pairs per query from each map task. A null vector on either side has
-    * no bucket. */
+    * buckets (LSHSearch.cs:180-217), into per-query runs of at most k
+    * pairs merged on the driver. A null vector on either side has no
+    * bucket. */
   def searchBatch(vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, params: LshParams, metric: String = "euclidean"): DataFrame =
     Knn.scanTopK(vectors, idCol, vecCol, queries, queryIdCol, queryVecCol, k, metric) {
-      qs =>
+      (qs, vf) =>
         val byBucket = qs.vecs.indices.flatMap(j =>
             if (qs.vecs(j) == null) Nil else LshCodes.compute(qs.vecs(j), qs.queryFloat, params).map(_ -> j))
           .groupBy(_._1).map { case (code, hits) => code -> hits.map(_._2).toArray }
-        val vf = qs.corpusFloat
         v => if (v == null) Array.emptyIntArray else {
           val hits = LshCodes.compute(v, vf, params)
             .flatMap(byBucket.getOrElse(_, Array.emptyIntArray))

@@ -1,10 +1,9 @@
 package graft.index
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{AdcExpr, ArgMinDist, ArgMinDistExpr, Distances, Round6Expr}
+import graft.functions.{AdcExpr, ArgMinDistExpr, Distances, Round6Expr}
 
 /** Product Quantization (reference: Neighborly/Search/ProductQuantization.cs).
   *
@@ -39,11 +38,18 @@ final case class PqModel(codebooks: Array[Array[Array[Float]]], subDim: Int) {
   def numSubVectors: Int = codebooks.length
 
   /** [block][centroid] squared-euclidean of the query's block slice to the
-    * centroid — the ADC lookup tables (ProductQuantization.cs:340-358). */
-  def adcTables(query: Array[Float]): Array[Array[Double]] =
+    * centroid, summed in double in element order — the ADC lookup tables
+    * (ProductQuantization.cs:340-358). A float query widens exactly, so
+    * its tables are [[graft.functions.ArgMinDist.sqDist]]'s. */
+  def adcTables(query: Array[Double]): Array[Array[Double]] =
     codebooks.zipWithIndex.map { case (centers, b) =>
-      val slice = ArrayData.toArrayData(query.slice(b * subDim, (b + 1) * subDim))
-      centers.map(ArgMinDist.sqDist(slice, _))
+      val slice = query.slice(b * subDim, (b + 1) * subDim)
+      centers.map { c =>
+        val n = math.min(slice.length, c.length)
+        var s = 0.0; var i = 0
+        while (i < n) { val d = slice(i) - c(i).toDouble; s += d * d; i += 1 }
+        s
+      }
     }
 
   /** 32 × subDim : 1 (8-bit code per 32-bit-float block —
@@ -134,7 +140,7 @@ object ProductQuantization {
       candidateFactor: Int = 0, scannedRows: Long = -1L): DataFrame = {
     if (model.numSubVectors == 0)
       return vectors.limit(0).select(col(idCol), lit(0.0).as("dist"))
-    val tables = model.adcTables(query)
+    val tables = model.adcTables(query.map(_.toDouble))
     val pool =
       if (candidateFactor > 0) math.max(k, candidateFactor * k)
       else rerankPool(k, if (scannedRows >= 0) scannedRows else vectors.count())

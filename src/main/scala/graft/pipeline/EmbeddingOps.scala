@@ -223,8 +223,9 @@ object EmbeddingOps {
     * Scale shape: the query set broadcasts (an eval/anchor set is small
     * by construction); the corpus is scanned ONCE by the fused batch scan
     * ([[graft.ops.Knn.scanTopK]]), the exclusion band filters each pair
-    * before its per-query bounded run, and the only shuffle is the
-    * O(#queries × k) combine, never the corpus.
+    * before its per-query bounded run, and the O(#queries × k) runs merge
+    * on the driver, with no shuffle. A NaN distance (`cosine_distance` of
+    * a zero-norm vector) is no hard negative: the band drops it.
     *
     * Returns (query_id, rank BIGINT, id, dist), nearest-first with the
     * (dist, id) deterministic tie-break. */

@@ -100,10 +100,11 @@ object IndexQueries {
         coded0 = Some(ivfpqCodedFor(s, dir)))
     }),
 
-    // Batch IVF-ADC: per-(query, cell) residual ADC tables broadcast
-    // with the probe pairs, collisions scored by table lookup over the
-    // 8-byte codes, bounded ADC pool re-ranked exactly. Full-pipeline
-    // oracle like ivf_knn_batch (residual codes, r8).
+    // Batch IVF-ADC: a pool scan of the coded table scores each row by
+    // table lookup over its 8-byte codes, with the residual ADC tables of
+    // each query row probing its cell; a re-rank scan scores the pooled
+    // ids exactly. Full-pipeline oracle like ivf_knn_batch (residual
+    // codes, r8).
     "ivfpq_knn_batch" -> ((s, dir) => {
       val e = table(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 5)
@@ -130,8 +131,8 @@ object IndexQueries {
         coded0 = Some(plantedCodedFor(s, dir)))
     }),
 
-    // The batch IVFPQ plumbing (per-query HOF ADC tables, AdcLookupExpr
-    // scoring, bounded-heap pools) through the same provable regime:
+    // The batch IVFPQ plumbing (per-query residual ADC tables, the ADC
+    // pool scan, the re-rank scan) through the same provable regime:
     // three queries, each with its own 10 plants.
     "ivfpq_knn_batch_planted" -> ((s, dir) => {
       val q = table(s, dir, "embeddings").filter(col("vec_id") < 3)
@@ -143,8 +144,9 @@ object IndexQueries {
     }),
 
     // IVF batch kNN: per-query probe sets over the replayable sampled
-    // centroids, probe pairs broadcast-joined against the assigned table,
-    // bounded-heap per-query top-k. Full-pipeline oracle like ivf_knn.
+    // centroids, ranked on the driver; one scan scores each vector against
+    // the queries probing its cell into per-query bounded runs merged on
+    // the driver. Full-pipeline oracle like ivf_knn.
     "ivf_knn_batch" -> ((s, dir) => {
       val e = table(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 5)

@@ -13,13 +13,6 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** A DataFrame of `schema` over an RDD of internal rows, with no
-    * per-row conversion (`internalCreateDataFrame` is `private[sql]`). */
-  def frame(spark: org.apache.spark.sql.SparkSession,
-      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
-
   /** Register a temp SQL function backed by a raw Expression builder on a
     * live session (FunctionRegistry is `private[sql]`). */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,

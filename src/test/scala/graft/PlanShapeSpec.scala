@@ -34,82 +34,94 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("GlobalSort") && !p.contains("Sort ["))
   }
 
-  /** The batch kNN keys answered by the fused scan (`Knn.scanTopK`): the
-    * query set is collected and broadcast by the scan itself, so no join
-    * operator is left in the plan. */
+  /** The batch kNN keys answered by the fused scan (`Knn.scan`): the
+    * query set is collected, the corpus scanned once, and the per-query
+    * runs merged on the driver, so each answer is a local relation. */
   private val fusedBatchKeys =
-    Seq("knn_multi", "knn_batch_100", "lsh_knn_batch", "ivf_knn_batch", "hard_negatives")
+    Seq("knn_multi", "knn_batch_100", "lsh_knn_batch", "ivf_knn_batch", "hard_negatives",
+      "ivfpq_knn_batch")
 
-  /** One run of a key: its final (post-AQE) executed plan, the map tasks
-    * and the shuffle records they wrote, the distinct query ids and the
-    * largest rank (at most k) of its (query_id, rank, …) answer. */
-  private case class Executed(plan: String, tasks: Long, records: Long, queries: Long, k: Long)
+  /** One warm call of a key (its memoized models built by a first call):
+    * its final executed plan, the Spark jobs its batch verb ran (the
+    * call's jobs less the one its parquet read infers the schema with),
+    * the shuffle records they wrote, and its (query_id, rank, id, dist)
+    * answer. */
+  private case class Executed(plan: String, jobs: Long, records: Long,
+      rows: Seq[org.apache.spark.sql.Row])
 
   private lazy val executed: Map[String, Executed] = fusedBatchKeys.map { name =>
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val df = SparkEntry.queries(name)(spark, sf)
-    val tasks = new java.util.concurrent.atomic.AtomicLong
+    SparkEntry.queries(name)(spark, sf).collect()
     val records = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskType == "ShuffleMapTask") {
-        tasks.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
     }
-    val rows = listening(listener, tasks.get() * 1000003 + records.get())(df.collect())
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(p.contains("isFinalPlan=true"), s"$name did not run adaptively:\n$p")
-    name -> Executed(p, tasks.get(), records.get(), rows.map(_.get(0)).distinct.length.toLong,
-      rows.map(_.getLong(1)).foldLeft(0L)(math.max))
+    val ((df, rows), jobs) = listening(listener, records.get())(jobsOf {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty, s"$name answered nothing")
+      (df, rows)
+    })
+    val readJobs = jobsOf(graft.queries.table(spark, sf, "embeddings"))._2
+    name -> Executed(df.queryExecution.executedPlan.toString, jobs - readJobs, records.get(), rows)
   }.toMap
 
-  test("fused batch kNN keys: one shuffle of at most k pairs per query per task, no join") {
+  test("fused batch kNN keys: a local answer, no shuffle, 2 jobs (3 for IVF-PQ)") {
     for (name <- fusedBatchKeys) {
-      val Executed(p, tasks, records, queries, k) = executed(name)
-      assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, s"$name: want one shuffle:\n$p")
-      assert(p.contains("topk_nearest("), s"$name must rank with the top-k aggregate:\n$p")
-      for (op <- Seq("BroadcastNestedLoopJoin", "CartesianProduct", "Window"))
+      val Executed(p, jobs, records, _) = executed(name)
+      assert(p.trim.startsWith("LocalTableScan"), s"$name must answer a local relation:\n$p")
+      for (op <- Seq("Exchange", "Join", "Window", "round("))
         assert(!p.contains(op), s"$name plans a $op:\n$p")
-      assert(queries > 0 && tasks > 0, s"$name: $queries queries over $tasks map tasks")
-      assert(records <= tasks * queries * k,
-        s"$name shuffled $records records from $tasks tasks for $queries queries, k = $k")
+      assert(jobs === (if (name == "ivfpq_knn_batch") 3 else 2), s"$name ran $jobs jobs")
+      assert(records === 0, s"$name wrote $records shuffle records")
     }
   }
 
-  test("batch kNN partial-aggregates the bounded heap before its single shuffle") {
-    val p = executed("knn_batch_100").plan
-    assert(p.contains("ObjectHashAggregate"), "the top-k must run as a partial-aggregable aggregate")
-    assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, s"want one shuffle, got:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      s"the query set must not be joined against the table:\n$p")
+  test("batch kNN merges each task's bounded top-k runs on the driver, no join") {
+    // the query set is scored inside the corpus scan, not joined against
+    // it, and each query's answer is a nearest-first run of at most k
+    val Executed(p, _, _, rows) = executed("knn_batch_100")
+    for (op <- Seq("BroadcastNestedLoopJoin", "CartesianProduct", "ObjectHashAggregate"))
+      assert(!p.contains(op), s"knn_batch_100 plans a $op:\n$p")
+    val byQuery = rows.groupBy(_.get(0))
+    assert(byQuery.size === 100, s"want 100 queries answered, got ${byQuery.size}")
+    for ((q, run) <- byQuery) {
+      val ranked = run.sortBy(_.getLong(1))
+      assert(ranked.map(_.getLong(1)) === (1L to ranked.size.toLong), s"query $q: ranks not 1..n")
+      assert(ranked.size <= 10, s"query $q answered ${ranked.size} > k rows")
+      assert(ranked.map(_.getLong(2)).distinct.size === ranked.size, s"query $q repeats an id")
+      val dists = ranked.map(_.getDouble(3))
+      assert(dists === dists.sorted, s"query $q is not nearest-first: $dists")
+    }
   }
 
-  test("LSH batch kNN shuffles once: the top-k aggregate drops repeated pairs, no dedup exchange") {
-    // executed (post-AQE) plan: the one shuffle of the partial top-k; the
-    // (query, id) dedup this replaced was a second hash exchange, and the
-    // bucket equi-join after it a broadcast
-    val p = executed("lsh_knn_batch").plan
-    assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, s"want one shuffle, got:\n$p")
-    assert(!p.contains("BroadcastExchange") && !p.contains("Generate explode"),
-      s"LSH buckets must not be exploded and joined:\n$p")
+  test("LSH batch kNN: no bucket explode or join, each (query, id) pair once") {
+    // the buckets are probed inside the scan, so a corpus row that shares
+    // several tables' buckets with a query is still one candidate
+    val Executed(p, _, _, rows) = executed("lsh_knn_batch")
+    for (op <- Seq("Exchange", "Generate explode", "Join"))
+      assert(!p.contains(op), s"lsh_knn_batch plans a $op:\n$p")
+    val pairs = rows.map(r => (r.get(0), r.getLong(2)))
+    assert(pairs.distinct.size === pairs.size, s"a (query, id) pair repeats: $pairs")
+    assert(rows.forall(r => r.getLong(1) >= 1 && r.getLong(1) <= 5), "ranks must lie in 1..k")
   }
 
   test("no batch kNN plan rounds the distance through Spark's round") {
-    // the fused keys freeze their distances with the round6 kernel inside
-    // the scan, so no rounding expression is left in their plans
-    for (name <- fusedBatchKeys :+ "ivfpq_knn_batch") {
-      val p = plan(name)
-      if (name == "ivfpq_knn_batch")
-        assert(p.contains("round6("), s"$name must freeze its distances with round6:\n${p.take(1200)}")
-      assert(!p.contains("round("), s"$name rounds through Spark's round:\n${p.take(1200)}")
-      assert(p.contains("topk_nearest("), s"$name must rank with the top-k aggregate")
+    // every batch key freezes its distances with the round6 kernel inside
+    // its scan, so no rounding expression is left in their plans
+    for (name <- fusedBatchKeys) {
+      val p = executed(name).plan
+      assert(!p.contains("round(") && !p.contains("round6("), s"$name rounds in its plan:\n$p")
     }
   }
 
   test("ivf_knn_batch: no probe window, per-query top-k partial-aggregated") {
+    // probes are ranked on the driver, and each task's per-query runs are
+    // the partial aggregates the driver merges
     val p = executed("ivf_knn_batch").plan
     assert(!p.contains("Window"), s"probes must be ranked on the driver, not by a window:\n$p")
-    assert(p.contains("ObjectHashAggregate"), "per-query top-k must partial-aggregate")
+    assert(p.trim.startsWith("LocalTableScan"), s"the runs must merge on the driver:\n$p")
     assert(!p.contains("CartesianProduct"))
   }
 

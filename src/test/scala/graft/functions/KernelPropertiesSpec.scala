@@ -6,7 +6,7 @@ import graft.pipeline.Dedup
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -91,28 +91,6 @@ class KernelPropertiesSpec extends SparkSpec {
     assert(js(2) > 0.0 && js(2) < 1.0)
   }
 
-  test("AdcLookupExpr (column tables) is bit-identical to AdcExpr (literal tables)") {
-    // the single-query and batch IVF-ADC paths score through two codegen
-    // kernels; same (codes, tables) must yield the same double, bit for bit
-    val rnd = new scala.util.Random(33)
-    val m = 4; val codebook = 16
-    val tables = Array.fill(m, codebook)(rnd.nextDouble() * 10)
-    val rows = (1 to 50).map(i => (i.toLong, Seq.fill(m)(rnd.nextInt(codebook))))
-    val df = rows.toDF("id", "codes")
-    val tablesLit = typedLit(tables.map(_.toSeq).toSeq)
-    val out = df.select(
-        col("id"),
-        graft.functions.AdcExpr(col("codes"), tables).as("lit_adc"),
-        graft.functions.AdcLookupExpr(col("codes"), tablesLit).as("col_adc"))
-      .collect()
-    out.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(1)) ===
-        java.lang.Double.doubleToLongBits(r.getDouble(2)),
-        s"kernels diverged for id ${r.getLong(0)}")
-    }
-    assert(out.length === 50)
-  }
-
   test("NearestCentroidExpr matches a driver replay: micro freeze, argmin, lower-id ties") {
     def micro(x: Float): Long = math.floor(x.toDouble * 1e6 + 0.5).toLong
     for (_ <- 1 to 20) {
@@ -179,7 +157,6 @@ class KernelPropertiesSpec extends SparkSpec {
     val centers = Array.fill(9)(floats(dim))
     val micro = Array.fill(5)(Array.fill(dim)(NearestCentroid.micro(rnd.nextFloat() * 4 - 2)))
     val tables = Array.fill(6, 16)(rnd.nextDouble() * 10)
-    val tablesCol = new GenericArrayData(tables.map(t => ArrayData.toArrayData(t): Any))
     def codes() = ArrayData.toArrayData(Array.fill(4 + rnd.nextInt(4))(rnd.nextInt(16)))
     val lsh = LshParams(dim, tableCount = 5, hashFunctionCount = 7, seed = 3)
 
@@ -201,15 +178,13 @@ class KernelPropertiesSpec extends SparkSpec {
         rows(40)(Seq(lArr(1 + rnd.nextInt(3)), lArr(1 + rnd.nextInt(3))))),
       ("argmin_dist", ArgMinDistExpr(in(0, FA), centers), rows(40)(Seq(fArr()))),
       ("adc_dist", AdcExpr(in(0, IA), tables), rows(40)(Seq(codes()))),
-      ("adc_lookup", AdcLookupExpr(in(0, IA), in(1, ArrayType(DA))),
-        rows(40)(Seq(codes(), tablesCol))),
       ("nearest_centroid", NearestCentroidExpr(in(0, FA), micro), rows(40)(Seq(fArr()))),
       ("centroid_dist2", CentroidDist2Expr(in(0, FA), in(1, IntegerType),
         Array(2, 3, 5, 8, 13), micro), rows(40)(Seq(fArr(), Seq(2, 3, 5, 8, 13, 4)(rnd.nextInt(6))))),
       ("minhash_sig", MinHashSigExpr(in(0, LA), 16), rows(40)(Seq(lArr(rnd.nextInt(30))))),
       ("simhash", SimHashExpr(in(0, LA)), rows(40)(Seq(lArr(rnd.nextInt(30))))))
-    // the 13 expression classes, each in every element-type variant
-    assert(cases.map(_._2.getClass).distinct.size === 13)
+    // the 12 expression classes, each in every element-type variant
+    assert(cases.map(_._2.getClass).distinct.size === 12)
 
     def bits(v: Any, t: DataType): Any = (v, t) match {
       case (null, _) => null

@@ -1,11 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.BoundReference
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 class KnnSpec extends SparkSpec {
@@ -61,48 +57,47 @@ class KnnSpec extends SparkSpec {
     assert(dists === dists.sorted)
   }
 
-  // the aggregate on its own: bound to (dist DOUBLE, id) input rows
-  private def topk(k: Int, idType: DataType = LongType) =
-    TopKNearest(BoundReference(0, DoubleType, nullable = true),
-      BoundReference(1, idType, nullable = true), k)
-  private def fold(agg: TopKNearest, rows: Seq[(Any, Any)]): NearestRun =
-    rows.foldLeft(agg.createAggregationBuffer())((b, r) => agg.update(b, InternalRow(r._1, r._2)))
-  private def pairs(agg: TopKNearest, run: NearestRun): Seq[(Double, Any)] = {
-    val out = agg.eval(run).asInstanceOf[ArrayData]
-    (0 until out.numElements()).map { i =>
-      val r = out.getStruct(i, 2)
-      (r.getDouble(0), if (r.isNullAt(1)) null else r.get(1, agg.id.dataType))
+  // The `TopKNearest` tests keep the names they had when `NearestRun` was
+  // that aggregate's buffer; they now test the run on its own, as the
+  // batch scan uses it (offers of (dist, id) pairs, long or string ids,
+  // from a capacity of one so every run grows, and merges), or the verbs.
+  private def run(k: Int, ps: Seq[(Double, Any)], strings: Boolean = false): NearestRun = {
+    val r = new NearestRun(k, strings, 1)
+    ps.foreach { case (d, id) =>
+      if (strings) r.offer(d, 0L, Option(id).map(i => UTF8String.fromString(i.toString)).orNull)
+      else r.offer(d, id.asInstanceOf[Long], null)
     }
+    r
   }
+  private def pairs(r: NearestRun): Seq[(Double, Any)] =
+    (0 until r.n).map(i => (r.dist(i), Option(r.idAt(i)).map {
+      case s: UTF8String => s.toString
+      case l => l
+    }.orNull))
 
   test("TopKNearest keeps the k smallest with (dist,id) tie-break") {
-    val agg = topk(3)
-    val res = fold(agg, Seq((2.0, 1L), (1.0, 2L), (3.0, 3L), (1.0, 1L), (0.5, 9L)))
-    assert(pairs(agg, res) === Seq((0.5, 9L), (1.0, 1L), (1.0, 2L)))
-    val merged = agg.merge(res, fold(agg, Seq((0.1, 7L))))
-    assert(pairs(agg, merged) === Seq((0.1, 7L), (0.5, 9L), (1.0, 1L)))
+    val res = run(3, Seq((2.0, 1L), (1.0, 2L), (3.0, 3L), (1.0, 1L), (0.5, 9L)))
+    assert(pairs(res) === Seq((0.5, 9L), (1.0, 1L), (1.0, 2L)))
+    assert(pairs(res.merge(run(3, Seq((0.1, 7L))))) === Seq((0.1, 7L), (0.5, 9L), (1.0, 1L)))
   }
 
   test("TopKNearest: ties at the k boundary break on id, in update and in merge") {
-    val agg = topk(2)
-    val rows = Seq((1.0, 5L), (1.0, 3L), (1.0, 4L), (0.5, 9L), (1.0, 2L))
-    assert(pairs(agg, fold(agg, rows)) === Seq((0.5, 9L), (1.0, 2L)))
-    // every split of the rows into two partial buffers merges to the same run
-    for (cut <- 0 to rows.size) {
-      val (l, r) = rows.splitAt(cut)
-      assert(pairs(agg, agg.merge(fold(agg, l), fold(agg, r))) === Seq((0.5, 9L), (1.0, 2L)))
-      assert(pairs(agg, agg.merge(fold(agg, r), fold(agg, l))) === Seq((0.5, 9L), (1.0, 2L)))
+    val ps = Seq((1.0, 5L), (1.0, 3L), (1.0, 4L), (0.5, 9L), (1.0, 2L))
+    assert(pairs(run(2, ps)) === Seq((0.5, 9L), (1.0, 2L)))
+    // every split of the pairs into two runs merges to the same run
+    for (cut <- 0 to ps.size) {
+      val (l, r) = ps.splitAt(cut)
+      assert(pairs(run(2, l).merge(run(2, r))) === Seq((0.5, 9L), (1.0, 2L)))
+      assert(pairs(run(2, r).merge(run(2, l))) === Seq((0.5, 9L), (1.0, 2L)))
     }
     // Double.compare order: -0.0 sorts before 0.0, NaN after +Inf
-    val agg4 = topk(4)
-    val odd = fold(agg4, Seq((Double.NaN, 1L), (0.0, 2L), (-0.0, 3L), (Double.PositiveInfinity, 4L)))
-    assert(pairs(agg4, odd).map(p => java.lang.Double.doubleToRawLongBits(p._1)) ===
+    val odd = run(4, Seq((Double.NaN, 1L), (0.0, 2L), (-0.0, 3L), (Double.PositiveInfinity, 4L)))
+    assert(pairs(odd).map(p => java.lang.Double.doubleToRawLongBits(p._1)) ===
       Seq(-0.0, 0.0, Double.PositiveInfinity, Double.NaN).map(java.lang.Double.doubleToRawLongBits))
   }
 
   test("TopKNearest: k larger than the candidate count keeps every candidate") {
-    val agg = topk(10)
-    assert(pairs(agg, fold(agg, Seq((3.0, 1L), (1.0, 2L), (2.0, 3L)))) ===
+    assert(pairs(run(10, Seq((3.0, 1L), (1.0, 2L), (2.0, 3L)))) ===
       Seq((1.0, 2L), (2.0, 3L), (3.0, 1L)))
     val df = plane5.toDF("id", "values")
     val queries = Seq((10L, Array(0.5f, 0.5f))).toDF("query_id", "qv")
@@ -113,69 +108,78 @@ class KnnSpec extends SparkSpec {
   }
 
   test("TopKNearest: an exact repeat is kept once, within a buffer and across merged buffers") {
-    val agg = topk(3)
-    val a = fold(agg, Seq((1.0, 5L), (1.0, 5L), (2.0, 6L)))
-    assert(pairs(agg, a) === Seq((1.0, 5L), (2.0, 6L)))
-    val b = fold(agg, Seq((1.0, 5L), (2.0, 7L), (0.5, 8L)))
-    val merged = agg.merge(a, b)
-    assert(pairs(agg, merged) === Seq((0.5, 8L), (1.0, 5L), (2.0, 6L)))
-    // the serialized form round-trips, and a repeat across the wire still merges once
-    val back = agg.deserialize(agg.serialize(b))
-    assert(pairs(agg, back) === pairs(agg, b))
-    assert(pairs(agg, agg.merge(back, a)) === pairs(agg, merged))
+    val a = run(3, Seq((1.0, 5L), (1.0, 5L), (2.0, 6L)))
+    assert(pairs(a) === Seq((1.0, 5L), (2.0, 6L)))
+    val b = run(3, Seq((1.0, 5L), (2.0, 7L), (0.5, 8L)))
+    val merged = a.merge(b)
+    assert(pairs(merged) === Seq((0.5, 8L), (1.0, 5L), (2.0, 6L)))
+    // a run survives Java serialization (a treeAggregate level ships it),
+    // a NaN with its raw bits, and a repeat across the wire still merges once
+    def roundTrip(r: NearestRun): NearestRun = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(r); out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[NearestRun]
+    }
+    val back = roundTrip(b)
+    assert(pairs(back) === pairs(b))
+    assert(pairs(back.merge(a)) === pairs(merged))
+    val negativeNaN = java.lang.Double.longBitsToDouble(0xfff8000000000000L)
+    val nan = roundTrip(run(2, Seq((negativeNaN, 1L)), strings = true))
+    assert(java.lang.Double.doubleToRawLongBits(nan.dist(0)) === 0xfff8000000000000L)
+    assert(nan.idAt(0).toString === "1")
   }
 
   test("TopKNearest: an exact (dist, id) repeat split across partitions comes out once") {
-    import org.apache.spark.sql.Row
-    val schema = StructType(Seq(StructField("q", LongType), StructField("id", LongType),
-      StructField("dist", DoubleType)))
-    // one row per partition: each partial buffer holds the repeat
-    val rows = Seq(Row(1L, 5L, 1.0), Row(1L, 5L, 1.0), Row(1L, 6L, 2.0), Row(1L, 5L, 1.0))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, rows.size), schema)
-    val got = Knn.batchOver(df, "id", "q", 3).orderBy("rank").collect()
+    // the same (id, vector) row in three partitions: each task run holds
+    // the repeat, and the merged answer ranks it once
+    val rows = Seq((5L, Array(1f, 0f)), (5L, Array(1f, 0f)), (6L, Array(2f, 0f)), (5L, Array(1f, 0f)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, rows.size)).toDF("id", "values")
+    val queries = Seq((1L, Array(0f, 0f))).toDF("q", "qv")
+    val got = Knn.batch(df, "id", "values", queries, "q", "qv", 3).orderBy("rank").collect()
     assert(got.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq ===
       Seq((1L, 5L, 1.0), (2L, 6L, 2.0)))
   }
 
   test("TopKNearest: string ids and long ids rank as a sort-based top-k over distinct pairs") {
-    import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(11)
-    // few distinct dists and ids: many ties and exact repeats per query
-    val rows = Seq.fill(3000)((rnd.nextInt(20).toLong, rnd.nextInt(40).toLong, rnd.nextInt(12) / 4.0))
-    val longs = rows.toDF("q", "id", "dist").repartition(7)
-    val strings = longs.withColumn("id", format_string("id-%03d", col("id")))
-    for ((df, k) <- Seq((longs, 1), (longs, 5), (strings, 5), (strings, 60))) {
-      val want = df.distinct()
-        .withColumn("rank", row_number().over(Window.partitionBy("q").orderBy("dist", "id")))
-        .filter(col("rank") <= k)
-        .select(col("q"), col("rank").cast("long"), col("id"), col("dist"))
-        .orderBy("q", "rank").collect().toSeq
-      val got = Knn.batchOver(df, "id", "q", k).orderBy("q", "rank").collect().toSeq
-      assert(got === want, s"k=$k ${df.schema("id").dataType}")
+    // few distinct dists and ids: many ties and exact repeats per query,
+    // offered to 7 runs and merged
+    val ps = Seq.fill(3000)((rnd.nextInt(12) / 4.0, rnd.nextInt(40).toLong))
+    for ((strings, k) <- Seq((false, 1), (false, 5), (true, 5), (true, 60))) {
+      val in = if (strings) ps.map { case (d, i) => (d, f"id-$i%03d": Any) } else ps
+      val want = in.distinct.sortBy { case (d, i) => (d, i.toString.length, i.toString) }.take(k)
+      val runs = in.grouped(in.size / 7 + 1).map(run(k, _, strings)).toSeq
+      assert(runs.size === 7)
+      assert(pairs(runs.reduce(_.merge(_))) === want, s"k=$k strings=$strings")
     }
   }
 
   test("TopKNearest: null dist and null ids read as the typed aggregate read them") {
-    // the typed Aggregator decoded a null dist as 0.0 and a null integral
-    // id as 0; a null string id stayed null (and now sorts before the
-    // other ids at its dist)
-    val a = Seq((1L, Option(1.0), Option(1L)), (1L, None, Option(2L)), (1L, Option(0.5), Option(3L)))
-      .toDF("q", "dist", "id")
-    assert(Knn.batchOver(a, "id", "q", 2).orderBy("rank").collect()
+    // the scan's null rules, as the aggregate these verbs once ranked
+    // with read them: a null dist is 0.0, a null integral id 0, and a null
+    // string id stays null (sorting before the other ids at its dist)
+    val q = Seq((1L, Array(0f, 0f))).toDF("q", "qv")
+    val a = Seq((Option(1L), Array(1f, 0f)), (Option(2L), null), (Option(3L), Array(0.5f, 0f)))
+      .toDF("id", "values")
+    assert(Knn.batch(a, "id", "values", q, "q", "qv", 2).orderBy("rank").collect()
       .map(r => (r.getLong(2), r.getDouble(3))).toSeq === Seq((2L, 0.0), (3L, 0.5)))
-    val b = Seq((1L, Option(1.0), Option(1L)), (1L, Option(2.0), None), (1L, Option(0.5), Option(3L)))
-      .toDF("q", "dist", "id")
-    assert(Knn.batchOver(b, "id", "q", 3).orderBy("rank").collect()
+    val b = Seq((Option(1L), Array(1f, 0f)), (None, Array(2f, 0f)), (Option(3L), Array(0.5f, 0f)))
+      .toDF("id", "values")
+    assert(Knn.batch(b, "id", "values", q, "q", "qv", 3).orderBy("rank").collect()
       .map(r => (r.getLong(2), r.getDouble(3))).toSeq === Seq((3L, 0.5), (1L, 1.0), (0L, 2.0)))
-    val c = Seq((1L, Option(1.0), Option("a")), (1L, Option(2.0), None), (1L, Option(0.5), Option("c")),
-        (2L, Option.empty[Double], Option("b")), (2L, Option(1.0), Option("a")))
-      .toDF("q", "dist", "id")
-    assert(Knn.batchOver(c, "id", "q", 3).orderBy("q", "rank").collect()
-      .map(r => (r.getLong(0), r.getString(2), r.getDouble(3))).toSeq ===
-      Seq((1L, "c", 0.5), (1L, "a", 1.0), (1L, null, 2.0), (2L, "b", 0.0), (2L, "a", 1.0)))
-    val agg = topk(3, StringType)
-    val ab = UTF8String.fromString("a")
-    assert(pairs(agg, fold(agg, Seq((2.0, ab), (2.0, null), (2.0, ab), (2.0, null)))) ===
-      Seq((2.0, null), (2.0, ab)))
+    val c = Seq((Option("a"), Array(1f, 0f)), (None, Array(2f, 0f)), (Option("c"), Array(0.5f, 0f)),
+        (Option("b"), null)).toDF("id", "values")
+    assert(Knn.batch(c, "id", "values", q, "q", "qv", 3).orderBy("rank").collect()
+      .map(r => (r.getString(2), r.getDouble(3))).toSeq === Seq(("b", 0.0), ("c", 0.5), ("a", 1.0)))
+    assert(Knn.batch(c, "id", "values", q, "q", "qv", 4).orderBy("rank").collect()
+      .map(r => (r.getString(2), r.getDouble(3))).toSeq.last === ((null, 2.0)))
+    // in the run itself: a null string id sorts first at its dist, once
+    assert(pairs(run(3, Seq((2.0, "a"), (2.0, null), (2.0, "a"), (2.0, null)), strings = true)) ===
+      Seq((2.0, null), (2.0, "a")))
+    assert(pairs(run(3, Seq((1.0, "a"), (2.0, null), (0.5, "c")), strings = true)
+      .merge(run(3, Seq((2.0, null), (0.1, "b")), strings = true))) ===
+      Seq((0.1, "b"), (0.5, "c"), (1.0, "a")))
   }
 }

@@ -189,19 +189,32 @@ class EmbeddingOpsSpec extends SparkSpec {
     assert(plan.contains("*("), s"whole-stage codegen fell out of the plan:\n$plan")
   }
 
-  test("hard negatives: the heap is partial-aggregable (one bounded shuffle)") {
+  test("hard negatives: a local answer, no shuffle, no join") {
     val corpus = frame((0 until 64).map(i =>
       Array(math.cos(i * 0.1).toFloat, math.sin(i * 0.1).toFloat)))
     val anchors = corpus.filter(col("vec_id") < 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val df = EmbeddingOps.hardNegatives(corpus, "vec_id", "embedding",
-      anchors, "query_id", "qv", k = 4, minDist = 0.05)
+    val (df, jobs) = jobsOf(EmbeddingOps.hardNegatives(corpus, "vec_id", "embedding",
+      anchors, "query_id", "qv", k = 4, minDist = 0.05))
     val plan = df.queryExecution.executedPlan.toString
-    // the fused scan broadcasts the anchors itself (no join, no shuffle of
-    // the corpus side); partial agg before the single exchange on query_id
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
-    assert(plan.contains("partial_topk_nearest("), plan)
+    // the fused scan broadcasts the anchors itself and merges the per-task
+    // runs on the driver: one job collects the anchors, one scans
+    assert(jobs === 2, plan)
+    assert(plan.trim.startsWith("LocalTableScan") && !plan.contains("Exchange"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
     assert(df.collect().length == 8)
+  }
+
+  test("hard negatives: a zero-norm vector has no cosine hard negatives") {
+    // cosine_distance of a zero-norm vector is NaN, which SQL's order
+    // puts above every band; a NaN is no hard negative on either side
+    val corpus = frame(Seq(Array(0f, 0f), Array(1f, 0f), Array(0f, 1f), Array(1f, 1f)))
+    val anchors = frame(Seq(Array(0f, 0f), Array(1f, 0.1f)))
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val got = EmbeddingOps.hardNegatives(corpus, "vec_id", "embedding",
+      anchors, "query_id", "qv", k = 4, minDist = 0.001).collect()
+    assert(!got.exists(_.getLong(0) == 0L), "the zero-norm query got hard negatives")
+    assert(got.forall(r => !r.getDouble(3).isNaN))
+    assert(got.map(_.getLong(2)).toSet === Set(1L, 2L, 3L), "the zero-norm corpus row is not a negative")
   }
 }
