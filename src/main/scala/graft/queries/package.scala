@@ -1,14 +1,23 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 package object queries {
   /** A driver-runnable query: (session, sf-dir) → result. */
   type Q = (SparkSession, String) => DataFrame
 
-  /** Load one of the driver-provided parquet tables. */
-  def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Each table's parquet schema, inferred once per session and dir: a
+    * plain `read.parquet` runs a footer-merge job on every call. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+  /** Load one of the driver-provided parquet tables. Its files are listed
+    * on every call; its schema is inferred once per session. */
+  def table(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    s.read.schema(schemas.computeIfAbsent(s"${sessionKey(s, dir)}|$name",
+      _ => s.read.parquet(path).schema)).parquet(path)
+  }
 
   /** Cache key for memoized Spark-resident artifacts (checkpointed
     * frames, persisted index RDDs): scoped to the owning SparkContext so

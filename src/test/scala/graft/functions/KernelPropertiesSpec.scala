@@ -113,6 +113,56 @@ class KernelPropertiesSpec extends SparkSpec {
     }
   }
 
+  test("ArgMinDist: argmin is the full-scan argmin (ties to the lower id); sqDistBelow stops only at its bound") {
+    val rnd = new scala.util.Random(12)
+    val specials = Array(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f)
+    // quarter steps in [-3, 3]: distances often tie exactly
+    def vec(n: Int, special: Double): Array[Float] = Array.fill(n)(
+      if (rnd.nextDouble() < special) specials(rnd.nextInt(specials.length))
+      else (rnd.nextInt(25) - 12) / 4f)
+    /** Every distance summed in full; the first of the smallest wins. */
+    def fullScan(v: Array[Float], centers: Array[Array[Float]]): (Int, Boolean) = {
+      val ds = centers.map { c =>
+        var s = 0.0
+        for (i <- 0 until math.min(v.length, c.length)) { val d = v(i).toDouble - c(i); s += d * d }
+        s
+      }
+      var best = 0; var bestD = Double.PositiveInfinity
+      for (c <- ds.indices) if (ds(c) < bestD) { bestD = ds(c); best = c }
+      (best, ds.count(_ == bestD) > 1)
+    }
+    var ties = 0; var stopped = 0
+    for (trial <- 1 to 3000) {
+      val dim = 1 + rnd.nextInt(12)
+      val special = if (trial % 4 == 0) 0.15 else 0.0
+      // centres of the table's width or, every third trial, of mixed widths
+      val centers = Array.fill(1 + rnd.nextInt(24))(
+        vec(if (trial % 3 == 0) 1 + rnd.nextInt(12) else dim, special))
+      // planted exact ties: a later centre repeats an earlier one
+      if (centers.length > 2 && trial % 2 == 0)
+        centers(centers.length - 1) = centers(rnd.nextInt(centers.length - 1)).clone()
+      // vectors shorter than, as long as and longer than the centres
+      val v = vec(math.max(0, dim - 3 + rnd.nextInt(7)), special)
+      val (want, tied) = fullScan(v, centers)
+      if (tied) ties += 1
+      assert(ArgMinDist.argmin(v, centers) === want, s"trial $trial")
+      assert(ArgMinDist.compute(ArrayData.toArrayData(v), centers) === want, s"trial $trial")
+      // the bounded fold: the full sum below the bound, else the full sum
+      // or a partial sum at or above the bound; a NaN bound never stops it
+      val c = centers(0)
+      val full = ArgMinDist.sqDist(ArrayData.toArrayData(v), c)
+      assert(ArgMinDist.sqDistBelow(v, c, Double.NaN).equals(full), s"trial $trial")
+      for (bound <- Seq(0.0, full / 2, full, full * 2, Double.PositiveInfinity)) {
+        val got = ArgMinDist.sqDistBelow(v, c, bound)
+        if (!got.equals(full)) stopped += 1
+        assert(if (full < bound) got.equals(full) else got.equals(full) || got >= bound,
+          s"trial $trial, bound $bound: $got of $full")
+      }
+    }
+    assert(ties > 300, s"only $ties trials had a tied minimum")
+    assert(stopped > 300, s"only $stopped bounded folds stopped early")
+  }
+
   test("CentroidDist2Expr matches the driver residual, including a missing label -> -1") {
     def micro(x: Float): Long = math.floor(x.toDouble * 1e6 + 0.5).toLong
     for (_ <- 1 to 20) {
